@@ -9,7 +9,8 @@ laminlabs/modlyn (reference surveyed in SURVEY.md), re-expressed Spark-first:
 - ``sources``    — deterministic synthetic image+caption tables, parquet helpers,
                    checkpoint manifests with per-partition lineage.
 - ``scoring``    — per-class per-feature mean/variance, F-statistic, mini-batch
-                   logistic regression as partition-parallel tree aggregation
+                   logistic regression over per-batch cached blocks, one
+                   single-task job per step
                    (reference: modlyn/models/_simple_logreg_model.py).
 - ``eval``       — top-N feature-set Jaccard comparison
                    (reference: modlyn/eval/_jaccard.py).

@@ -74,40 +74,51 @@ class SimpleLogReg:
         self.val_metrics: list[dict] = []
 
     def _encode_labels(self, df: DataFrame) -> DataFrame:
+        return self._encode_and_count(df)[0]
+
+    def _encode_and_count(self, df: DataFrame) -> tuple[DataFrame, int]:
         """Encode ``label_column`` against the MODEL's class axis
         (self.classes, fixed at construction) — re-running label_encode on
         an arbitrary frame would silently misalign indices whenever that
-        frame holds a subset of the classes. Unseen labels raise."""
+        frame holds a subset of the classes. Unseen labels raise.
+
+        Returns (encoded frame, row count): ONE eager aggregate counts the
+        rows and the non-null labels that found no class index; only when
+        the latter is non-zero does a bounded listing of the offenders run
+        (distinct labels anti-joined with the broadcast class list, at most
+        20 back — bounded even if a caller passes a near-unique column as
+        the label by mistake)."""
         from pyspark.sql import functions as F
 
         idx_col = f"{self.label_column}_idx"
-        # eager unseen-label check, driver-safe: distinct labels anti-join
-        # the (broadcast) class list and at most 20 offenders come back —
-        # bounded even if a caller passes a near-unique column as the
-        # label by mistake (a bare distinct().collect() would ship it all)
-        classes_df = df.sparkSession.createDataFrame(
-            [(c,) for c in self.classes], [self.label_column]
+        mapping = F.create_map(
+            *[x for i, c in enumerate(self.classes) for x in (F.lit(c), F.lit(i))]
         )
-        unseen = sorted(
-            r[0]
-            for r in (
-                df.select(self.label_column)
-                .where(F.col(self.label_column).isNotNull())
-                .distinct()
-                .join(F.broadcast(classes_df), self.label_column, "left_anti")
-                .limit(20)
-                .collect()
+        enc = df.withColumn(idx_col, mapping[F.col(self.label_column)])
+        unseen_row = F.col(self.label_column).isNotNull() & F.col(idx_col).isNull()
+        n_rows, n_unseen = enc.agg(
+            F.count(F.lit(1)), F.count(F.when(unseen_row, F.lit(1)))
+        ).first()
+        if n_unseen:
+            classes_df = df.sparkSession.createDataFrame(
+                [(c,) for c in self.classes], [self.label_column]
             )
-        )
-        if unseen:
+            unseen = sorted(
+                r[0]
+                for r in (
+                    df.select(self.label_column)
+                    .where(F.col(self.label_column).isNotNull())
+                    .distinct()
+                    .join(F.broadcast(classes_df), self.label_column, "left_anti")
+                    .limit(20)
+                    .collect()
+                )
+            )
             raise ValueError(
                 f"labels {unseen!r} are absent from the model's "
                 f"classes {self.classes!r}"
             )
-        mapping = F.create_map(
-            *[x for i, c in enumerate(self.classes) for x in (F.lit(c), F.lit(i))]
-        )
-        return df.withColumn(idx_col, mapping[F.col(self.label_column)])
+        return enc, n_rows
 
     def fit(
         self,
@@ -130,7 +141,7 @@ class SimpleLogReg:
         recorded in ``self.val_metrics`` as one dict per epoch.
         """
         self.dataset_type = normalize_dataset_type(dataset_type)
-        enc = self._encode_labels(train_df)
+        enc, n_rows = self._encode_and_count(train_df)
         keys = row_key_cols or [
             c
             for c in train_df.columns
@@ -139,7 +150,6 @@ class SimpleLogReg:
         if not keys:
             raise ValueError("need at least one row-key column for batching")
         if n_batches is None:
-            n_rows = train_df.count()
             n_batches = max(n_rows // max(batch_size_rows_hint, 1), 1)
         enc = assign_batches(enc, keys, n_batches)
         self._val_df = val_df

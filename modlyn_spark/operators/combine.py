@@ -1,8 +1,8 @@
 """Executor-side tree combination of per-partition partial rows.
 
 The shared collect path for the moment/GEMM reductions (PCA covariance,
-k-means centroid sums — same shape as the logreg trainer's gradient
-combine, scoring/logreg.py:_tree_combine): a ``mapInPandas`` pass emits
+k-means centroid sums; the logreg trainers need none — one partial per
+step, scoring/blocks.py): a ``mapInPandas`` pass emits
 ONE wide row per input partition (id ``pid`` + numeric scalars + dense
 ``array`` columns), and the driver needs their elementwise sum.
 

@@ -19,11 +19,11 @@ Two pieces, both built on machinery the engine already owns:
   deployment that does not need cross-engine replay can swap
   ``_portable_slot`` for xxhash and keep every other line.
 - training/scoring: ``scoring/logreg.DistributedLogReg`` unchanged — the
-  treeAggregate Adam trainer the north-star pipeline already gates; the
+  mini-batch Adam trainer the north-star pipeline already gates; the
   classifier is just that trainer pointed at hashed text features.
 
-Scale: featurization is a map stage; training moves k x (dim+1) gradient
-partials per partition through the existing tree combine; scoring is one
+Scale: featurization is a map stage; training moves one k x (dim+1)
+gradient partial per step from the step's single task; scoring is one
 GEMM per Arrow batch. Nothing new shuffles.
 """
 

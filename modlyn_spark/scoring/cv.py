@@ -14,7 +14,9 @@ regularizer:
   in pandas/DuckDB, independent of the batch hash — a shared hash would
   correlate fold membership with batch membership and starve some
   (batch, fold) cells);
-- per step, ONE stacked GEMM computes all F models' logits; model f's
+- per step, in one single-task job over the step's batch block (the
+  per-batch layout shared with the other trainers, scoring/blocks.py),
+  ONE stacked GEMM computes all F models' logits; model f's
   gradient masks out its own fold's rows and normalizes by ITS visible
   row count, so model f's trajectory is exactly a standalone trainer run
   on ``fold != f`` with the same batch assignment (pytest pins allclose
@@ -40,25 +42,32 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import LongType, StructField, StructType
 
 from modlyn_spark.oracle.pandas_oracle import AdamState
+from modlyn_spark.scoring.blocks import BatchBlocks
 
-_CV_PARTIAL_SCHEMA = StructType(
-    [
-        StructField("pid", LongType()),
-        StructField("gw", ArrayType(DoubleType())),  # flattened (F*k, d)
-        StructField("gb", ArrayType(DoubleType())),  # flattened (F, k)
-        StructField("loss_sum", ArrayType(DoubleType())),  # per fold-model
-        StructField("n", ArrayType(LongType())),  # visible rows per model
-    ]
-)
+
+def _cv_grad_sums(Wf: np.ndarray, bf: np.ndarray, nf: int, k: int):
+    """Executor function of one step: a batch block with fold ids ->
+    masked gradient sums of all nf leave-one-fold-out models, plus each
+    model's visible row count."""
+
+    def grad(X: np.ndarray, y: np.ndarray, folds: np.ndarray) -> tuple:
+        m = len(X)
+        logits = (X @ Wf.T + bf).reshape(m, nf, k)
+        logits -= logits.max(axis=2, keepdims=True)
+        e = np.exp(logits)
+        p = e / e.sum(axis=2, keepdims=True)  # (m, nf, k)
+        rows = np.arange(m)
+        # visibility mask: row i contributes to model f iff fold_i != f
+        vis = folds[:, None] != np.arange(nf)[None, :]  # (m, nf)
+        loss_sum = (-np.log(np.clip(p[rows, :, y], 1e-30, None)) * vis).sum(axis=0)
+        p[rows, :, y] -= 1.0
+        p *= vis[:, :, None]
+        return p.reshape(m, nf * k).T @ X, p.sum(axis=0), loss_sum, vis.sum(axis=0)
+
+    return grad
 
 
 def assign_folds(
@@ -138,100 +147,42 @@ class CVLogReg:
         max_epochs: int = 4,
         allow_empty_cells: bool = False,
     ) -> "CVLogReg":
-        data = df.select(features_col, label_idx_col, batch_col, fold_col)
-        if n_batches is None:
-            n_batches = data.agg(F.max(batch_col)).collect()[0][0] + 1
-        data = data.cache()
-
-        fc, lc, fdc = features_col, label_idx_col, fold_col
+        blocks = BatchBlocks(
+            df,
+            n_features=self.d,
+            features_col=features_col,
+            label_idx_col=label_idx_col,
+            batch_col=batch_col,
+            fold_col=fold_col,
+            n_batches=n_batches,
+        )
         k, d, nf = self.k, self.d, self.F
 
-        def grad_partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from pyspark import TaskContext
-
-            pid = TaskContext.get().partitionId()
-            gW = np.zeros((nf * k, d))
-            gb = np.zeros((nf, k))
-            loss_sum = np.zeros(nf)
-            n = np.zeros(nf, dtype=np.int64)
-            Wf, bf = grad_partials.Wf, grad_partials.bf
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                X = np.stack(pdf[fc].to_numpy()).astype(np.float64)
-                y = pdf[lc].to_numpy(dtype=np.int64)
-                folds = pdf[fdc].to_numpy(dtype=np.int64)
-                m = len(X)
-                logits = (X @ Wf.T + bf).reshape(m, nf, k)
-                logits -= logits.max(axis=2, keepdims=True)
-                e = np.exp(logits)
-                p = e / e.sum(axis=2, keepdims=True)  # (m, nf, k)
-                rows = np.arange(m)
-                # visibility mask: row i contributes to model f iff
-                # fold_i != f
-                vis = folds[:, None] != np.arange(nf)[None, :]  # (m, nf)
-                loss_sum += (
-                    -np.log(np.clip(p[rows, :, y], 1e-30, None)) * vis
-                ).sum(axis=0)
-                p[rows, :, y] -= 1.0
-                p *= vis[:, :, None]
-                gW += p.reshape(m, nf * k).T @ X
-                gb += p.sum(axis=0)
-                n += vis.sum(axis=0)
-            if n.sum():
-                yield pd.DataFrame(
-                    {
-                        "pid": [pid],
-                        "gw": [gW.ravel().tolist()],
-                        "gb": [gb.ravel().tolist()],
-                        "loss_sum": [loss_sum.tolist()],
-                        "n": [n.tolist()],
-                    }
+        def apply(bid: int, part: tuple) -> None:
+            gW, gb, loss, n = part
+            if (n == 0).any() and not allow_empty_cells:
+                empty = np.nonzero(n == 0)[0].tolist()
+                raise ValueError(
+                    f"batch {bid} has no rows visible to fold model(s) "
+                    f"{empty}; standalone-parity breaks — pass "
+                    "allow_empty_cells=True to skip their update"
                 )
+            gW3 = gW.reshape(nf, k, d)
+            for fi in range(nf):
+                if n[fi] == 0:
+                    continue  # documented skip under allow_empty_cells
+                self.W[fi] = self._optW[fi].step(self.W[fi], gW3[fi] / n[fi])
+                self.b[fi] = self._optb[fi].step(self.b[fi], gb[fi] / n[fi])
+                self.losses[fi].append(float(loss[fi] / n[fi]))
 
-        step = 0
-        for _epoch in range(max_epochs):
-            if step >= max_steps:
-                break
-            for bid in range(n_batches):
-                if step >= max_steps:
-                    break
-                batch = data.where(F.col(batch_col) == bid)
-                grad_partials.Wf = self.W.reshape(nf * k, d)
-                grad_partials.bf = self.b.reshape(nf * k)
-                parts = batch.mapInPandas(
-                    grad_partials, schema=_CV_PARTIAL_SCHEMA
-                ).collect()
-                if not parts:
-                    continue
-                parts.sort(key=lambda r: r["pid"])
-                n = np.zeros(nf, dtype=np.int64)
-                gW = np.zeros((nf * k, d))
-                gb = np.zeros((nf, k))
-                loss = np.zeros(nf)
-                for r in parts:
-                    gW += np.asarray(r["gw"]).reshape(nf * k, d)
-                    gb += np.asarray(r["gb"]).reshape(nf, k)
-                    loss += np.asarray(r["loss_sum"])
-                    n += np.asarray(r["n"], dtype=np.int64)
-                if (n == 0).any() and not allow_empty_cells:
-                    empty = np.nonzero(n == 0)[0].tolist()
-                    raise ValueError(
-                        f"batch {bid} has no rows visible to fold model(s) "
-                        f"{empty}; standalone-parity breaks — pass "
-                        "allow_empty_cells=True to skip their update"
-                    )
-                gW3 = gW.reshape(nf, k, d)
-                for fi in range(nf):
-                    if n[fi] == 0:
-                        continue  # documented skip under allow_empty_cells
-                    self.W[fi] = self._optW[fi].step(
-                        self.W[fi], gW3[fi] / n[fi]
-                    )
-                    self.b[fi] = self._optb[fi].step(self.b[fi], gb[fi] / n[fi])
-                    self.losses[fi].append(float(loss[fi] / n[fi]))
-                step += 1
-        data.unpersist()
+        blocks.train(
+            lambda: _cv_grad_sums(
+                self.W.reshape(nf * k, d), self.b.reshape(nf * k), nf, k
+            ),
+            apply,
+            max_steps=max_steps,
+            max_epochs=max_epochs,
+        )
         return self
 
     # -- outputs -------------------------------------------------------------

@@ -12,6 +12,10 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the package root: the directory a worker must have on sys.path to import
+# modlyn_spark (the repository checkout, or site-packages when installed)
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "modlyn-spark",
@@ -66,17 +70,51 @@ def get_spark(
     # of k=v pairs (e.g. SPARK_GRAFT_CONF="spark.sql.shuffle.partitions=2000")
     # — cluster runs parameterize scale-dependent settings here while the
     # local defaults above stay the bench-comparable baseline
+    conf: dict[str, str] = {}
     env_conf = os.environ.get("SPARK_GRAFT_CONF", "")
     for pair in env_conf.split(","):
         if "=" in pair:
             k, _, v = pair.partition("=")
-            builder = builder.config(k.strip(), v.strip())
-    for k, v in (extra or {}).items():
+            conf[k.strip()] = v.strip()
+    conf.update(extra or {})
+    conf.update(_python_worker_conf(master, conf))
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     _warm_python_workers(spark)
     return spark
+
+
+def _python_worker_conf(master: str, conf: dict[str, str]) -> dict[str, str]:
+    """Python worker settings that depend on where the workers run.
+
+    On ``local*`` masters the workers share the driver's file system, so
+    the package root is appended to ``spark.executorEnv.PYTHONPATH``
+    (merged with a value set in ``conf``): workers then import
+    modlyn_spark whatever the driver's working directory or PYTHONPATH.
+    ``spark-submit --py-files`` only reaches a task's ``sys.path``, never
+    the daemon's, so that route cannot serve the daemon module.
+
+    The daemon module (``modlyn_spark._daemon``: pyspark's daemon without
+    the per-task zip archive re-reads) is set on local masters only, the
+    one place every worker is certain to import it. On a cluster the
+    package may reach the nodes through ``--py-files`` or ``--archives``,
+    which the daemon cannot import from, so Spark's default daemon stays;
+    where the package is installed on every node, opt in by setting
+    ``spark.python.daemon.module`` through ``extra`` or
+    ``SPARK_GRAFT_CONF``. An explicit setting in ``conf`` wins.
+    """
+    if not master.startswith("local"):
+        return {}
+    out = {}
+    key = "spark.executorEnv.PYTHONPATH"
+    paths = [p for p in conf.get(key, "").split(os.pathsep) if p]
+    if _PACKAGE_ROOT not in paths:
+        out[key] = os.pathsep.join(paths + [_PACKAGE_ROOT])
+    if "spark.python.daemon.module" not in conf:
+        out["spark.python.daemon.module"] = "modlyn_spark._daemon"
+    return out
 
 
 def _warm_python_workers(spark: SparkSession) -> None:

@@ -73,32 +73,6 @@ def test_cross_method_jaccard_agreement(spark, strong_signal):
         assert (sub["jaccard"] > base[n_top]).all()
 
 
-def test_tree_combine_matches_driver_combine(spark, strong_signal):
-    df = strong_signal
-    classes, enc = label_encode(df, "label")
-    enc = assign_batches(enc, ["row_id"], 3).repartition(8)
-
-    flat = DistributedLogReg(D, classes).fit(
-        enc, max_steps=6, n_batches=3
-    )
-    tree = DistributedLogReg(D, classes).fit(
-        enc, max_steps=6, n_batches=3, tree_depth=2
-    )
-    assert np.allclose(flat.W, tree.W, rtol=1e-9, atol=1e-12)
-    assert np.allclose(flat.losses, tree.losses, rtol=1e-9)
-
-
-def test_cluster_by_batch_identical(spark, strong_signal):
-    df = strong_signal
-    classes, enc = label_encode(df, "label")
-    enc = assign_batches(enc, ["row_id"], 3)
-    a = DistributedLogReg(D, classes).fit(enc, max_steps=6, n_batches=3)
-    b = DistributedLogReg(D, classes).fit(
-        enc, max_steps=6, n_batches=3, cluster_by_batch=True
-    )
-    assert np.allclose(a.W, b.W, rtol=1e-9, atol=1e-12)
-
-
 def test_fstat_marks_signal_features(spark, strong_signal):
     stats = class_feature_stats(strong_signal, "label", "features")
     fs = f_statistic(stats).toPandas()
