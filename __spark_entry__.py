@@ -487,7 +487,6 @@ def q_training_set(spark, sf_dir):
         ],
         on="user_id",
         spine_ts="feature_ts",
-        strategy="fused",
     )
     return out.select(
         "event_id",

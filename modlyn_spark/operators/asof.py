@@ -3,7 +3,8 @@
 For each left row ``(key, left_ts)``, attach the payload of the latest right
 row with ``right.ts <= left_ts`` (strictly ``<`` when
 ``allow_exact_matches=False``) for the same key — never a future row (zero
-temporal leakage).
+temporal leakage). Right rows tied on ``(key, ts)`` are ordered by the
+optional tiebreak columns; the last one wins.
 
 The reference engine (laminlabs/modlyn) has no such operator: it assumes the
 AnnData count matrix is already aligned to its labels positionally
@@ -11,28 +12,35 @@ AnnData count matrix is already aligned to its labels positionally
 is the distributed substrate that produces that alignment from raw
 event-state tables (BASELINE.json north_rule).
 
-Three physical strategies, all pure PySpark:
+Three physical strategies, all pure PySpark, built on two shared kernels:
 
-``union``
-    Single-shuffle, whole-stage-codegen path. Left and right are unioned with
-    a side tag, shuffled once by key, and the right payload is carried
-    forward with ``last(payload, ignorenulls=True)`` over a
-    ``(key) ORDER BY (ts, side)`` running window. Catalyst/Tungsten handle
-    everything; AQE coalesces the shuffle. Best general-purpose plan.
+``union`` — :func:`carry_forward`
+    Single-shuffle, whole-stage-codegen path. The probe side and N state
+    tables are unioned with a side tag and one nullable payload struct per
+    table (non-null exactly on that table's rows, so
+    ``last(..., ignorenulls=True)`` tracks row presence, not field
+    non-nullness), shuffled once by key, and every table's latest state is
+    carried forward by N ``last`` calls sharing one
+    ``(key) ORDER BY (ts, side, tiebreaks)`` running window: one Exchange,
+    one Sort, one Window however many tables. ``asof_join`` calls it with
+    one table; ``training_set.build_training_set`` with N.
 
-``merge``
-    The explicit merge-scan recipe: both sides are co-bucketed by key hash
-    (optionally salted for hot keys), cogrouped, and merged per bucket with a
-    vectorized Arrow UDF running ``pandas.merge_asof``. Hot keys (detected or
-    supplied) are salted: the left side's hot rows are scattered across
-    ``salt_factor`` shards by a hash of their timestamp, and the right side's
-    hot-key history is replicated into every shard, so no single task
-    serializes a skewed entity.
+``merge`` — :func:`_merge_sorted` per cogrouped bucket
+    The explicit merge-scan recipe: both sides are co-bucketed by a hash of
+    the key (optionally salted for hot keys), cogrouped, and merged per
+    bucket with ``pandas.merge_asof``. Hot keys (detected or supplied) are
+    salted: the left side's hot rows are scattered across ``salt_factor``
+    shards by a hash of their timestamp, and the right side's hot-key
+    history is replicated into every shard, so no single task serializes a
+    skewed entity.
 
-``broadcast``
+``broadcast`` — :func:`_merge_sorted` per left Arrow batch
     Zero-shuffle path for a small right side: the right table is collected,
-    sorted once, broadcast to every executor, and each left partition is
-    merged against it with ``mapInPandas``. The left side is never shuffled.
+    sorted once, broadcast to every executor, and each left batch is merged
+    against it with ``mapInPandas``. The left side is never shuffled.
+
+Both pandas paths carry the matched right timestamp internally and apply
+``tolerance`` with the same mask as ``union`` (:func:`_within_tolerance`).
 
 Scale notes (100 TB design point): ``union`` shuffles left+right once on the
 join key — the minimum possible data movement for a sort-based as-of join;
@@ -43,6 +51,7 @@ executor memory bound, guarded by ``broadcast_max_rows``).
 
 from __future__ import annotations
 
+from dataclasses import dataclass, field
 from typing import Iterator
 
 import numpy as np
@@ -55,33 +64,50 @@ _BUCKET = "__asof_bucket"
 _SIDE = "__asof_side"
 _TS = "__asof_ts"
 _RTS = "__asof_right_ts"
+_ORD = "__asof_ord"
 
 
-def _right_payload_cols(
-    right: DataFrame, on: list[str], right_ts: str, right_cols: list[str] | None
-) -> list[str]:
-    if right_cols is not None:
-        return list(right_cols)
-    return [c for c in right.columns if c not in set(on) | {right_ts}]
+@dataclass
+class FeatureSpec:
+    """One feature (state) table to as-of join onto the probe side.
+
+    Args:
+        df: state table (entity history). Must contain the probe key
+            column(s) and ``ts``.
+        ts: state timestamp column.
+        cols: payload columns to attach (default: everything except the
+            key(s) and ``ts``).
+        prefix: prepended to every output payload column (required when two
+            tables share payload names).
+        tolerance: optional max state age (a Column interval); older
+            matches are nulled out, per table.
+        tiebreak: extra columns ordering same-(key, ts) state rows; the
+            last by this ordering wins.
+        matched_ts_col: if set, also emit the matched state timestamp
+            under this name (prefix is NOT applied).
+    """
+
+    df: DataFrame
+    ts: str
+    cols: list[str] | None = None
+    prefix: str = ""
+    tolerance: Column | None = None
+    tiebreak: list[str] = field(default_factory=list)
+    matched_ts_col: str | None = None
+
+    def payload(self, on: list[str]) -> list[str]:
+        if self.cols is not None:
+            return list(self.cols)
+        return [c for c in self.df.columns if c not in set(on) | {self.ts}]
 
 
-def _merged_schema(
-    left: DataFrame,
-    right: DataFrame,
-    payload: list[str],
-    matched_ts_col: str | None,
-    right_ts: str,
-) -> StructType:
-    fields = list(left.schema.fields)
-    right_fields = {f.name: f for f in right.schema.fields}
-    for c in payload:
-        f = right_fields[c]
-        fields.append(StructField(c, f.dataType, nullable=True))
-    if matched_ts_col:
-        fields.append(
-            StructField(matched_ts_col, right_fields[right_ts].dataType, nullable=True)
-        )
-    return StructType(fields)
+def _within_tolerance(
+    value: Column, matched_ts: Column, ts: Column, tolerance: Column | None
+) -> Column:
+    """``value`` where the match is no older than ``ts - tolerance``."""
+    if tolerance is None:
+        return value
+    return F.when(matched_ts >= ts - tolerance, value)
 
 
 def _denanify(pdf: pd.DataFrame, cols: list[str]) -> pd.DataFrame:
@@ -121,19 +147,10 @@ def _estimated_bytes(df: DataFrame) -> int:
 
 
 def _broadcast_threshold(df: DataFrame) -> int:
-    """Same knob Catalyst's broadcast-join selection uses."""
-    v = df.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    v = v.lower().rstrip("b")
-    mult = 1
-    for suffix, m in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30)):
-        if v.endswith(suffix):
-            v, mult = v[:-1], m
-            break
-    try:
-        n = int(v) * mult
-    except ValueError:
-        n = 10 << 20
-    return n if n > 0 else 0  # -1 disables broadcast
+    """Same knob, parsed by Spark itself, that Catalyst's broadcast-join
+    selection uses (-1 disables broadcast)."""
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    return int(conf.autoBroadcastJoinThreshold())
 
 
 def asof_join(
@@ -183,13 +200,18 @@ def asof_join(
         matched_ts_col: if set, also emit the matched right timestamp under
             this name (useful for age features / tolerance audits).
         right_tiebreak: extra right columns ordering ties among right rows with
-            identical (key, ts) — last wins (union strategy only; the merge
-            strategy resolves ties by right-frame order like pandas).
+            identical (key, ts) — the last by this ordering wins.
     """
     on = [on] if isinstance(on, str) else list(on)
-    right_ts = right_ts or left_ts
-    payload = _right_payload_cols(right, on, right_ts, right_cols)
-    _check_no_clash(left, payload, matched_ts_col)
+    spec = FeatureSpec(
+        df=right,
+        ts=right_ts or left_ts,
+        cols=right_cols,
+        tolerance=tolerance,
+        tiebreak=list(right_tiebreak or []),
+        matched_ts_col=matched_ts_col,
+    )
+    _check_no_clash(left, spec.payload(on), matched_ts_col)
 
     if strategy == "auto":
         if hot_keys or hot_key_threshold:
@@ -202,125 +224,227 @@ def asof_join(
             )
 
     if strategy == "union":
-        return _asof_union(
-            left, right, on, left_ts, right_ts, payload,
-            allow_exact_matches, tolerance, matched_ts_col, right_tiebreak,
-        )
+        return carry_forward(left, [spec], on, left_ts, allow_exact_matches)
     if strategy == "merge":
         return _asof_merge(
-            left, right, on, left_ts, right_ts, payload,
-            allow_exact_matches, tolerance, matched_ts_col,
+            left, spec, on, left_ts, allow_exact_matches,
             num_buckets, hot_keys, hot_key_threshold, salt_factor,
         )
     if strategy == "broadcast":
         return _asof_broadcast(
-            left, right, on, left_ts, right_ts, payload,
-            allow_exact_matches, tolerance, matched_ts_col, broadcast_max_rows,
+            left, spec, on, left_ts, allow_exact_matches, broadcast_max_rows
         )
     raise ValueError(f"unknown strategy {strategy!r}")
 
 
 # ---------------------------------------------------------------------------
-# union strategy: one shuffle, window carry-forward, full codegen
+# union strategy: one shuffle, shared-window carry-forward, full codegen
 # ---------------------------------------------------------------------------
 
 
-def _asof_union(
-    left: DataFrame,
-    right: DataFrame,
+def carry_forward(
+    spine: DataFrame,
+    specs: list[FeatureSpec],
     on: list[str],
-    left_ts: str,
-    right_ts: str,
-    payload: list[str],
+    spine_ts: str,
     allow_exact: bool,
-    tolerance: Column | None,
-    matched_ts_col: str | None,
-    right_tiebreak: list[str] | None,
 ) -> DataFrame:
-    left_other = [c for c in left.columns if c not in on]
-    left_types = dict(zip(left.columns, [f.dataType for f in left.schema.fields]))
-    right_types = dict(zip(right.columns, [f.dataType for f in right.schema.fields]))
-    tiebreak = right_tiebreak or []
+    """As-of join every spec onto ``spine`` in one shuffle.
 
-    # right rows must sort before left rows at equal ts for <= semantics,
-    # after them for < semantics.
-    side_right, side_left = (0, 1) if allow_exact else (1, 0)
+    Output: the spine columns in order, then per spec its prefixed payload
+    and (if set) its ``matched_ts_col``. Callers validate names.
+    """
+    spine_other = [c for c in spine.columns if c not in on]
+    spine_types = {f.name: f.dataType for f in spine.schema.fields}
+    # state rows sort before spine rows at equal ts for <= semantics
+    side_state, side_spine = (0, 1) if allow_exact else (1, 0)
 
-    # the right payload rides in ONE struct per right row: the struct is
-    # non-null on every right row even when individual payload fields are
-    # null, so last(..., ignorenulls=True) tracks row presence, not field
-    # non-nullness (a null caption update must not resurrect the previous
-    # caption).
-    from pyspark.sql.types import StructField as _SF, StructType as _ST
+    struct_ts: list[StructType] = []
+    tb_names: list[list[str]] = []
+    for i, s in enumerate(specs):
+        types = {f.name: f.dataType for f in s.df.schema.fields}
+        struct_ts.append(
+            StructType(
+                [StructField(c, types[c], True) for c in s.payload(on)]
+                + [StructField("__rts", types[s.ts], True)]
+            )
+        )
+        tb_names.append([f"__tb{i}_{c}" for c in s.tiebreak])
 
-    payload_struct_t = _ST(
-        [_SF(c, right_types[c], True) for c in payload]
-        + [_SF("__rts", right_types[right_ts], True)]
-    )
-    l_tagged = left.select(
+    def null_structs(except_i: int | None) -> list[Column]:
+        return [
+            F.lit(None).cast(t).alias(f"__r{i}")
+            for i, t in enumerate(struct_ts)
+            if i != except_i
+        ]
+
+    def null_tiebreaks(except_i: int | None) -> list[Column]:
+        cols: list[Column] = []
+        for i, s in enumerate(specs):
+            if i == except_i:
+                continue
+            types = {f.name: f.dataType for f in s.df.schema.fields}
+            cols += [
+                F.lit(None).cast(types[c]).alias(n)
+                for c, n in zip(s.tiebreak, tb_names[i])
+            ]
+        return cols
+
+    tagged = spine.select(
         *[F.col(c) for c in on],
-        F.col(left_ts).alias(_TS),
-        F.lit(side_left).alias(_SIDE),
-        *[F.col(c) for c in left_other],
-        F.lit(None).cast(payload_struct_t).alias("__r_struct"),
-        *[F.lit(None).cast(right_types[c]).alias(f"__tb_{c}") for c in tiebreak],
+        F.col(spine_ts).alias(_TS),
+        F.lit(side_spine).alias(_SIDE),
+        *[F.col(c) for c in spine_other],
+        *null_structs(None),
+        *null_tiebreaks(None),
     )
-    r_tagged = right.select(
-        *[F.col(c) for c in on],
-        F.col(right_ts).alias(_TS),
-        F.lit(side_right).alias(_SIDE),
-        *[F.lit(None).cast(left_types[c]).alias(c) for c in left_other],
-        F.struct(
-            *[F.col(c) for c in payload], F.col(right_ts).alias("__rts")
-        ).alias("__r_struct"),
-        *[F.col(c).alias(f"__tb_{c}") for c in tiebreak],
-    )
+    parts = [tagged]
+    for i, s in enumerate(specs):
+        parts.append(
+            s.df.select(
+                *[F.col(c) for c in on],
+                F.col(s.ts).alias(_TS),
+                F.lit(side_state).alias(_SIDE),
+                *[
+                    F.lit(None).cast(spine_types[c]).alias(c)
+                    for c in spine_other
+                ],
+                F.struct(
+                    *[F.col(c) for c in s.payload(on)],
+                    F.col(s.ts).alias("__rts"),
+                ).alias(f"__r{i}"),
+                *null_structs(i),
+                *[
+                    F.col(c).alias(n)
+                    for c, n in zip(s.tiebreak, tb_names[i])
+                ],
+            )
+        )
+    u = parts[0]
+    for p in parts[1:]:
+        u = u.unionByName(p)
 
+    # tiebreak columns are null outside their own table's rows, so they
+    # only order same-table equal-ts runs (last wins); the side tag already
+    # separates spine rows from state rows
     order = [F.col(_TS).asc_nulls_first(), F.col(_SIDE)]
-    if allow_exact:
-        # among right rows at identical ts, last-by-tiebreak wins
-        order += [F.col(f"__tb_{c}") for c in tiebreak]
+    order += [F.col(n) for names in tb_names for n in names]
     w = (
         Window.partitionBy(*on)
         .orderBy(*order)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
+    # all N last() calls share one Window spec -> one Exchange+Sort+Window
+    carried = u.select(
+        "*",
+        *[
+            F.last(f"__r{i}", ignorenulls=True).over(w).alias(f"__m{i}")
+            for i in range(len(specs))
+        ],
+    ).where(F.col(_SIDE) == side_spine)
 
-    u = l_tagged.unionByName(r_tagged)
-    m = F.last("__r_struct", ignorenulls=True).over(w)
-    u = (
-        u.select("*", m.alias("__m"))
-        .where(F.col(_SIDE) == side_left)
-        .select(
-            "*",
-            *[F.col("__m").getField(c).alias(f"__m_{c}") for c in payload],
-            F.col("__m").getField("__rts").alias("__m_ts"),
+    out_cols: list[Column] = [F.col(c) for c in on] + [
+        F.col(_TS).alias(spine_ts)
+    ] + [F.col(c) for c in spine_other if c != spine_ts]
+    for i, s in enumerate(specs):
+        m = F.col(f"__m{i}")
+        m_ts = m.getField("__rts")
+        for c in s.payload(on):
+            v = _within_tolerance(m.getField(c), m_ts, F.col(_TS), s.tolerance)
+            out_cols.append(v.alias(s.prefix + c))
+        if s.matched_ts_col:
+            v_ts = _within_tolerance(m_ts, m_ts, F.col(_TS), s.tolerance)
+            out_cols.append(v_ts.alias(s.matched_ts_col))
+    ordered = list(spine.columns) + [
+        n
+        for s in specs
+        for n in [s.prefix + c for c in s.payload(on)]
+        + ([s.matched_ts_col] if s.matched_ts_col else [])
+    ]
+    return carried.select(*out_cols).select(*ordered)
+
+
+# ---------------------------------------------------------------------------
+# pandas merge kernel shared by the merge and broadcast strategies
+# ---------------------------------------------------------------------------
+
+
+def _right_frame(spec: FeatureSpec, on: list[str]) -> DataFrame:
+    """Right columns the pandas kernel reads: key(s), the right ts under
+    ``_RTS`` and the payload, then the tiebreaks (sorted on, never emitted)."""
+    return spec.df.select(
+        *on,
+        F.col(spec.ts).alias(_RTS),
+        *spec.payload(on),
+        *[F.col(c).alias(f"__tb_{c}") for c in spec.tiebreak],
+    )
+
+
+def _sort_right(rpdf: pd.DataFrame, tiebreak: list[str]) -> pd.DataFrame:
+    """Stable sort by (ts, *tiebreak), nulls first like Spark's ascending
+    order, so the last of a tied run by tiebreak is the one merge_asof picks."""
+    tb = [f"__tb_{c}" for c in tiebreak]
+    return rpdf.sort_values([_RTS, *tb], kind="mergesort", na_position="first")
+
+
+def _merge_sorted(
+    lpdf: pd.DataFrame,
+    rpdf: pd.DataFrame,
+    on: list[str],
+    left_ts: str,
+    payload: list[str],
+    allow_exact: bool,
+) -> pd.DataFrame:
+    """Backward ``merge_asof`` of ``lpdf`` against ``rpdf`` (sorted by
+    :func:`_sort_right`), in left row order: the left columns, the payload,
+    then the matched right ts as ``_RTS``."""
+    out_names = list(lpdf.columns) + payload + [_RTS]
+    if lpdf.empty or rpdf.empty:
+        return lpdf.assign(**{c: None for c in payload + [_RTS]})[out_names]
+    lpdf = lpdf.assign(**{_ORD: np.arange(len(lpdf))}).sort_values(
+        left_ts, kind="mergesort"
+    )
+    merged = pd.merge_asof(
+        lpdf,
+        rpdf,
+        left_on=left_ts,
+        right_on=_RTS,
+        by=on,
+        direction="backward",
+        allow_exact_matches=allow_exact,
+    ).sort_values(_ORD)
+    return _denanify(merged, payload)[out_names]
+
+
+def _merged_schema(left: DataFrame, right: DataFrame, payload: list[str]) -> StructType:
+    right_fields = {f.name: f for f in right.schema.fields}
+    return StructType(
+        list(left.schema.fields)
+        + [StructField(c, right_fields[c].dataType, True) for c in payload]
+        + [StructField(_RTS, right_fields[_RTS].dataType, True)]
+    )
+
+
+def _finish(
+    merged: DataFrame,
+    left_cols: list[str],
+    spec: FeatureSpec,
+    on: list[str],
+    left_ts: str,
+) -> DataFrame:
+    """Tolerance mask and output columns of a pandas-kernel result."""
+    m_ts = F.col(_RTS)
+    out = [F.col(c) for c in left_cols] + [
+        _within_tolerance(F.col(c), m_ts, F.col(left_ts), spec.tolerance).alias(c)
+        for c in spec.payload(on)
+    ]
+    if spec.matched_ts_col:
+        out.append(
+            _within_tolerance(m_ts, m_ts, F.col(left_ts), spec.tolerance).alias(
+                spec.matched_ts_col
+            )
         )
-    )
-
-    if tolerance is not None:
-        ok = F.col("__m_ts") >= (F.col(_TS) - tolerance)
-        sel_payload = [
-            F.when(ok, F.col(f"__m_{c}")).otherwise(F.lit(None)).alias(c)
-            for c in payload
-        ]
-        m_ts = F.when(ok, F.col("__m_ts")).otherwise(F.lit(None))
-    else:
-        sel_payload = [F.col(f"__m_{c}").alias(c) for c in payload]
-        m_ts = F.col("__m_ts")
-
-    out_cols = (
-        [F.col(c) for c in on]
-        + [F.col(_TS).alias(left_ts)]
-        + [F.col(c) for c in left_other if c != left_ts]
-        + sel_payload
-    )
-    if matched_ts_col:
-        out_cols.append(m_ts.alias(matched_ts_col))
-    # restore the left column order
-    result = u.select(*out_cols)
-    ordered = [c for c in left.columns] + payload + ([matched_ts_col] if matched_ts_col else [])
-    return result.select(*ordered)
+    return merged.select(*out)
 
 
 # ---------------------------------------------------------------------------
@@ -383,20 +507,16 @@ def _auto_num_buckets(
 
 def _asof_merge(
     left: DataFrame,
-    right: DataFrame,
+    spec: FeatureSpec,
     on: list[str],
     left_ts: str,
-    right_ts: str,
-    payload: list[str],
     allow_exact: bool,
-    tolerance: Column | None,
-    matched_ts_col: str | None,
     num_buckets: int | None,
     hot_keys: list | None,
     hot_key_threshold: int | None,
     salt_factor: int,
 ) -> DataFrame:
-    spark = left.sparkSession
+    right = spec.df
     n = num_buckets or _auto_num_buckets(left, right)
 
     if hot_keys is None and hot_key_threshold is not None:
@@ -404,9 +524,8 @@ def _asof_merge(
     hot_keys = hot_keys or []
 
     lsel = left.select("*", _bucket_expr(on, n).alias(_BUCKET))
-    rsel = right.select(
-        *on, F.col(right_ts), *payload, _bucket_expr(on, n).alias(_BUCKET)
-    )
+    rframe = _right_frame(spec, on)
+    rsel = rframe.select("*", _bucket_expr(on, n).alias(_BUCKET))
 
     if hot_keys:
         # hot-key salting: left hot rows scatter by hash(ts); right hot
@@ -445,65 +564,21 @@ def _asof_merge(
             ).otherwise(F.col(_BUCKET)),
         ).drop("__salt")
 
-    out_schema = _merged_schema(left, right, payload, matched_ts_col, right_ts)
-    left_cols = list(left.columns)
-    direction = "backward"
-    tol = tolerance
+    payload = spec.payload(on)
+    tiebreak = spec.tiebreak
 
     def merge(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        lpdf = lpdf.drop(columns=[_BUCKET])
-        rpdf = rpdf.drop(columns=[_BUCKET])
-        out_names = left_cols + payload + ([matched_ts_col] if matched_ts_col else [])
-        if lpdf.empty:
-            return pd.DataFrame(columns=out_names)
-        rname = right_ts if right_ts not in lpdf.columns else "__rts_tmp"
-        if rname != right_ts:
-            rpdf = rpdf.rename(columns={right_ts: rname})
-        if matched_ts_col:
-            rpdf = rpdf.assign(**{matched_ts_col: rpdf[rname]})
-        if rpdf.empty:
-            out = lpdf.copy()
-            for c in payload + ([matched_ts_col] if matched_ts_col else []):
-                out[c] = None
-            return out[out_names]
-        # merge_asof needs a global sort on the "on" column, stable so that
-        # right-frame order breaks (key, ts) ties exactly like pandas.
-        lpdf = lpdf.assign(__ord=range(len(lpdf))).sort_values(
-            left_ts, kind="mergesort"
+        rpdf = _sort_right(rpdf.drop(columns=[_BUCKET]), tiebreak)
+        return _merge_sorted(
+            lpdf.drop(columns=[_BUCKET]), rpdf, on, left_ts, payload, allow_exact
         )
-        rpdf = rpdf.sort_values(rname, kind="mergesort")
-        merged = pd.merge_asof(
-            lpdf,
-            rpdf,
-            left_on=left_ts,
-            right_on=rname,
-            by=on,
-            direction=direction,
-            allow_exact_matches=allow_exact,
-        )
-        merged = merged.sort_values("__ord").drop(columns=["__ord"] + (
-            [rname] if rname != left_ts else []
-        ))
-        return _denanify(
-            merged,
-            payload + ([matched_ts_col] if matched_ts_col else []),
-        )[out_names]
 
-    grouped = lsel.groupBy(_BUCKET).cogroup(rsel.groupBy(_BUCKET))
-    result = grouped.applyInPandas(merge, schema=out_schema)
-
-    if tol is not None:
-        # tolerance applied post-merge (needs the matched ts)
-        mts = matched_ts_col or "__m_ts_tmp"
-        if not matched_ts_col:
-            raise ValueError("tolerance with strategy='merge' requires matched_ts_col")
-        ok = F.col(mts) >= (F.col(left_ts) - tol)
-        result = result.select(
-            *left_cols,
-            *[F.when(ok, F.col(c)).otherwise(F.lit(None)).alias(c) for c in payload],
-            F.when(ok, F.col(mts)).otherwise(F.lit(None)).alias(mts),
-        )
-    return result
+    merged = (
+        lsel.groupBy(_BUCKET)
+        .cogroup(rsel.groupBy(_BUCKET))
+        .applyInPandas(merge, schema=_merged_schema(left, rframe, payload))
+    )
+    return _finish(merged, left.columns, spec, on, left_ts)
 
 
 # ---------------------------------------------------------------------------
@@ -513,82 +588,28 @@ def _asof_merge(
 
 def _asof_broadcast(
     left: DataFrame,
-    right: DataFrame,
+    spec: FeatureSpec,
     on: list[str],
     left_ts: str,
-    right_ts: str,
-    payload: list[str],
     allow_exact: bool,
-    tolerance: Column | None,
-    matched_ts_col: str | None,
     broadcast_max_rows: int,
 ) -> DataFrame:
-    spark = left.sparkSession
-    rpdf = (
-        right.select(*on, right_ts, *payload)
-        .limit(broadcast_max_rows + 1)
-        .toPandas()
-    )
+    rframe = _right_frame(spec, on)
+    rpdf = rframe.limit(broadcast_max_rows + 1).toPandas()
     if len(rpdf) > broadcast_max_rows:
         raise ValueError(
             f"right side exceeds broadcast_max_rows={broadcast_max_rows}; "
             "use strategy='union' or 'merge'"
         )
-    rname = right_ts if right_ts not in left.columns else "__rts_tmp"
-    if rname != right_ts:
-        rpdf = rpdf.rename(columns={right_ts: rname})
-    if matched_ts_col:
-        rpdf = rpdf.assign(**{matched_ts_col: rpdf[rname]})
-    rpdf = rpdf.sort_values(rname, kind="mergesort")
-    bc = spark.sparkContext.broadcast(rpdf)
-
-    out_schema = _merged_schema(left, right, payload, matched_ts_col, right_ts)
-    left_cols = list(left.columns)
-    out_names = left_cols + payload + ([matched_ts_col] if matched_ts_col else [])
+    bc = left.sparkSession.sparkContext.broadcast(_sort_right(rpdf, spec.tiebreak))
+    payload = spec.payload(on)
 
     def merge_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         rp = bc.value
         for lpdf in batches:
-            if lpdf.empty:
-                continue
-            lp = lpdf.assign(__ord=range(len(lpdf))).sort_values(
-                left_ts, kind="mergesort"
-            )
-            if rp.empty:
-                out = lp.drop(columns=["__ord"]).copy()
-                for c in out_names[len(left_cols):]:
-                    out[c] = None
-                yield out[out_names]
-                continue
-            merged = pd.merge_asof(
-                lp,
-                rp,
-                left_on=left_ts,
-                right_on=rname,
-                by=on,
-                direction="backward",
-                allow_exact_matches=allow_exact,
-            )
-            merged = merged.sort_values("__ord").drop(
-                columns=["__ord"] + ([rname] if rname != left_ts else [])
-            )
-            yield _denanify(
-                merged,
-                payload + ([matched_ts_col] if matched_ts_col else []),
-            )[out_names]
+            yield _merge_sorted(lpdf, rp, on, left_ts, payload, allow_exact)
 
-    result = left.mapInPandas(merge_iter, schema=out_schema)
-    if tolerance is not None:
-        if not matched_ts_col:
-            raise ValueError(
-                "tolerance with strategy='broadcast' requires matched_ts_col"
-            )
-        ok = F.col(matched_ts_col) >= (F.col(left_ts) - tolerance)
-        result = result.select(
-            *left_cols,
-            *[F.when(ok, F.col(c)).otherwise(F.lit(None)).alias(c) for c in payload],
-            F.when(ok, F.col(matched_ts_col)).otherwise(F.lit(None)).alias(
-                matched_ts_col
-            ),
-        )
-    return result
+    merged = left.mapInPandas(
+        merge_iter, schema=_merged_schema(left, rframe, payload)
+    )
+    return _finish(merged, left.columns, spec, on, left_ts)

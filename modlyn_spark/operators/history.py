@@ -20,7 +20,7 @@ Physical plan — two composable stages, never a probe x event join:
 2. the existing bucketed merge-scan as-of join (operators/asof.py)
    attaches each probe to the latest event row at-or-before its
    timestamp — whose rolling array IS the probe's last-n history, by
-   construction. All of asof_join's scale machinery (range bucketing,
+   construction. All of asof_join's scale machinery (hash bucketing,
    hot-key salting, broadcast escape hatch) applies unchanged.
 
 The naive alternative — join probes to all earlier events and rank —

@@ -9,29 +9,17 @@ modlyn/models/_simple_logreg_datamodule.py:93-99); this module is the
 distributed operator that produces it from raw event-state tables.
 
 Naively this is N successive as-of joins, i.e. N shuffles of the (huge)
-spine. The ``fused`` strategy here does it in ONE shuffle when every
-feature table shares the spine's entity key (the common feature-store
-case):
+spine. Here it is ONE shuffle when every feature table shares the spine's
+entity key (the common feature-store case): the spine and all N state
+tables go through the shared-window carry-forward kernel
+(:func:`modlyn_spark.operators.asof.carry_forward`, the same kernel as
+``asof_join(strategy="union")``), so Catalyst plans a single Exchange +
+Sort + Window for the whole assembly; per-table ``tolerance`` (max state
+age) and column ``prefix`` are applied on the way out.
 
-- the spine and all N state tables are unioned with a side tag and one
-  nullable payload struct PER TABLE (struct non-null exactly on that
-  table's rows, so ``last(..., ignorenulls=True)`` tracks row presence
-  per table, not field non-nullness — same trick as
-  ``asof._asof_union``);
-- ONE ``repartition``-by-key window sorted by (ts, side) carries every
-  table's latest state forward simultaneously: all N ``last`` calls share
-  a single Window spec, so Catalyst plans a single Exchange + Sort +
-  Window for the whole assembly;
-- per-table ``tolerance`` (max state age) and column ``prefix`` are
-  applied on the way out.
-
-At 100 TB the fused plan moves spine + Σ(state tables) through exactly one
+At 100 TB the plan moves spine + Σ(state tables) through exactly one
 shuffle — the same bytes a SINGLE as-of join of the concatenated state
-would move, and N× less spine traffic than chaining. The ``chained``
-strategy (sequential :func:`modlyn_spark.operators.asof.asof_join` calls)
-remains for feature tables keyed differently or needing per-table skew
-handling; each hop then picks its own union/merge/broadcast physical
-strategy.
+would move, and N× less spine traffic than chaining.
 
 Semantics per table match ``asof_join(strategy="union")``: latest right
 row with ``ts <= spine_ts`` (``<`` when ``allow_exact_matches=False``);
@@ -41,45 +29,9 @@ ties among same-(key, ts) state rows are resolved by ``tiebreak`` columns
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from pyspark.sql import DataFrame
 
-from pyspark.sql import Column, DataFrame, Window
-from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
-
-
-@dataclass
-class FeatureSpec:
-    """One feature table to as-of join onto the spine.
-
-    Args:
-        df: state table (entity history). Must contain the spine key
-            column(s) and ``ts``.
-        ts: state timestamp column.
-        cols: payload columns to attach (default: everything except the
-            key(s) and ``ts``).
-        prefix: prepended to every output payload column (required when two
-            tables share payload names).
-        tolerance: optional max state age (a Column interval); older
-            matches are nulled out, per table.
-        tiebreak: extra columns ordering same-(key, ts) state rows; the
-            last by this ordering wins (fused strategy only).
-        matched_ts_col: if set, also emit the matched state timestamp
-            under this name (prefix is NOT applied).
-    """
-
-    df: DataFrame
-    ts: str
-    cols: list[str] | None = None
-    prefix: str = ""
-    tolerance: Column | None = None
-    tiebreak: list[str] = field(default_factory=list)
-    matched_ts_col: str | None = None
-
-    def payload(self, on: list[str]) -> list[str]:
-        if self.cols is not None:
-            return list(self.cols)
-        return [c for c in self.df.columns if c not in set(on) | {self.ts}]
+from modlyn_spark.operators.asof import FeatureSpec, carry_forward
 
 
 def build_training_set(
@@ -89,7 +41,6 @@ def build_training_set(
     spine_ts: str,
     *,
     allow_exact_matches: bool = True,
-    strategy: str = "fused",
 ) -> DataFrame:
     """Attach the point-in-time state of every feature table to each spine row.
 
@@ -102,10 +53,6 @@ def build_training_set(
         spine_ts: feature timestamp column on the spine.
         allow_exact_matches: if True (default) state at exactly ``spine_ts``
             matches (``<=``), else strictly earlier (``<``).
-        strategy: ``"fused"`` (single shuffle, default) or ``"chained"``
-            (N successive as-of joins, each auto-choosing its physical
-            strategy — use when tables need per-table skew salting or
-            broadcast).
     """
     on = [on] if isinstance(on, str) else list(on)
     if not specs:
@@ -128,169 +75,4 @@ def build_training_set(
                 raise ValueError(f"matched_ts_col {s.matched_ts_col!r} clashes")
             out_names.append(s.matched_ts_col)
 
-    if strategy == "chained":
-        return _chained(spine, specs, on, spine_ts, allow_exact_matches)
-    if strategy == "fused":
-        return _fused(spine, specs, on, spine_ts, allow_exact_matches)
-    raise ValueError(f"unknown strategy {strategy!r}")
-
-
-def _chained(
-    spine: DataFrame,
-    specs: list[FeatureSpec],
-    on: list[str],
-    spine_ts: str,
-    allow_exact: bool,
-) -> DataFrame:
-    from modlyn_spark.operators.asof import asof_join
-
-    out = spine
-    for s in specs:
-        right = s.df
-        payload = s.payload(on)
-        if s.prefix:
-            right = right.select(
-                *on, s.ts, *[F.col(c).alias(s.prefix + c) for c in payload]
-            )
-            payload = [s.prefix + c for c in payload]
-        out = asof_join(
-            out,
-            right,
-            on=on,
-            left_ts=spine_ts,
-            right_ts=s.ts,
-            right_cols=payload,
-            allow_exact_matches=allow_exact,
-            tolerance=s.tolerance,
-            matched_ts_col=s.matched_ts_col,
-            right_tiebreak=[s.prefix + c for c in s.tiebreak] if s.prefix
-            else (s.tiebreak or None),
-        )
-    return out
-
-
-_TS = "__fts"
-_SIDE = "__fside"
-
-
-def _fused(
-    spine: DataFrame,
-    specs: list[FeatureSpec],
-    on: list[str],
-    spine_ts: str,
-    allow_exact: bool,
-) -> DataFrame:
-    spine_other = [c for c in spine.columns if c not in on]
-    spine_types = {f.name: f.dataType for f in spine.schema.fields}
-    # state rows sort before spine rows at equal ts for <= semantics
-    side_state, side_spine = (0, 1) if allow_exact else (1, 0)
-
-    struct_ts: list[StructType] = []
-    tb_names: list[list[str]] = []
-    for i, s in enumerate(specs):
-        types = {f.name: f.dataType for f in s.df.schema.fields}
-        struct_ts.append(
-            StructType(
-                [StructField(c, types[c], True) for c in s.payload(on)]
-                + [StructField("__rts", types[s.ts], True)]
-            )
-        )
-        tb_names.append([f"__tb{i}_{c}" for c in s.tiebreak])
-
-    def null_structs(except_i: int | None) -> list[Column]:
-        return [
-            F.lit(None).cast(t).alias(f"__r{i}")
-            for i, t in enumerate(struct_ts)
-            if i != except_i
-        ]
-
-    def null_tiebreaks(except_i: int | None) -> list[Column]:
-        cols: list[Column] = []
-        for i, s in enumerate(specs):
-            if i == except_i:
-                continue
-            types = {f.name: f.dataType for f in s.df.schema.fields}
-            cols += [
-                F.lit(None).cast(types[c]).alias(n)
-                for c, n in zip(s.tiebreak, tb_names[i])
-            ]
-        return cols
-
-    tagged = spine.select(
-        *[F.col(c) for c in on],
-        F.col(spine_ts).alias(_TS),
-        F.lit(side_spine).alias(_SIDE),
-        *[F.col(c) for c in spine_other],
-        *null_structs(None),
-        *null_tiebreaks(None),
-    )
-    parts = [tagged]
-    for i, s in enumerate(specs):
-        parts.append(
-            s.df.select(
-                *[F.col(c) for c in on],
-                F.col(s.ts).alias(_TS),
-                F.lit(side_state).alias(_SIDE),
-                *[
-                    F.lit(None).cast(spine_types[c]).alias(c)
-                    for c in spine_other
-                ],
-                F.struct(
-                    *[F.col(c) for c in s.payload(on)],
-                    F.col(s.ts).alias("__rts"),
-                ).alias(f"__r{i}"),
-                *null_structs(i),
-                *[
-                    F.col(c).alias(n)
-                    for c, n in zip(s.tiebreak, tb_names[i])
-                ],
-            )
-        )
-    u = parts[0]
-    for p in parts[1:]:
-        u = u.unionByName(p)
-
-    order = [F.col(_TS).asc_nulls_first(), F.col(_SIDE)]
-    if allow_exact:
-        # tiebreak columns are null outside their own table's rows, so this
-        # only orders same-table equal-ts runs (last wins)
-        order += [F.col(n) for names in tb_names for n in names]
-    w = (
-        Window.partitionBy(*on)
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    # all N last() calls share one Window spec -> one Exchange+Sort+Window
-    carried = u.select(
-        "*",
-        *[
-            F.last(f"__r{i}", ignorenulls=True).over(w).alias(f"__m{i}")
-            for i in range(len(specs))
-        ],
-    ).where(F.col(_SIDE) == side_spine)
-
-    out_cols: list[Column] = [F.col(c) for c in on] + [
-        F.col(_TS).alias(spine_ts)
-    ] + [F.col(c) for c in spine_other if c != spine_ts]
-    for i, s in enumerate(specs):
-        m = F.col(f"__m{i}")
-        m_ts = m.getField("__rts")
-        if s.tolerance is not None:
-            ok = m_ts >= (F.col(_TS) - s.tolerance)
-        else:
-            ok = F.lit(True)
-        for c in s.payload(on):
-            v = m.getField(c)
-            if s.tolerance is not None:
-                v = F.when(ok, v)
-            out_cols.append(v.alias(s.prefix + c))
-        if s.matched_ts_col:
-            v_ts = F.when(ok, m_ts) if s.tolerance is not None else m_ts
-            out_cols.append(v_ts.alias(s.matched_ts_col))
-    ordered = list(spine.columns) + [
-        n
-        for s in specs
-        for n in [s.prefix + c for c in s.payload(on)]
-        + ([s.matched_ts_col] if s.matched_ts_col else [])
-    ]
-    return carried.select(*out_cols).select(*ordered)
+    return carry_forward(spine, specs, on, spine_ts, allow_exact_matches)

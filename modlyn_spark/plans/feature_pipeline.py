@@ -54,7 +54,6 @@ def make_training_table(
     n_folds: int | None = None,
     fold_key_cols: list[str] | None = None,
     fold_salt: str = "",
-    strategy: str = "fused",
 ) -> DataFrame:
     """Assemble the leakage-free training table.
 
@@ -89,9 +88,7 @@ def make_training_table(
                     matched_ts_col=s.matched_ts_col,
                 )
             )
-    out = build_training_set(
-        spine, work, on=on_l, spine_ts=spine_ts, strategy=strategy
-    )
+    out = build_training_set(spine, work, on=on_l, spine_ts=spine_ts)
     for s in work:
         if s.matched_ts_col:
             out = out.withColumn(

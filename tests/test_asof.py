@@ -14,12 +14,14 @@ from modlyn_spark.oracle.pandas_oracle import oracle_asof
 PAYLOAD = ["value", "state", "version"]
 
 
-def _run(spark, events_pdf, probes_pdf, strategy, **kw):
+def _run(
+    spark, events_pdf, probes_pdf, strategy, matched_ts_col="matched_ts", **kw
+):
     left = spark.createDataFrame(probes_pdf)
     right = spark.createDataFrame(events_pdf)
     out = asof_join(
         left, right, on="key", left_ts="feature_ts", right_ts="ts",
-        right_cols=PAYLOAD, strategy=strategy, matched_ts_col="matched_ts", **kw,
+        right_cols=PAYLOAD, strategy=strategy, matched_ts_col=matched_ts_col, **kw,
     )
     return out.toPandas().sort_values("probe_id").reset_index(drop=True)
 
@@ -38,7 +40,7 @@ def _oracle(events_pdf, probes_pdf, **kw):
 
 def _assert_match(got: pd.DataFrame, exp: pd.DataFrame):
     assert len(got) == len(exp)
-    for c in PAYLOAD + ["matched_ts"]:
+    for c in PAYLOAD + [c for c in ["matched_ts"] if c in got.columns]:
         g, e = got[c], exp[c]
         assert g.isna().equals(e.isna()), f"null mask mismatch in {c}"
         if c == "matched_ts":
@@ -101,12 +103,71 @@ def test_no_temporal_leakage(spark, events_pdf, probes_pdf, strategy):
 
 
 def test_asof_tolerance(spark, events_pdf, probes_pdf):
+    """Every strategy (``auto`` picks broadcast for this small right side),
+    with and without the matched ts in the output."""
     tol = F.expr("INTERVAL 10 SECONDS")
-    got = _run(spark, events_pdf, probes_pdf, "merge", tolerance=tol)
     exp = _oracle(
         events_pdf, probes_pdf, tolerance=pd.Timedelta(seconds=10)
     )
-    _assert_match(got, exp)
+    for strategy in ["union", "merge", "broadcast", "auto"]:
+        for matched_ts_col in ["matched_ts", None]:
+            got = _run(
+                spark, events_pdf, probes_pdf, strategy,
+                matched_ts_col=matched_ts_col, tolerance=tol,
+            )
+            assert ("matched_ts" in got.columns) == bool(matched_ts_col)
+            _assert_match(got, exp)
+
+
+@pytest.mark.parametrize("strategy", ["union", "merge", "broadcast"])
+def test_asof_tiebreak_independent_of_partitioning(spark, strategy):
+    """Two right rows at the same (key, ts): the one last by right_tiebreak
+    wins whatever the right side's partitioning, exact and strict."""
+    right = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "key": ["k", "k", "k"],
+                "ts": pd.to_datetime(["2024-01-01 00:00:05"] * 2
+                                     + ["2024-01-01 00:00:01"]),
+                "seq": [5, 1, 0],
+                "val": [2.0, 9.0, 7.0],
+            }
+        )
+    )
+    left = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "key": ["k", "k"],
+                "feature_ts": pd.to_datetime(["2024-01-01 00:00:05",
+                                              "2024-01-01 00:00:06"]),
+                "probe_id": [0, 1],
+            }
+        )
+    )
+    for parts in [1, 2, 4]:
+        r = right.repartition(parts)
+        for exact, want in [(True, [2.0, 2.0]), (False, [7.0, 2.0])]:
+            got = (
+                asof_join(
+                    left, r, on="key", left_ts="feature_ts", right_ts="ts",
+                    right_cols=["val"], allow_exact_matches=exact,
+                    strategy=strategy, right_tiebreak=["seq"],
+                )
+                .toPandas()
+                .sort_values("probe_id")
+            )
+            assert got["val"].tolist() == want, (parts, exact)
+
+
+def test_union_is_single_exchange(spark, events_pdf, probes_pdf):
+    out = asof_join(
+        spark.createDataFrame(probes_pdf), spark.createDataFrame(events_pdf),
+        on="key", left_ts="feature_ts", right_ts="ts", right_cols=PAYLOAD,
+        strategy="union",
+    )
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert plan.count("Window") == 1, plan
 
 
 def test_asof_column_clash_raises(spark, events_pdf, probes_pdf):

@@ -70,6 +70,16 @@ def test_auto_disabled_broadcast_falls_back_to_union(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
+def test_broadcast_threshold_is_sparks_parsed_value(spark):
+    left, _ = _frames(spark)
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1t")
+        assert _broadcast_threshold(left) == 1 << 40
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
 def test_auto_hot_keys_selects_merge(spark):
     left, right = _frames(spark)
     out = asof_join(

@@ -67,7 +67,7 @@ def test_asof_union_matches_oracle_property(spark, data, exact):
         if len(right)
         else spark.createDataFrame([], schema=rschema)
     )
-    for strategy in ["union", "merge"]:
+    for strategy in ["union", "merge", "broadcast"]:
         got = (
             asof_join(
                 sleft, sright, on="key", left_ts="feature_ts", right_ts="ts",

@@ -1,6 +1,6 @@
-"""Point-in-time training-set assembly: fused single-shuffle path vs the
-chained as-of path vs the pandas merge_asof twin, plan-asserted to one
-Exchange, per-table tolerance, clash guards (SURVEY.md §5.2-4)."""
+"""Point-in-time training-set assembly: the single-shuffle path vs the
+pandas merge_asof twin, plan-asserted to one Exchange, per-table
+tolerance, clash guards (SURVEY.md §5.2-4)."""
 
 from __future__ import annotations
 
@@ -15,8 +15,8 @@ from modlyn_spark.oracle.pandas_oracle import oracle_asof
 @pytest.fixture(scope="module")
 def tables(events_pdf):
     # two state tables with DIFFERENT ts coverage carved from the shared
-    # fixture; deduped per (key, ts) so every path (fused / chained /
-    # merge_asof twin) resolves ties identically
+    # fixture; deduped per (key, ts) so the assembly and the merge_asof
+    # twin resolve ties identically
     a = (
         events_pdf[["key", "ts", "value"]]
         .groupby(["key", "ts"], as_index=False)
@@ -77,29 +77,23 @@ def _assert_match(got: pd.DataFrame, exp: pd.DataFrame):
             assert (g.fillna("∅").astype(str) == e.fillna("∅").astype(str)).all(), c
 
 
-@pytest.mark.parametrize("strategy", ["fused", "chained"])
-def test_matches_twin(spark, events_pdf, probes_pdf, tables, strategy):
+def test_matches_twin(spark, events_pdf, probes_pdf, tables):
     a, b = tables
-    got = _run(spark, probes_pdf, _specs(spark, a, b), strategy=strategy)
+    got = _run(spark, probes_pdf, _specs(spark, a, b))
     exp = _twin(probes_pdf, a, b)
     _assert_match(got, exp)
 
 
-def test_fused_equals_chained_strict(spark, probes_pdf, tables):
+def test_strict_matches_twin(spark, probes_pdf, tables):
     a, b = tables
-    f = _run(spark, probes_pdf, _specs(spark, a, b),
-             strategy="fused", allow_exact_matches=False)
-    c = _run(spark, probes_pdf, _specs(spark, a, b),
-             strategy="chained", allow_exact_matches=False)
-    _assert_match(f, c)
-    _assert_match(f, _twin(probes_pdf, a, b, allow_exact=False))
+    got = _run(spark, probes_pdf, _specs(spark, a, b), allow_exact_matches=False)
+    _assert_match(got, _twin(probes_pdf, a, b, allow_exact=False))
 
 
 def test_per_table_tolerance(spark, probes_pdf, tables):
     a, b = tables
     tol = F.expr("INTERVAL 1 HOUR")
-    got = _run(spark, probes_pdf, _specs(spark, a, b, tol_b=tol),
-               strategy="fused")
+    got = _run(spark, probes_pdf, _specs(spark, a, b, tol_b=tol))
     exp = _twin(probes_pdf, a, b, tol_b=pd.Timedelta(hours=1))
     _assert_match(got, exp)
     # tolerance nulled at least one b-side match that a-side kept
@@ -110,7 +104,7 @@ def test_fused_is_single_exchange(spark, probes_pdf, tables):
     a, b = tables
     out = build_training_set(
         spark.createDataFrame(probes_pdf), _specs(spark, a, b),
-        on="key", spine_ts="feature_ts", strategy="fused",
+        on="key", spine_ts="feature_ts",
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     # ONE hash Exchange (the shared window) regardless of table count
@@ -120,7 +114,7 @@ def test_fused_is_single_exchange(spark, probes_pdf, tables):
 
 def test_leakage_free(spark, probes_pdf, tables):
     a, b = tables
-    got = _run(spark, probes_pdf, _specs(spark, a, b), strategy="fused")
+    got = _run(spark, probes_pdf, _specs(spark, a, b))
     # probes planted before any history must carry no state
     pre = probes_pdf.merge(
         pd.concat([a[["key", "ts"]],
@@ -152,7 +146,7 @@ def test_tiebreak_last_wins(spark):
         spark.createDataFrame(spine),
         [FeatureSpec(df=spark.createDataFrame(state), ts="ts",
                      cols=["v"], tiebreak=["seq"])],
-        on="key", spine_ts="feature_ts", strategy="fused",
+        on="key", spine_ts="feature_ts",
     ).toPandas()
     assert out["v"].tolist() == [30.0]
 
@@ -163,7 +157,7 @@ def test_matched_ts_col(spark, probes_pdf, tables):
         FeatureSpec(df=spark.createDataFrame(a), ts="ts", prefix="a_",
                     matched_ts_col="a_matched"),
     ]
-    got = _run(spark, probes_pdf, specs, strategy="fused")
+    got = _run(spark, probes_pdf, specs)
     exp = oracle_asof(
         probes_pdf, a.assign(mts=a["ts"]), on="key", left_ts="feature_ts",
         right_ts="ts", payload=["value", "mts"],
