@@ -709,7 +709,7 @@ def q_class_feature_stats(spark, sf_dir):
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     df = emb.selectExpr("cast(label as string) as label", "embedding as features")
-    out = class_feature_stats(df, "label", "features", strategy="partial")
+    out = class_feature_stats(df, "label", "features")
     return out.select(
         "label",
         F.col("pos").cast("long").alias("pos"),
@@ -724,7 +724,7 @@ def q_f_statistic(spark, sf_dir):
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     df = emb.selectExpr("cast(label as string) as label", "embedding as features")
-    stats = class_feature_stats(df, "label", "features", strategy="partial")
+    stats = class_feature_stats(df, "label", "features")
     return f_statistic(stats).select(
         F.col("pos").cast("long").alias("pos"), F.round("f_stat", 4).alias("f_stat")
     )
@@ -755,7 +755,7 @@ def q_topn_jaccard(spark, sf_dir):
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     df = emb.selectExpr("cast(label as string) as label", "embedding as features")
-    stats = class_feature_stats(df, "label", "features", strategy="partial")
+    stats = class_feature_stats(df, "label", "features")
     m1 = stats.select(
         F.lit("mean").alias("method"), "label", "pos", F.col("mean").alias("score")
     )

@@ -147,7 +147,7 @@ def image_feature_pipeline(
 def score_features(features_df: DataFrame) -> DataFrame:
     """Per-class stats + F-statistic ranking over the pipeline output.
     Returns DataFrame(pos, f_stat) ordered by descending F."""
-    stats = class_feature_stats(features_df, "label", "features", strategy="partial")
+    stats = class_feature_stats(features_df, "label", "features")
     return f_statistic(stats).orderBy(F.desc("f_stat"))
 
 
@@ -207,5 +207,5 @@ def events_feature_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).alias("features"),
     )
-    stats = class_feature_stats(feats, "label", "features", strategy="partial")
+    stats = class_feature_stats(feats, "label", "features")
     return f_statistic(stats).orderBy(F.desc("f_stat"))

@@ -1,25 +1,30 @@
-"""Per-class per-feature statistics and F-statistic scoring.
+"""Per-class per-feature statistics, F-statistic and Wilcoxon scoring.
 
-The distributed analogue of the scanpy rank_genes_groups mean/variance
-scoring path the reference quickstart compares against (SURVEY.md N2;
-reference: docs/quickstart.ipynb cells 1335d6d3 / 8c058e6c), and the
-building block for the count-matrix statistics the north_rule mandates.
+The distributed analogue of the scanpy rank_genes_groups scoring paths the
+reference quickstart compares against (SURVEY.md N2; reference:
+docs/quickstart.ipynb cells 1335d6d3 / 8c058e6c), and the building block
+for the count-matrix statistics the north_rule mandates.
 
-Two physical strategies for the stats:
+Both scans read the (label, features) rows the same way: one ``mapInArrow``
+pass decodes each Arrow batch with ``_RowDecoder`` into per-task class
+codes and a dense float64 matrix. A null label is a class of its own, and a
+row whose feature array is null is skipped. A task holds one Arrow batch
+plus its partials, never its whole partition.
 
-``partial``
-    Scale path: one ``mapInPandas`` pass emits per-input-partition per-class
-    moment partials (n, sum[d], sumsq[d]) — numpy-vectorized over Arrow
-    batches, output is tiny (n_partitions x n_classes rows) — then a
-    ``groupBy(label)`` combine and a ``posexplode`` to long form. This is the
-    map-side-combined tree aggregation the north_star names: the wide shuffle
-    moves only moment vectors, never rows.
+``class_feature_stats``
+    Each task emits per-class moment partials (n, sum[d], sumsq[d]): n_tasks
+    x n_classes tiny rows. A ``groupBy(label)`` combine turns them into long
+    form. The wide shuffle moves only moment vectors, never rows.
 
-``explode``
-    Parity path: ``posexplode(features)`` then a plain
-    ``groupBy(label, pos)`` aggregate. Shuffles n*d rows, but is pure
-    Catalyst SQL — used for the DuckDB oracle cross-check and as a reference
-    for the partial path.
+``wilcoxon_scores``
+    Each task emits its value histogram: for each (feature, class) the
+    distinct values and their counts, one row per (feature, class). Count
+    matrices have few distinct values per feature, so this is orders of
+    magnitude fewer bins than cells; all-distinct continuous features
+    degrade to one bin per cell, still smaller than a row per cell. One
+    exchange on ``pos`` brings each feature's histograms together, and the
+    exact tie-corrected statistic is computed from the merged bins with
+    vectorized segment operations over many features at once.
 
 Label encoding mirrors sklearn.LabelEncoder (classes sorted ascending;
 reference: modlyn/models/_simple_logreg_datamodule.py:85-88).
@@ -34,13 +39,18 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     DoubleType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
+
+from modlyn_spark.scoring.blocks import _dense
+
+# Wilcoxon histogram bins a task holds before it ships them (map side) or
+# scores the features it holds completely (combine side)
+_HELD_BINS = 1 << 22
 
 
 def label_encode(df: DataFrame, label_col: str) -> tuple[list, DataFrame]:
@@ -60,11 +70,65 @@ def label_encode(df: DataFrame, label_col: str) -> tuple[list, DataFrame]:
     return classes, df.withColumn(f"{label_col}_idx", mapping[F.col(label_col)])
 
 
+def _codes(labels):
+    """(codes, names) of an Arrow string array: ``names[codes[i]]`` is row
+    i's label, a null label included as a name of its own."""
+    import pyarrow.compute as pc
+
+    enc = labels.dictionary_encode()
+    names = enc.dictionary.to_pylist()
+    idx = enc.indices
+    if enc.null_count:
+        idx = pc.fill_null(idx, len(names))
+        names.append(None)
+    return idx.to_numpy(zero_copy_only=False).astype(np.int64), names
+
+
+class _RowDecoder:
+    """One task's decode of Arrow batches of (label, features) rows into
+    (class codes, float64 (n, d) features).
+
+    Codes index ``names`` and are stable across the task's batches. A null
+    label is a class of its own, a row whose feature array is null is
+    skipped, a null value inside an array reads as NaN, and every other row
+    must hold the same number of values.
+    """
+
+    def __init__(self):
+        self.code: dict = {}
+        self.d: int | None = None
+
+    @property
+    def names(self) -> list:
+        return list(self.code)
+
+    def __call__(self, rb):
+        import pyarrow.compute as pc
+
+        feats = rb.column(1)
+        if feats.null_count:
+            rb = rb.filter(feats.is_valid())
+            feats = rb.column(1)
+        if not rb.num_rows:
+            return None
+        if self.d is None:
+            self.d = int(pc.list_value_length(feats)[0].as_py())
+        idx, names = _codes(rb.column(0))
+        lut = np.array([self.code.setdefault(v, len(self.code)) for v in names], dtype=np.int64)
+        return lut[idx], _dense(feats, self.d)
+
+
+def _lists(values: np.ndarray, offsets: np.ndarray):
+    """Arrow list column whose row i holds ``values[offsets[i]:offsets[i + 1]]``."""
+    import pyarrow as pa
+
+    return pa.ListArray.from_arrays(pa.array(offsets.astype(np.int32)), pa.array(values))
+
+
 def class_feature_stats(
     df: DataFrame,
     label_col: str,
     features_col: str = "features",
-    strategy: str = "partial",
 ) -> DataFrame:
     """Long-form per-class per-feature statistics.
 
@@ -73,53 +137,34 @@ def class_feature_stats(
     (matches numpy's default ddof=0, which the oracle and scanpy-style
     scoring use).
     """
-    if strategy == "explode":
-        ex = df.select(
-            F.col(label_col).alias("label"),
-            F.posexplode(features_col).alias("pos", "x"),
-        ).select("label", "pos", F.col("x").cast("double").alias("x"))
-        return ex.groupBy("label", "pos").agg(
-            F.count("x").alias("n"),
-            F.avg("x").alias("mean"),
-            F.coalesce(F.var_pop("x"), F.lit(0.0)).alias("var_pop"),
-        )
-    if strategy != "partial":
-        raise ValueError(f"unknown strategy {strategy!r}")
 
-    partial_schema = StructType(
-        [
-            StructField("label", StringType()),
-            StructField("n", LongType()),
-            StructField("s", ArrayType(DoubleType())),
-            StructField("ss", ArrayType(DoubleType())),
-        ]
-    )
+    def partials(batches: Iterator) -> Iterator:
+        import pyarrow as pa
 
-    lc, fc = label_col, features_col
-
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: dict[str, list] = {}
-        for pdf in batches:
-            if pdf.empty:
+        decode = _RowDecoder()
+        acc: dict[int, list] = {}
+        for rb in batches:
+            rows = decode(rb)
+            if rows is None:
                 continue
-            X = np.stack(pdf[fc].to_numpy()).astype(np.float64)
-            labels = pdf[lc].to_numpy()
-            for lab in pd.unique(labels):
-                sub = X[labels == lab]
-                key = str(lab)
-                if key not in acc:
-                    acc[key] = [0, 0.0, 0.0]
-                acc[key][0] += len(sub)
-                acc[key][1] = acc[key][1] + sub.sum(axis=0)
-                acc[key][2] = acc[key][2] + (sub * sub).sum(axis=0)
+            y, X = rows
+            for c in np.unique(y):
+                sub = X[y == c]
+                a = acc.setdefault(int(c), [0, 0.0, 0.0])
+                a[0] += len(sub)
+                a[1] = a[1] + sub.sum(axis=0)
+                a[2] = a[2] + (sub * sub).sum(axis=0)
         if acc:
-            yield pd.DataFrame(
-                {
-                    "label": list(acc),
-                    "n": [v[0] for v in acc.values()],
-                    "s": [v[1].tolist() for v in acc.values()],
-                    "ss": [v[2].tolist() for v in acc.values()],
-                }
+            names, codes = decode.names, list(acc)
+            offsets = np.arange(len(codes) + 1) * decode.d
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array([names[c] for c in codes], pa.string()),
+                    pa.array([acc[c][0] for c in codes], pa.int64()),
+                    _lists(np.concatenate([acc[c][1] for c in codes]), offsets),
+                    _lists(np.concatenate([acc[c][2] for c in codes]), offsets),
+                ],
+                names=["label", "n", "s", "ss"],
             )
 
     combine_schema = StructType(
@@ -149,10 +194,190 @@ def class_feature_stats(
             }
         )
 
-    p = df.select(F.col(lc).cast("string").alias(lc), fc).mapInPandas(
-        partials, schema=partial_schema
+    p = df.select(F.col(label_col).cast("string"), features_col).mapInArrow(
+        partials, "label string, n long, s array<double>, ss array<double>"
     )
     return p.groupBy("label").applyInPandas(combine, schema=combine_schema)
+
+
+def _bits(x: np.ndarray) -> np.ndarray:
+    """int64 keys of float64 values, equal exactly when the values tie:
+    -0.0 with 0.0, and every NaN with every other (numpy's sort may change
+    a NaN's payload, so NaN bits cannot be compared as they are)."""
+    b = (x + 0.0).view(np.int64)
+    b[np.isnan(x)] = -1
+    return b
+
+
+def _runs(*keys: np.ndarray):
+    """(start index of each run of equal consecutive key tuples, run index
+    of every element)."""
+    new = np.zeros(len(keys[0]), dtype=bool)
+    new[:1] = True
+    for k in keys:
+        new[1:] |= k[1:] != k[:-1]
+    return np.flatnonzero(new), np.cumsum(new) - 1
+
+
+def _reduce_bins(code, pos, x, c):
+    """Sort bins by (code, pos, value) and merge tied ones, summing counts."""
+    order = np.lexsort((x, pos, code))
+    code, pos, x, c = code[order], pos[order], x[order], c[order]
+    starts, _ = _runs(code, pos, _bits(x))
+    return code[starts], pos[starts], x[starts], np.add.reduceat(c, starts)
+
+
+def _merge_bins(runs: list[tuple]):
+    """One histogram from several (code, pos, value, count) runs."""
+    return _reduce_bins(*(np.concatenate(r) for r in zip(*runs)))
+
+
+def _batch_histogram(y: np.ndarray, X: np.ndarray):
+    """(code, pos, value, count) bins of one batch, sorted by (code, pos,
+    value): each class's columns are sorted at once, then runs of equal
+    values collapse into one bin."""
+    d = X.shape[1]
+    parts = []
+    for cl in np.unique(y):
+        sub = X[y == cl]
+        v = np.sort(sub, axis=0).T.ravel()  # feature-major, sorted
+        pos = np.repeat(np.arange(d, dtype=np.int32), len(sub))
+        starts, _ = _runs(pos, _bits(v))
+        parts.append(
+            (
+                np.full(len(starts), cl, dtype=np.int64),
+                pos[starts],
+                v[starts],
+                np.diff(np.append(starts, len(v))).astype(np.int64),
+            )
+        )
+    return tuple(np.concatenate(p) for p in zip(*parts))
+
+
+def _histogram_partials(batches: Iterator) -> Iterator:
+    """mapInArrow body: (label, features) rows -> the task's value
+    histogram, one row (pos, label, x[], c[]) per (feature, class), values
+    ascending.
+
+    Batch histograms are merged into the running one once together they
+    hold as many bins as it does, so merging costs O(bins log bins) over
+    the task even when every value is distinct. A histogram that reaches
+    ``_HELD_BINS`` bins is shipped and a new one started: the combine adds
+    up a value's counts from any number of rows, so only the shuffle
+    volume, never the result, depends on where that happens."""
+    decode = _RowDecoder()
+    runs: list[tuple] = []  # runs[0] is the histogram merged so far
+    for rb in batches:
+        rows = decode(rb)
+        if rows is None:
+            continue
+        runs.append(_batch_histogram(*rows))
+        if sum(len(r[0]) for r in runs[1:]) >= len(runs[0][0]):
+            runs = [_merge_bins(runs)]
+            if len(runs[0][0]) >= _HELD_BINS:
+                yield _histogram_rows(runs.pop(), decode.names)
+    if runs:
+        yield _histogram_rows(_merge_bins(runs), decode.names)
+
+
+def _histogram_rows(hist: tuple, names: list):
+    """Arrow batch of one (pos, label, x[], c[]) row per (feature, class)
+    run of a sorted histogram."""
+    import pyarrow as pa
+
+    code, pos, x, c = hist
+    first, _ = _runs(code, pos)
+    offsets = np.append(first, len(x))
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(pos[first]),
+            pa.array([names[k] for k in code[first]], pa.string()),
+            _lists(x, offsets),
+            _lists(c, offsets),
+        ],
+        names=["pos", "label", "x", "c"],
+    )
+
+
+def _score(tbl):
+    """Rank sums and z of every (feature, class) of complete features.
+
+    ``tbl`` holds every histogram row of the features it holds. Each
+    distinct (pos, value) is one tie group of t = summed count; its average
+    rank is the count of smaller values in the feature plus (t + 1) / 2."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    lengths = pc.list_value_length(tbl.column("x")).to_numpy(zero_copy_only=False)
+    row_lab, names = _codes(tbl.column("label").combine_chunks())
+    L = len(names)
+    row_pos = tbl.column("pos").to_numpy()
+    x = pc.list_flatten(tbl.column("x")).to_numpy()
+    c = pc.list_flatten(tbl.column("c")).to_numpy()
+    feats, row_f = np.unique(row_pos, return_inverse=True)
+    f = np.repeat(row_f, lengths)
+    cell = f * L + np.repeat(row_lab, lengths)
+    order = np.lexsort((x, f))
+    f, x, c, cell = f[order], x[order], c[order], cell[order]
+    # tie groups: runs of one value within one feature
+    starts, grp = _runs(f, _bits(x))
+    t = np.add.reduceat(c, starts)
+    gf = f[starts]
+    before = np.cumsum(t) - t  # count of smaller values, over all features
+    first, feat_of = _runs(gf)
+    before -= before[first][feat_of]  # ... within the group's feature
+    avg = before + (t + 1) / 2.0
+    n_cells = len(feats) * L
+    n1 = np.bincount(cell, weights=c, minlength=n_cells).astype(np.int64)
+    rank_sum = np.bincount(cell, weights=c * avg[grp], minlength=n_cells)
+    nt = np.bincount(gf, weights=t, minlength=len(feats)).astype(np.int64)
+    tie_sum = np.bincount(gf, weights=t.astype(np.float64) ** 3 - t, minlength=len(feats))
+    # only the (feature, class) cells holding rows, as the per-row plan gave
+    keep = np.flatnonzero(n1 > 0)
+    n1, rank_sum = n1[keep], rank_sum[keep]
+    fi, li = keep // L, keep % L
+    nt, tie_sum = nt[fi], tie_sum[fi]
+    mu = n1 * (nt + 1) / 2.0
+    with np.errstate(divide="ignore", invalid="ignore"):
+        var = n1 * (nt - n1) / 12.0 * ((nt + 1) - tie_sum / (nt * (nt - 1.0)))
+        z = np.where(var > 0, (rank_sum - mu) / np.sqrt(var), 0.0)
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array([names[k] for k in li], pa.string()),
+            pa.array(feats[fi].astype(np.int32)),
+            pa.array(n1),
+            pa.array(rank_sum),
+            pa.array(z),
+        ],
+        names=["label", "pos", "n1", "rank_sum", "z"],
+    )
+
+
+def _rank_sums(batches: Iterator) -> Iterator:
+    """mapInArrow body over one exchange partition, sorted by ``pos``:
+    buffer histogram rows and score every feature that is complete once
+    ``_HELD_BINS`` bins are held (all of them at the end)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    held, n_held = [], 0
+    for rb in batches:
+        if not rb.num_rows:
+            continue
+        held.append(rb)
+        n_held += len(pc.list_flatten(rb.column("x")))
+        if n_held < _HELD_BINS:
+            continue
+        tbl = pa.Table.from_batches(held)
+        last = tbl.column("pos")[-1]
+        done = pc.not_equal(tbl.column("pos"), last)
+        if pc.any(done).as_py():
+            yield _score(tbl.filter(done))
+        rest = tbl.filter(pc.invert(done))
+        held = rest.to_batches()
+        n_held = len(pc.list_flatten(rest.column("x")))
+    if held:
+        yield _score(pa.Table.from_batches(held))
 
 
 def wilcoxon_scores(
@@ -169,63 +394,33 @@ def wilcoxon_scores(
     are ranked over ALL rows (average ranks for ties), and each class's
     rank sum is z-scored against the null N(n1(N+1)/2, n1*n2/12*((N+1) -
     tie_term)) with the standard tie correction tie_term =
-    sum_t(t^3 - t)/(N(N-1)).
+    sum_t(t^3 - t)/(N(N-1)). A zero variance gives z = 0.
 
-    Physical plan: posexplode -> ONE exchange on ``pos`` serving both
-    windows (rank + tie-peer count share partitioning and sort order:
-    ties are counted with a RANGE BETWEEN CURRENT ROW AND CURRENT ROW
-    frame, i.e. order-key peers — no second shuffle on (pos, value)),
-    then a map-side-combinable groupBy(label, pos) whose output is tiny
-    (k x d rows), and a final window over pos for the grand totals.
-    Ranking n values per feature is a per-feature sort — embarrassingly
-    parallel across the d feature partitions.
+    Physical plan: an Arrow map builds each task's value histogram (per
+    feature and class, the distinct values and their counts), merged batch
+    by batch. ONE exchange on ``pos`` brings every task's histogram rows of
+    a feature together, sorted by ``pos`` within the partition. The combine
+    scores many features per numpy call: a lexsort on (feature, value)
+    makes each distinct value one tie group of t = summed count, its
+    average rank is the count of smaller values plus (t + 1) / 2, and
+    ``bincount`` over (feature, class) gives n1 and the rank sum. The
+    statistic is exact: it equals ranking every cell. The shuffle carries
+    one bin per distinct (feature, class, value) per task, not one row per
+    cell.
+
+    A null label is a class of its own, a row whose feature array is null
+    is skipped, -0.0 ties with 0.0, and NaN (also a null value inside an
+    array) ranks above every number, tied with every other NaN.
 
     Returns DataFrame(label, pos, n1, rank_sum, z).
     """
-    from pyspark.sql import Window
-
-    ex = df.select(
-        F.col(label_col).cast("string").alias("label"),
-        F.posexplode(features_col).alias("pos", "x"),
-    ).select("label", "pos", F.col("x").cast("double").alias("x"))
-
-    w_rank = Window.partitionBy("pos").orderBy("x")
-    # peers of the current order key == tie-group size t (same exchange)
-    w_ties = w_rank.rangeBetween(0, 0)
-    ranked = ex.select(
-        "label",
-        "pos",
-        (
-            F.rank().over(w_rank)
-            + (F.count(F.lit(1)).over(w_ties) - 1) / 2.0
-        ).alias("avg_rank"),
-        F.count(F.lit(1)).over(w_ties).alias("t"),
+    hist = df.select(F.col(label_col).cast("string"), features_col).mapInArrow(
+        _histogram_partials, "pos int, label string, x array<double>, c array<long>"
     )
-    # sum_groups(t^3 - t) == sum_rows(t^2 - 1): each tie group of size t
-    # contributes t rows of (t^2 - 1)
-    per_class = ranked.groupBy("label", "pos").agg(
-        F.sum("avg_rank").alias("rank_sum"),
-        F.count(F.lit(1)).alias("n1"),
-        F.sum(F.col("t") * F.col("t") - 1.0).alias("tie_part"),
-    )
-    w_pos = Window.partitionBy("pos")
-    tot = per_class.withColumn("n_total", F.sum("n1").over(w_pos)).withColumn(
-        "tie_sum", F.sum("tie_part").over(w_pos)
-    )
-    n1, nt = F.col("n1"), F.col("n_total")
-    mu = n1 * (nt + 1) / 2.0
-    var = (
-        n1 * (nt - n1) / 12.0
-        * ((nt + 1) - F.col("tie_sum") / (nt * (nt - 1.0)))
-    )
-    return tot.select(
-        "label",
-        "pos",
-        "n1",
-        "rank_sum",
-        F.when(var > 0, (F.col("rank_sum") - mu) / F.sqrt(var))
-        .otherwise(F.lit(0.0))
-        .alias("z"),
+    return (
+        hist.repartition("pos")
+        .sortWithinPartitions("pos")
+        .mapInArrow(_rank_sums, "label string, pos int, n1 long, rank_sum double, z double")
     )
 
 

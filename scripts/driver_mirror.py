@@ -14,7 +14,9 @@ for every entry.
 
 Usage: python scripts/driver_mirror.py [--retired] [sf_dir] [query ...]
        --retired additionally runs retired_queries() against
-       retired_oracle_sql() (entries kept out of the 50-slot contract).
+       retired_oracle_sql() (entries kept out of the 50-slot contract);
+       a retired entry named as a query runs without it, and a name that
+       is no entry at all fails.
 """
 
 from __future__ import annotations
@@ -137,12 +139,18 @@ def main() -> int:
     )
     no_oracle = sorted(set(qs) - set(oracles))
     assert not no_oracle, f"queries() entries without an oracle: {no_oracle}"
-    if retired:
+    if retired or only - set(qs):
+        # a retired entry named on the command line runs without --retired
         rq = entry.retired_queries()
+        if not retired:
+            rq = {k: v for k, v in rq.items() if k in only}
         qs = {**qs, **rq}
         oracles = {**oracles, **entry.retired_oracle_sql()}
         print(f"(including {len(rq)} retired entries)")
     n_bad = 0
+    for name in sorted(only - set(qs)):
+        print(f"FAIL {name}: no such queries() or retired_queries() entry")
+        n_bad += 1
     for name, q in sorted(qs.items()):
         if only and name not in only:
             continue

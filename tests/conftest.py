@@ -61,3 +61,16 @@ def probes_pdf(events_pdf):
     df = pd.DataFrame(rows).drop_duplicates().reset_index(drop=True)
     df["probe_id"] = np.arange(len(df))
     return df
+
+
+@pytest.fixture(scope="session")
+def partitioned_df(spark):
+    """``make(chunks, schema)``: a DataFrame whose partition i holds exactly
+    the rows of ``chunks[i]`` (a list of tuples; empty chunks give empty
+    partitions), read with no shuffle in between."""
+
+    def make(chunks, schema):
+        rdd = spark.sparkContext.parallelize(list(chunks), len(chunks))
+        return spark.createDataFrame(rdd.flatMap(lambda c: c), schema)
+
+    return make

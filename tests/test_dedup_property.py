@@ -8,7 +8,8 @@ always satisfy the operators' contracts against independent oracles.
 - hot-shingle chunk salting: identical output to the unsalted join for any
   corpus and any chunk size.
 - wilcoxon z-scores: allclose to the numpy oracle on random matrices with
-  ties and constant columns.
+  ties and constant columns, read as 1-4 input partitions (empty ones
+  allowed), so task histograms are merged in every combination.
 """
 
 from __future__ import annotations
@@ -118,21 +119,26 @@ def matrices(draw):
     if labels.nunique() < 2:
         labels.iloc[0] = "c0"
         labels.iloc[1] = "c1"
-    return X, labels
+    # input partitions: sorted cut points, repeats make empty partitions
+    parts = draw(st.integers(1, 4))
+    cuts = sorted(draw(st.lists(st.integers(0, n), min_size=parts - 1, max_size=parts - 1)))
+    return X, labels, [0, *cuts, n]
 
 
 @given(data=matrices())
 @_SETTINGS
-def test_wilcoxon_property_vs_oracle(spark, data):
+def test_wilcoxon_property_vs_oracle(spark, partitioned_df, data):
     from modlyn_spark.oracle.pandas_oracle import oracle_wilcoxon
     from modlyn_spark.scoring.stats import wilcoxon_scores
 
-    X, labels = data
-    pdf = pd.DataFrame(
-        {"features": [x.tolist() for x in X], "label": labels}
+    X, labels, bounds = data
+    rows = [(lab, x.tolist()) for lab, x in zip(labels, X)]
+    df = partitioned_df(
+        [rows[a:b] for a, b in zip(bounds[:-1], bounds[1:])],
+        "label string, features array<double>",
     )
     got = (
-        wilcoxon_scores(spark.createDataFrame(pdf), "label", "features")
+        wilcoxon_scores(df, "label", "features")
         .toPandas()
         .sort_values(["label", "pos"])
         .reset_index(drop=True)

@@ -47,12 +47,20 @@ def _spark_df(spark, pdf):
     return spark.createDataFrame(pdf)
 
 
-@pytest.mark.parametrize("strategy", ["partial", "explode"])
-def test_class_feature_stats(spark, matrix_pdf, strategy):
+_LABELLED = "label string, features array<double>"
+
+
+def _split(rows, n):
+    """``rows`` cut into ``n`` contiguous chunks, in order."""
+    bounds = np.linspace(0, len(rows), n + 1).astype(int)
+    return [rows[a:b] for a, b in zip(bounds[:-1], bounds[1:])]
+
+
+def test_class_feature_stats(spark, matrix_pdf):
     pdf, X, labels = matrix_pdf
     df = _spark_df(spark, pdf)
     got = (
-        class_feature_stats(df, "label", "features", strategy=strategy)
+        class_feature_stats(df, "label", "features")
         .toPandas()
         .sort_values(["label", "pos"])
         .reset_index(drop=True)
@@ -64,10 +72,36 @@ def test_class_feature_stats(spark, matrix_pdf, strategy):
     assert np.allclose(got["var_pop"], exp["var_pop"], atol=1e-9)
 
 
+def test_class_feature_stats_skips_null_arrays(spark, matrix_pdf, partitioned_df):
+    """A row whose feature array is null is skipped, in every partition
+    it lands in (the partials used to fail stacking it), and a null label
+    is a class of its own, not the string "None"."""
+    pdf, X, labels = matrix_pdf
+    rows = [(lab, x.tolist()) for lab, x in zip(labels, X.astype(np.float64))]
+    for i in (3, 40, 41, 200):
+        rows.insert(i, (labels.iloc[i], None))
+    rows += [(None, [1.0] * D), (None, [3.0] * D), (None, None)]
+    got = (
+        class_feature_stats(partitioned_df(_split(rows, 3), _LABELLED), "label", "features")
+        .toPandas()
+        .sort_values(["label", "pos"])
+        .reset_index(drop=True)
+    )
+    null = got[got["label"].isna()]
+    assert null["n"].tolist() == [2] * D
+    assert np.allclose(null["mean"], 2.0) and np.allclose(null["var_pop"], 1.0)
+    got = got[got["label"].notna()].reset_index(drop=True)
+    exp = oracle_class_feature_stats(X, labels).sort_values(["label", "pos"]).reset_index(drop=True)
+    assert got["label"].tolist() == exp["label"].tolist()
+    assert got["n"].tolist() == exp["n"].tolist()
+    assert np.allclose(got["mean"], exp["mean"])
+    assert np.allclose(got["var_pop"], exp["var_pop"], atol=1e-9)
+
+
 def test_f_statistic(spark, matrix_pdf):
     pdf, X, labels = matrix_pdf
     df = _spark_df(spark, pdf)
-    stats = class_feature_stats(df, "label", "features", strategy="partial")
+    stats = class_feature_stats(df, "label", "features")
     got = f_statistic(stats).toPandas().sort_values("pos").reset_index(drop=True)
     exp = oracle_f_statistic(X, labels)
     assert np.allclose(got["f_stat"], exp["f_stat"])
@@ -174,6 +208,162 @@ def test_wilcoxon_vs_oracle(spark, matrix_pdf):
         assert sub.idxmax() == i
 
 
+def test_wilcoxon_counts_partition_invariant(spark, partitioned_df):
+    """Histograms merged across tasks: a Poisson count matrix (heavy ties,
+    one constant column, rows sorted by class so most classes are missing
+    from most partitions) scores bit-identically over 1/3/8 input
+    partitions and matches the per-cell oracle."""
+    import pyarrow as pa
+
+    from modlyn_spark.oracle.pandas_oracle import oracle_wilcoxon
+    from modlyn_spark.scoring import stats
+    from modlyn_spark.scoring.stats import wilcoxon_scores
+
+    rng = np.random.default_rng(11)
+    n, d = 600, 12
+    labels = pd.Series(np.sort(rng.choice([f"c{i}" for i in range(5)], size=n)))
+    X = rng.poisson(1.5, size=(n, d)).astype(np.float64)
+    X[:, 0] += 2.0 * (labels.str[1:].astype(int).to_numpy() == 2)
+    X[:, 5] = 3.0
+    rows = [(lab, x.tolist()) for lab, x in zip(labels, X)]
+    outs = [
+        wilcoxon_scores(partitioned_df(_split(rows, p), _LABELLED), "label", "features")
+        .toPandas()
+        .sort_values(["label", "pos"])
+        .reset_index(drop=True)
+        for p in (1, 3, 8)
+    ]
+    for other in outs[1:]:
+        pd.testing.assert_frame_equal(outs[0], other, check_exact=True)
+    exp = oracle_wilcoxon(X, labels).sort_values(["label", "pos"]).reset_index(drop=True)
+    got = outs[0]
+    assert got["label"].tolist() == exp["label"].tolist()
+    assert got["pos"].tolist() == exp["pos"].tolist()
+    assert got["n1"].tolist() == exp["n1"].tolist()
+    assert np.allclose(got["rank_sum"], exp["rank_sum"])
+    assert np.allclose(got["z"], exp["z"], rtol=1e-9, atol=1e-9)
+    assert (got.loc[got["pos"] == 5, "z"] == 0.0).all()  # zero-variance guard
+
+    # edge semantics, pinned to the per-cell (posexplode + window) plan's
+    # output: a null label is its own class, a null array is skipped, -0.0
+    # ties with 0.0, NaN ties with NaN
+    edge = [("a", [1.0, 0.0]), ("a", [2.0, -0.0]), ("b", [1.0, 0.0]),
+            ("b", None), (None, [3.0, 5.0]), ("b", [2.0, 1.0])]
+    got = {
+        (r.label, r.pos): (r.n1, r.rank_sum, r.z)
+        for p in (1, 4)
+        for r in wilcoxon_scores(partitioned_df(_split(edge, p), _LABELLED), "label", "features").collect()
+    }
+    assert got == {
+        (None, 0): (1, 5.0, 1.4907119849998598),
+        ("a", 0): (2, 5.0, -0.6085806194501845),
+        ("b", 0): (2, 5.0, -0.6085806194501845),
+        (None, 1): (1, 5.0, 1.5811388300841895),
+        ("a", 1): (2, 4.0, -1.2909944487358056),
+        ("b", 1): (2, 6.0, 0.0),
+    }
+    # NaN ranks above every number and ties with every other NaN (as
+    # Spark orders it); numpy's sort may rewrite a NaN's payload bits
+    nan = float("nan")
+    nans = [("a", [nan, 1.0]), ("b", [nan, 2.0]), ("b", [1.0, nan]), ("c", [nan, -0.0])]
+    expected = {
+        ("a", 0): (1, 3.0), ("b", 0): (2, 4.0), ("c", 0): (1, 3.0),
+        ("a", 1): (1, 2.0), ("b", 1): (2, 7.0), ("c", 1): (1, 1.0),
+    }
+    got = {
+        (r.label, r.pos): (r.n1, r.rank_sum)
+        for p in (1, 3)
+        for r in wilcoxon_scores(partitioned_df(_split(nans, p), _LABELLED), "label", "features").collect()
+    }
+    assert got == expected
+    # again without Spark, whose shuffle writes every NaN with one bit pattern
+    rb = pa.RecordBatch.from_arrays(
+        [pa.array([r[0] for r in nans]), pa.array([r[1] for r in nans])], names=["label", "features"]
+    )
+    out = pa.Table.from_batches(list(stats._rank_sums(stats._histogram_partials(iter([rb])))))
+    cols = (out.column(k).to_pylist() for k in ("label", "pos", "n1", "rank_sum"))
+    assert {(lab, pos): (n1, rs) for lab, pos, n1, rs in zip(*cols)} == expected
+
+
+def test_wilcoxon_holds_bounded_bins(monkeypatch):
+    """A task ships its histogram, and the combine scores the features it
+    holds completely, whenever ``_HELD_BINS`` bins are held; at a 1-bin
+    bound every such path runs (a task ships several rows per feature and
+    class) and the result still equals the per-cell oracle (no Spark
+    needed)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from modlyn_spark.oracle.pandas_oracle import oracle_wilcoxon
+    from modlyn_spark.scoring import stats
+
+    rng = np.random.default_rng(2)
+    n, d = 90, 5
+    labels = pd.Series(rng.choice(["a", "b", "c"], size=n))
+    X = rng.integers(0, 5, size=(n, d)).astype(np.float64)
+    batches = [
+        pa.RecordBatch.from_arrays(
+            [pa.array(labels[i : i + 15].tolist()), pa.array([x.tolist() for x in X[i : i + 15]])],
+            names=["label", "features"],
+        )
+        for i in range(0, n, 15)
+    ]
+    monkeypatch.setattr(stats, "_HELD_BINS", 1)
+    hist = pa.Table.from_batches(
+        [b for part in (batches[:1], batches[1:]) for b in stats._histogram_partials(iter(part))]
+    )
+    assert hist.num_rows > 2 * 3 * d  # rows of one (feature, class) shipped more than once
+    hist = hist.take(pc.sort_indices(hist, [("pos", "ascending")]))
+    got = (
+        pa.Table.from_batches(list(stats._rank_sums(iter(hist.to_batches(max_chunksize=2)))))
+        .to_pandas()
+        .sort_values(["label", "pos"])
+        .reset_index(drop=True)
+    )
+    exp = oracle_wilcoxon(X, labels).sort_values(["label", "pos"]).reset_index(drop=True)
+    assert got["pos"].tolist() == exp["pos"].tolist()
+    assert got["n1"].tolist() == exp["n1"].tolist()
+    assert np.allclose(got["rank_sum"], exp["rank_sum"])
+    assert np.allclose(got["z"], exp["z"], rtol=1e-9, atol=1e-9)
+
+
+def test_wilcoxon_shuffles_bins_not_cells(spark, partitioned_df):
+    """On a count matrix the shuffle carries value-histogram bins: far
+    fewer records than the n*d cells a per-cell plan shuffles."""
+    from modlyn_spark.scoring.stats import wilcoxon_scores
+
+    rng = np.random.default_rng(5)
+    n, d = 4000, 16
+    labels = rng.choice(["a", "b", "c"], size=n)
+    X = rng.poisson(2.0, size=(n, d)).astype(np.float64)
+    df = partitioned_df(
+        _split([(lab, x.tolist()) for lab, x in zip(labels.tolist(), X)], 4), _LABELLED
+    )
+    sc = spark.sparkContext
+    group = "test_wilcoxon_shuffles_bins_not_cells"
+    sc.setJobGroup(group, group)
+    try:
+        assert len(wilcoxon_scores(df, "label", "features").collect()) == 3 * d
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    stage_ids = {
+        sid for jid in tracker.getJobIdsForGroup(group) for sid in tracker.getJobInfo(jid).stageIds
+    }
+    stages = jsc.statusStore().stageList(
+        sc._jvm.java.util.ArrayList(), False, False,
+        sc._gateway.new_array(sc._jvm.double, 0), sc._jvm.java.util.ArrayList(),
+    )
+    records = sum(
+        stages.apply(i).shuffleWriteRecords()
+        for i in range(stages.size())
+        if stages.apply(i).stageId() in stage_ids
+    )
+    assert 0 < records < n * d / 10
+
+
 def test_wilcoxon_vs_scipy(spark, matrix_pdf):
     scipy_stats = pytest.importorskip("scipy.stats")
     from modlyn_spark.oracle.pandas_oracle import oracle_wilcoxon
@@ -213,7 +403,7 @@ def test_compare_scores_three_methods(spark, matrix_pdf):
 
     pdf, X, labels = matrix_pdf
     df = _spark_df(spark, pdf)
-    stats = class_feature_stats(df, "label", "features", strategy="partial")
+    stats = class_feature_stats(df, "label", "features")
     m_mean = stats.select(
         F.lit("mean").alias("method"), "label", "pos",
         F.col("mean").alias("score"),
