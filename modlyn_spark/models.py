@@ -21,10 +21,10 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from modlyn_spark.scoring.logreg import DistributedLogReg, assign_batches
 from modlyn_spark.scoring.metrics import classification_report
-from modlyn_spark.scoring.stats import label_encode
 
 # reference alias map, modlyn/models/_simple_logreg_model.py:142-150
 _DATASET_TYPE_ALIASES = {
@@ -61,8 +61,18 @@ class SimpleLogReg:
     ):
         self.label_column = label_column
         self.features_col = features_col
-        n_features = len(df.select(features_col).first()[0])
-        self.classes, _ = label_encode(df, label_column)
+        # ONE aggregate: feature width, sorted distinct labels (the
+        # label_encode class axis) and the null-label count
+        n_features, self.classes, n_null = df.agg(
+            F.max(F.size(features_col)),
+            F.sort_array(F.collect_set(label_column)),
+            F.count(F.when(F.col(label_column).isNull(), F.lit(1))),
+        ).first()
+        if n_null:
+            raise ValueError(
+                f"label column {label_column!r} holds {n_null} null label(s); "
+                "drop or fill them before training"
+            )
         self.feature_names = feature_names or [
             f"f{j:04d}" for j in range(n_features)
         ]
@@ -88,8 +98,6 @@ class SimpleLogReg:
         (distinct labels anti-joined with the broadcast class list, at most
         20 back — bounded even if a caller passes a near-unique column as
         the label by mistake)."""
-        from pyspark.sql import functions as F
-
         idx_col = f"{self.label_column}_idx"
         mapping = F.create_map(
             *[x for i, c in enumerate(self.classes) for x in (F.lit(c), F.lit(i))]

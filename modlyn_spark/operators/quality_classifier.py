@@ -18,9 +18,11 @@ Two pieces, both built on machinery the engine already owns:
   portability price — it is what lets DuckDB replay the exact vector; a
   deployment that does not need cross-engine replay can swap
   ``_portable_slot`` for xxhash and keep every other line.
-- training/scoring: ``scoring/logreg.DistributedLogReg`` unchanged — the
-  mini-batch Adam trainer the north-star pipeline already gates; the
-  classifier is just that trainer pointed at hashed text features.
+- training/scoring: ``scoring/logreg.DistributedLogReg``, the one-model
+  view of the engine's stacked mini-batch Adam trainer that the
+  north-star pipeline already gates; the classifier is just that trainer
+  pointed at hashed text features, read back through its ``W`` / ``b`` /
+  ``classes``.
 
 Scale: featurization is a map stage; training moves one k x (dim+1)
 gradient partial per step from the step's single task; scoring is one

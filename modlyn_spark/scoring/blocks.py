@@ -1,10 +1,12 @@
-"""Per-batch block layout shared by the mini-batch trainers.
+"""Per-batch block layout of the mini-batch trainer.
 
-``DistributedLogReg``, ``RegPathLogReg`` and ``CVLogReg`` all take one
-gradient step per mini-batch. Filtering a cached table by ``batch_id``
-still launches one task per cached partition on every step, so a step
-used to cost a full-width Python stage of which all but one task read
-nothing. This layout makes each step one Spark job of ONE task:
+The engine's one stacked softmax trainer (``scoring/logreg._SoftmaxStack``,
+behind ``DistributedLogReg``, ``RegPathLogReg`` and ``CVLogReg``) takes one
+gradient step per mini-batch for all its models at once. Filtering a
+cached table by ``batch_id`` still launches one task per cached partition
+on every step, so a step used to cost a full-width Python stage of which
+all but one task read nothing. This layout makes each step one Spark job
+of ONE task:
 
 1. the training columns are hash-repartitioned once, in the JVM, into
    ``n_batches`` partitions such that partition ``b`` holds batch ``b``
@@ -18,8 +20,9 @@ nothing. This layout makes each step one Spark job of ONE task:
    byte arrays, cached MEMORY_AND_DISK; the batches the first steps read
    are packed up front, in parallel, any other on first use;
 3. a step runs ``SparkContext.runJob`` on partition ``bid``; the task
-   streams the batch's blocks, sums their gradient partials in block
-   order and ships back one partial as numpy arrays.
+   streams the batch's blocks (with their fold ids when the trainer masks
+   rows per model), sums their gradient partials in block order and ships
+   back one partial as numpy arrays.
 
 Determinism: rows reach the pack in the canonical order and blocks are
 cut at fixed row counts, so a batch's blocks, and the order their

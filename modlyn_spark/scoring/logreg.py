@@ -2,29 +2,43 @@
 
 Reproduces modlyn's SimpleLogReg inner loop (reference:
 modlyn/models/_simple_logreg_model.py:70-83 training_step,
-:105-108 Adam(lr, weight_decay)) over a Spark DataFrame:
+:105-108 Adam(lr, weight_decay)) over a Spark DataFrame.
+
+One trainer serves every logreg in the engine: ``_SoftmaxStack`` trains M
+softmax models of shape (k, d) over one mini-batch stream. Model m has its
+own weight decay and, when a fold column is given, sees only the rows with
+``fold != m``. ``DistributedLogReg`` is the stack with M = 1;
+``RegPathLogReg`` (scoring/regpath.py) stacks one model per weight decay
+and ``CVLogReg`` (scoring/cv.py) one model per held-out fold.
 
 - the training table is laid out once as cached numpy blocks, one
   partition per deterministic mini-batch (``scoring/blocks.py``: one JVM
   shuffle and sort, one Arrow pack per batch, blocks of at most 32 MB);
-- each step ships the current (W, b) to the ONE task holding the step's
-  batch, which computes the gradient sums of each block with numpy GEMMs
-  (the M1 forward pass) in float64 and returns their sum in block order —
-  one Spark job of one task per step;
+- each step ships the stacked (W, b) to the ONE task holding the step's
+  batch; per block, ``_softmax_sums`` computes the logits of all M models
+  with one GEMM and their gradient sums with a second (the M1 forward
+  pass), in float64, and the task returns their sum in block order — one
+  Spark job of one task per step, however many models the stack holds;
 - the Adam update (torch parity: L2 weight decay folded into the gradient,
-  bias-corrected moments) runs on the driver — the model (k x d) is tiny next
-  to the data, the classic parameter-server-on-driver layout.
+  bias-corrected moments) runs on the driver, vectorized over the stack
+  with one step count and one weight decay per model (``_Adam``). A model
+  that saw no row of the batch neither updates nor counts the step. The
+  models are tiny next to the data: the classic parameter-server-on-driver
+  layout.
 
 Determinism: batch composition is a pure function of the row key
 (md5-derived, replicable in pandas/DuckDB), each batch's rows are packed in
 a canonical order and each step has exactly one partial, so two runs at
 different parallelism produce bit-identical weights (the N-vs-4N-cluster
-invariant).
+invariant). Model m of a stack follows the same sequence of updates as a
+standalone fit at its weight decay on its visible rows (allclose; the
+stacked GEMMs may sum in another order).
 
 Scale notes: a step reads only its own batch's cached blocks; the other
 partitions of the cache are not touched. Weights move driver<->executor
-once per step: O(k*d) bytes, independent of data size. A step's numpy work
-runs on one core, which suits many modest mini-batches; measured on a
+once per step: O(M*k*d) bytes, independent of data size; an extra model
+costs FLOPs on a block already in cache, not another scan. A step's numpy
+work runs on one core, which suits many modest mini-batches; measured on a
 4-core host, 4 batches of 50k x 256 rows take ~0.2-0.3 s per step (the
 partition-parallel scan it replaced: ~0.65 s) after ~2 s more set-up.
 """
@@ -39,7 +53,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-from modlyn_spark.oracle.pandas_oracle import AdamState
 from modlyn_spark.scoring.blocks import BatchBlocks
 
 
@@ -70,26 +83,161 @@ def assign_batches_pandas(
     )
 
 
-def _grad_sums(W: np.ndarray, b: np.ndarray):
-    """Executor function of one step: a batch block -> unnormalized
-    softmax cross-entropy sums (gW, gb, loss_sum, n), turned into the
-    batch-mean gradient on the driver."""
+def _softmax_sums(W: np.ndarray, b: np.ndarray, M: int, k: int):
+    """Executor function of one step, given the (M*k, d) weight stack ``W``
+    and (M*k,) bias stack ``b``: a batch block -> the unnormalized softmax
+    cross-entropy sums of all M models (gW (M*k, d), gb (M, k), loss (M,),
+    n (M,)), turned into batch means on the driver. With fold ids, row i
+    counts for model m only if ``fold_i != m``; without, every row counts."""
 
-    def grad(X: np.ndarray, y: np.ndarray, _fold) -> tuple:
-        rows = np.arange(len(X))
-        logits = X @ W.T + b
-        logits -= logits.max(axis=1, keepdims=True)
+    def grad(X: np.ndarray, y: np.ndarray, fold) -> tuple:
+        m = len(X)
+        rows = np.arange(m)
+        # ONE GEMM for all M models: (m, M, k)
+        logits = (X @ W.T + b).reshape(m, M, k)
+        logits -= logits.max(axis=2, keepdims=True)
         e = np.exp(logits)
-        p = e / e.sum(axis=1, keepdims=True)
-        loss_sum = -np.log(np.clip(p[rows, y], 1e-30, None)).sum()
-        p[rows, y] -= 1.0
-        return p.T @ X, p.sum(axis=0), float(loss_sum), len(X)
+        p = e / e.sum(axis=2, keepdims=True)
+        # advanced indices split by a slice -> (m, M): the true-class
+        # probability per row per model
+        loss = -np.log(np.clip(p[rows, :, y], 1e-30, None))
+        p[rows, :, y] -= 1.0
+        if fold is None:
+            n = np.full(M, m)
+        else:
+            vis = fold[:, None] != np.arange(M)[None, :]  # (m, M)
+            loss *= vis
+            p *= vis[:, :, None]
+            n = vis.sum(axis=0)
+        # ONE GEMM for all M gradient blocks: (M*k, d)
+        return p.reshape(m, M * k).T @ X, p.sum(axis=0), loss.sum(axis=0), n
 
     return grad
 
 
+class _Adam:
+    """torch.optim.Adam over a stack of M models: L2 weight decay added to
+    the gradient (not AdamW), bias-corrected moments, betas=(0.9, 0.999),
+    eps=1e-8 (reference optimizer: modlyn/models/_simple_logreg_model.py:
+    105-108), with one weight decay and one step count per model."""
+
+    def __init__(self, shapes, lr, weight_decays, betas=(0.9, 0.999), eps=1e-8):
+        self.lr, self.betas, self.eps = lr, betas, eps
+        self.wd = np.asarray(weight_decays, dtype=np.float64)
+        self.t = np.zeros(len(self.wd), dtype=np.int64)
+        self.m = [np.zeros(s) for s in shapes]
+        self.v = [np.zeros(s) for s in shapes]
+
+    def step(self, params: list, grads: list, live: np.ndarray) -> list:
+        """New copies of ``params`` (each stacked on axis 0) after one step
+        of the models ``live`` (indices) with their mean gradients
+        ``grads`` (stacked over ``live``). The other models keep their
+        parameters, moments and step count."""
+        b1, b2 = self.betas
+        self.t[live] += 1
+        out = []
+        for p, g, m, v in zip(params, grads, self.m, self.v):
+            per = (-1,) + (1,) * (p.ndim - 1)  # one value per model
+            g = g + self.wd[live].reshape(per) * p[live]
+            m[live] = b1 * m[live] + (1 - b1) * g
+            v[live] = b2 * v[live] + (1 - b2) * g * g
+            mh = m[live] / (1 - b1 ** self.t[live]).reshape(per)
+            vh = v[live] / (1 - b2 ** self.t[live]).reshape(per)
+            p = p.copy()
+            p[live] -= self.lr * mh / (np.sqrt(vh) + self.eps)
+            out.append(p)
+        return out
+
+
+class _SoftmaxStack:
+    """M softmax regressions trained over one mini-batch stream: ``W``
+    (M, k, d), ``b`` (M, k) and ``losses[m]``, model m's per-step mean
+    batch loss. ``lead`` maps a column name to one value per model; it
+    leads the long-form weights of a multi-model stack."""
+
+    def __init__(self, n_features, classes, learning_rate, weight_decays, lead=None):
+        self.d = n_features
+        self.classes = list(classes)
+        self.k = len(self.classes)
+        M = len(weight_decays)
+        self.W = np.zeros((M, self.k, self.d))
+        self.b = np.zeros((M, self.k))
+        self._adam = _Adam([self.W.shape, self.b.shape], learning_rate, weight_decays)
+        self.losses: list[list[float]] = [[] for _ in range(M)]
+        self._lead = lead or {}
+
+    def _train(
+        self, df: DataFrame, *, max_steps: int, max_epochs: int, epoch_callback=None,
+        allow_empty_cells: bool = False, **layout,
+    ):
+        """Fit every model over the ``BatchBlocks(df, **layout)`` batches:
+        per step one single-task job returns the stack's gradient sums and
+        ``_Adam`` steps every model that saw a row of the batch. A model
+        that saw none raises unless ``allow_empty_cells``."""
+        blocks = BatchBlocks(df, n_features=self.d, **layout)
+        M, k, d = self.W.shape
+
+        def apply(bid: int, part: tuple) -> None:
+            gW, gb, loss, n = part
+            live = np.flatnonzero(n)
+            if len(live) < M and not allow_empty_cells:
+                raise ValueError(
+                    f"batch {bid} has no rows visible to fold model(s) "
+                    f"{np.flatnonzero(n == 0).tolist()}; standalone-parity breaks — "
+                    "pass allow_empty_cells=True to skip their update"
+                )
+            nl = n[live]
+            grads = [gW.reshape(M, k, d)[live] / nl[:, None, None], gb[live] / nl[:, None]]
+            self.W, self.b = self._adam.step([self.W, self.b], grads, live)
+            for m in live:
+                self.losses[m].append(float(loss[m] / n[m]))
+
+        blocks.train(
+            lambda: _softmax_sums(self.W.reshape(M * k, d), self.b.reshape(M * k), M, k),
+            apply, max_steps=max_steps, max_epochs=max_epochs, epoch_callback=epoch_callback,
+        )
+        return self
+
+    def weights_long(self, spark) -> DataFrame:
+        """Long-form (label, pos, weight) DataFrame for relational
+        consumers, led by the stack's model column if it has one."""
+        M, k, d = self.W.shape
+        rows = pd.DataFrame(
+            {
+                **{c: np.repeat(v, k * d) for c, v in self._lead.items()},
+                "label": np.tile(np.repeat([str(c) for c in self.classes], d), M),
+                "pos": np.tile(np.arange(d, dtype=np.int64), M * k),
+                "weight": self.W.ravel(),
+            }
+        )
+        return spark.createDataFrame(rows)
+
+    def _predict(self, df: DataFrame, features_col: str, out_col: str, fold_col=None):
+        """argmax-class prediction (reference M3) as one Arrow map with the
+        stacked weights in the closure: row i is scored by model 0, or by
+        model ``fold_i`` when ``fold_col`` is given."""
+        M, k, d = self.W.shape
+        W, b = self.W.reshape(M * k, d), self.b.reshape(M * k)
+        schema = StructType(df.schema.fields + [StructField(out_col, LongType(), False)])
+
+        def pred(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            for pdf in batches:
+                if pdf.empty:
+                    continue
+                X = np.stack(pdf[features_col].to_numpy()).astype(np.float64)
+                own = 0 if fold_col is None else pdf[fold_col].to_numpy(dtype=np.int64)
+                logits = (X @ W.T + b).reshape(len(X), M, k)
+                pdf = pdf.copy()
+                pdf[out_col] = np.argmax(logits[np.arange(len(X)), own], axis=1)
+                yield pdf
+
+        return df.mapInPandas(pred, schema=schema)
+
+
 class DistributedLogReg:
-    """Mini-batch softmax regression over a Spark DataFrame.
+    """Mini-batch softmax regression over a Spark DataFrame: the one-model
+    view of ``_SoftmaxStack`` (``W`` (k, d), ``b`` (k,), ``losses`` one
+    float per step).
 
     Args mirror the reference defaults (modlyn/models/_simple_logreg_model.py:
     35-38 lr=1e-2 wd=1e-2; :120-123 max_epochs=4 max_steps=3000).
@@ -102,14 +250,28 @@ class DistributedLogReg:
         learning_rate: float = 1e-2,
         weight_decay: float = 1e-2,
     ):
-        self.d = n_features
-        self.classes = list(classes)
-        self.k = len(self.classes)
-        self.W = np.zeros((self.k, self.d))
-        self.b = np.zeros(self.k)
-        self._optW = AdamState(self.W.shape, learning_rate, weight_decay)
-        self._optb = AdamState(self.b.shape, learning_rate, weight_decay)
-        self.losses: list[float] = []
+        self._stack = _SoftmaxStack(n_features, classes, learning_rate, [weight_decay])
+        self.d, self.classes, self.k = n_features, self._stack.classes, self._stack.k
+
+    @property
+    def W(self) -> np.ndarray:
+        return self._stack.W[0]
+
+    @W.setter
+    def W(self, value) -> None:
+        self._stack.W = np.asarray(value, dtype=np.float64)[None]
+
+    @property
+    def b(self) -> np.ndarray:
+        return self._stack.b[0]
+
+    @b.setter
+    def b(self, value) -> None:
+        self._stack.b = np.asarray(value, dtype=np.float64)[None]
+
+    @property
+    def losses(self) -> list[float]:
+        return self._stack.losses[0]
 
     def fit(
         self,
@@ -139,26 +301,9 @@ class DistributedLogReg:
         (_simple_logreg_model.py:120-123) so direct engine callers train to
         the same budget as the facade.
         """
-        blocks = BatchBlocks(
-            df,
-            n_features=self.d,
-            features_col=features_col,
-            label_idx_col=label_idx_col,
-            batch_col=batch_col,
-            n_batches=n_batches,
-        )
-
-        def apply(_bid: int, part: tuple) -> None:
-            gW, gb, loss_sum, n = part
-            self.W = self._optW.step(self.W, gW / n)
-            self.b = self._optb.step(self.b, gb / n)
-            self.losses.append(loss_sum / n)
-
-        blocks.train(
-            lambda: _grad_sums(self.W, self.b),
-            apply,
-            max_steps=max_steps,
-            max_epochs=max_epochs,
+        self._stack._train(
+            df, features_col=features_col, label_idx_col=label_idx_col, batch_col=batch_col,
+            n_batches=n_batches, max_steps=max_steps, max_epochs=max_epochs,
             epoch_callback=epoch_callback,
         )
         return self
@@ -195,32 +340,10 @@ class DistributedLogReg:
 
     def weights_long(self, spark) -> DataFrame:
         """Long-form (label, pos, weight) DataFrame for relational consumers."""
-        rows = pd.DataFrame(
-            {
-                "label": np.repeat([str(c) for c in self.classes], self.d),
-                "pos": np.tile(np.arange(self.d, dtype=np.int64), self.k),
-                "weight": self.W.ravel(),
-            }
-        )
-        return spark.createDataFrame(rows)
+        return self._stack.weights_long(spark)
 
     def predict_df(
         self, df: DataFrame, features_col: str = "features", out_col: str = "pred_idx"
     ) -> DataFrame:
         """argmax-class prediction (reference M3) as a vectorized map."""
-        W, b = self.W, self.b
-        fc = features_col
-        schema = StructType(
-            df.schema.fields + [StructField(out_col, LongType(), False)]
-        )
-
-        def pred(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                X = np.stack(pdf[fc].to_numpy()).astype(np.float64)
-                pdf = pdf.copy()
-                pdf[out_col] = np.argmax(X @ W.T + b, axis=1)
-                yield pdf
-
-        return df.mapInPandas(pred, schema=schema)
+        return self._stack._predict(df, features_col, out_col)

@@ -8,20 +8,17 @@ value and re-reading the full dataset each time). At 10^12-row scale the
 data pass dominates, so the sweep must amortize it: this module trains L
 weight-decay values SIMULTANEOUSLY over the same mini-batch stream.
 
-Physical design (one Spark job of one task per step, like
-DistributedLogReg, over the same per-batch block layout,
-``scoring/blocks.py``):
+``RegPathLogReg`` is the engine's one stacked trainer
+(``scoring/logreg._SoftmaxStack``) with one model per weight decay:
 
-- the L models' weights stack into one (L*k, d) matrix; the step's task
-  computes logits for ALL models with ONE GEMM ``X @ W_all.T`` per
-  block of the batch, and all L gradient blocks with ONE GEMM ``P_all.T @ X`` —
-  the marginal cost of an extra lambda is FLOPs on data already in
-  cache, not another scan of the table;
-- the step's one partial (L*k*d gradient, L*k bias gradient, L losses)
-  comes back to the driver as numpy arrays;
-- the driver keeps L independent Adam states (weight decay folds into
-  the update there, torch parity), so lambda l's trajectory is
-  numerically the SAME sequence of updates a standalone
+- each step is one Spark job of one task over the step's batch blocks
+  (``scoring/blocks.py``); the task computes all L models' logits with
+  ONE GEMM per block and all their gradient blocks with a second — the
+  marginal cost of an extra lambda is FLOPs on data already in cache, not
+  another scan of the table;
+- the driver's vectorized Adam keeps one weight decay per model (folded
+  into the update, torch parity), so lambda l's trajectory is numerically
+  the SAME sequence of updates a standalone
   ``DistributedLogReg(weight_decay=lambda_l)`` would produce — the sweep
   is a fusion, not an approximation. Tests pin allclose equality per
   lambda against both the standalone trainer and the independent numpy
@@ -37,44 +34,19 @@ each lambda) are pure column expressions over the long-form output.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from modlyn_spark.oracle.pandas_oracle import AdamState
-from modlyn_spark.scoring.blocks import BatchBlocks
+from modlyn_spark.scoring.logreg import _SoftmaxStack
 
 
-def _path_grad_sums(Wf: np.ndarray, bf: np.ndarray, L: int, k: int):
-    """Executor function of one step: a batch block -> gradient sums of
-    all L models from one traversal of the block, given the (L*k, d)
-    weight stack ``Wf`` and (L*k,) bias stack ``bf``."""
-
-    def grad(X: np.ndarray, y: np.ndarray, _fold) -> tuple:
-        m = len(X)
-        # ONE GEMM for all L models: (m, L*k)
-        logits = (X @ Wf.T + bf).reshape(m, L, k)
-        logits -= logits.max(axis=2, keepdims=True)
-        e = np.exp(logits)
-        p = e / e.sum(axis=2, keepdims=True)  # (m, L, k)
-        rows = np.arange(m)
-        # advanced indices split by a slice -> (m, L): the true-class
-        # probability per row per lambda
-        loss_sum = -np.log(np.clip(p[rows, :, y], 1e-30, None)).sum(axis=0)
-        p[rows, :, y] -= 1.0
-        # ONE GEMM for all L gradient blocks: (L*k, d)
-        return p.reshape(m, L * k).T @ X, p.sum(axis=0), loss_sum, m
-
-    return grad
-
-
-class RegPathLogReg:
+class RegPathLogReg(_SoftmaxStack):
     """Mini-batch softmax regression at L weight-decay values in one pass.
 
     Same defaults as the reference optimizer (lr=1e-2,
     modlyn/models/_simple_logreg_model.py:105-108); ``lambdas`` sweeps the
-    weight_decay axis the reference hard-codes at 1e-2.
+    weight_decay axis the reference hard-codes at 1e-2. ``W`` is (L, k, d),
+    ``b`` (L, k) and ``losses[l]`` the per-step mean batch loss for lambda l.
     """
 
     def __init__(
@@ -86,21 +58,11 @@ class RegPathLogReg:
     ):
         if not lambdas:
             raise ValueError("lambdas must be non-empty")
-        self.d = n_features
-        self.classes = list(classes)
-        self.k = len(self.classes)
         self.lambdas = [float(x) for x in lambdas]
         self.L = len(self.lambdas)
-        self.W = np.zeros((self.L, self.k, self.d))
-        self.b = np.zeros((self.L, self.k))
-        self._optW = [
-            AdamState((self.k, self.d), learning_rate, lam) for lam in self.lambdas
-        ]
-        self._optb = [
-            AdamState((self.k,), learning_rate, lam) for lam in self.lambdas
-        ]
-        # losses[l] = per-step mean batch loss for lambda l
-        self.losses: list[list[float]] = [[] for _ in range(self.L)]
+        super().__init__(
+            n_features, classes, learning_rate, self.lambdas, {"lam": self.lambdas}
+        )
 
     def fit(
         self,
@@ -118,54 +80,15 @@ class RegPathLogReg:
         gradient from a single traversal of the step's batch block.
 
         Batch layout, batch order and step accounting are
-        DistributedLogReg.fit's (the shared ``BatchBlocks``), so
-        per-lambda results are allclose to L standalone fits at the same
-        config.
+        DistributedLogReg.fit's (the same stacked trainer), so per-lambda
+        results are allclose to L standalone fits at the same config.
         """
-        blocks = BatchBlocks(
-            df,
-            n_features=self.d,
-            features_col=features_col,
-            label_idx_col=label_idx_col,
-            batch_col=batch_col,
-            n_batches=n_batches,
+        return self._train(
+            df, features_col=features_col, label_idx_col=label_idx_col, batch_col=batch_col,
+            n_batches=n_batches, max_steps=max_steps, max_epochs=max_epochs,
         )
-        k, d, L = self.k, self.d, self.L
 
-        def apply(_bid: int, part: tuple) -> None:
-            gW, gb, loss_sum, n = part
-            gW3 = (gW / n).reshape(L, k, d)
-            gb = gb / n
-            for li in range(L):
-                self.W[li] = self._optW[li].step(self.W[li], gW3[li])
-                self.b[li] = self._optb[li].step(self.b[li], gb[li])
-                self.losses[li].append(float(loss_sum[li] / n))
-
-        blocks.train(
-            lambda: _path_grad_sums(
-                self.W.reshape(L * k, d), self.b.reshape(L * k), L, k
-            ),
-            apply,
-            max_steps=max_steps,
-            max_epochs=max_epochs,
-        )
-        return self
-
-    # -- outputs -------------------------------------------------------------
-
-    def weights_long(self, spark) -> DataFrame:
-        """Long-form (lam, label, pos, weight) across the whole path."""
-        rows = pd.DataFrame(
-            {
-                "lam": np.repeat(self.lambdas, self.k * self.d),
-                "label": np.tile(
-                    np.repeat([str(c) for c in self.classes], self.d), self.L
-                ),
-                "pos": np.tile(np.arange(self.d, dtype=np.int64), self.L * self.k),
-                "weight": self.W.ravel(),
-            }
-        )
-        return spark.createDataFrame(rows)
+    # -- outputs (``weights_long``: (lam, label, pos, weight), inherited) ----
 
     def selection_path(self, spark, threshold: float) -> DataFrame:
         """Per (lam, pos): max |weight| over classes + survives flag —

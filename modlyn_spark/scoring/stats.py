@@ -13,8 +13,9 @@ plus its partials, never its whole partition.
 
 ``class_feature_stats``
     Each task emits per-class moment partials (n, sum[d], sumsq[d]): n_tasks
-    x n_classes tiny rows. A ``groupBy(label)`` combine turns them into long
-    form. The wide shuffle moves only moment vectors, never rows.
+    x n_classes tiny rows. One exchange on ``label`` and an Arrow combine
+    turn them into long form; a NaN moment stays NaN. The wide shuffle
+    moves only moment vectors, never rows.
 
 ``wilcoxon_scores``
     Each task emits its value histogram: for each (feature, class) the
@@ -35,16 +36,8 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from modlyn_spark.scoring.blocks import _dense
 
@@ -135,7 +128,8 @@ def class_feature_stats(
     Returns DataFrame(label, pos, n, mean, var_pop) — one row per
     (class, feature position). ``var_pop`` is the population variance
     (matches numpy's default ddof=0, which the oracle and scanpy-style
-    scoring use).
+    scoring use). A NaN value (also a null value inside an array) makes its
+    class's ``mean`` and ``var_pop`` NaN, never null.
     """
 
     def partials(batches: Iterator) -> Iterator:
@@ -167,37 +161,41 @@ def class_feature_stats(
                 names=["label", "n", "s", "ss"],
             )
 
-    combine_schema = StructType(
-        [
-            StructField("label", StringType()),
-            StructField("pos", LongType()),
-            StructField("n", LongType()),
-            StructField("mean", DoubleType()),
-            StructField("var_pop", DoubleType()),
-        ]
-    )
-
-    def combine(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        n = int(pdf["n"].sum())
-        s = np.sum(np.stack(pdf["s"].to_numpy()), axis=0)
-        ss = np.sum(np.stack(pdf["ss"].to_numpy()), axis=0)
-        mean = s / n
-        var = np.maximum(ss / n - mean * mean, 0.0)
-        d = len(mean)
-        return pd.DataFrame(
-            {
-                "label": key[0],
-                "pos": np.arange(d, dtype=np.int64),
-                "n": n,
-                "mean": mean,
-                "var_pop": var,
-            }
-        )
-
     p = df.select(F.col(label_col).cast("string"), features_col).mapInArrow(
         partials, "label string, n long, s array<double>, ss array<double>"
     )
-    return p.groupBy("label").applyInPandas(combine, schema=combine_schema)
+    return p.repartition("label").mapInArrow(
+        _combine_moments, "label string, pos long, n long, mean double, var_pop double"
+    )
+
+
+def _combine_moments(batches: Iterator) -> Iterator:
+    """mapInArrow body over one exchange partition of moment partials: sum
+    each label's (n, s, ss) and emit its long-form (label, pos, n, mean,
+    var_pop) rows. Built in Arrow from numpy, a NaN moment stays NaN (a
+    pandas round trip would turn it into null)."""
+    import pyarrow as pa
+
+    parts: dict = {}  # label -> its partials, one (n, s, ss) per task
+    for rb in batches:
+        cols = [rb.column(i).to_numpy(zero_copy_only=False) for i in (1, 2, 3)]
+        for label, *moments in zip(rb.column(0).to_pylist(), *cols):
+            parts.setdefault(label, []).append(moments)
+    for label, rows in parts.items():
+        n, s, ss = (np.sum(np.stack(x), axis=0) for x in zip(*rows))
+        mean = s / n
+        var = np.maximum(ss / n - mean * mean, 0.0)
+        d = len(mean)
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array([label] * d, pa.string()),
+                pa.array(np.arange(d, dtype=np.int64)),
+                pa.array(np.full(d, n, dtype=np.int64)),
+                pa.array(mean),
+                pa.array(var),
+            ],
+            names=["label", "pos", "n", "mean", "var_pop"],
+        )
 
 
 def _bits(x: np.ndarray) -> np.ndarray:

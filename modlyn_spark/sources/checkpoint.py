@@ -222,35 +222,26 @@ def write_checkpointed(
     ).collect()
     mdir = _manifest_dir(path)
     now = time.time()
-    for r in metrics:
+    got = {
+        int(r[_BUCKET]): (int(r["rows"]), int(r["content_hash"] or 0))
+        for r in metrics
+    }
+    # a bucket that produced zero rows still needs a manifest (else it would
+    # be recomputed forever)
+    for b in todo_buckets:
+        rows, content_hash = got.get(b, (0, 0))
         rec = {
-            "bucket": int(r[_BUCKET]),
-            "rows": int(r["rows"]),
-            "content_hash": int(r["content_hash"]) if r["content_hash"] is not None else 0,
+            "bucket": b,
+            "rows": rows,
+            "content_hash": content_hash,
             "committed_at": now,
             "lineage": lineage,
             "key_cols": key_cols,
             "n_buckets": n_buckets,
             "hash": hash_family,
         }
-        _fs_write_json_atomic(spark, mdir, f"bucket-{rec['bucket']}.json", rec)
-        result["rows_written"] += rec["rows"]
-    # buckets that produced zero rows still need a manifest (else they'd be
-    # recomputed forever)
-    seen = {int(r[_BUCKET]) for r in metrics}
-    for b in todo_buckets:
-        if b not in seen:
-            rec = {
-                "bucket": b,
-                "rows": 0,
-                "content_hash": 0,
-                "committed_at": now,
-                "lineage": lineage,
-                "key_cols": key_cols,
-                "n_buckets": n_buckets,
-                "hash": hash_family,
-            }
-            _fs_write_json_atomic(spark, mdir, f"bucket-{b}.json", rec)
+        _fs_write_json_atomic(spark, mdir, f"bucket-{b}.json", rec)
+        result["rows_written"] += rows
     return result
 
 

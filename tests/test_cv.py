@@ -139,6 +139,24 @@ def test_empty_cell_raises(spark, cv_data):
     )
     assert len(cv.losses[0]) == 3  # fold-0 model skipped batch 3
     assert len(cv.losses[1]) == 4
+    # a skipped model does not count the step: over two epochs fold model 0
+    # must equal the numpy twin on its visible rows, whose batch 3 is empty
+    # (a step count shared by the stack would bias-correct epoch 2 wrongly)
+    pdf, X, labels, _, _ = cv_data
+    order = pdf.sort_values("row_id")
+    bids = assign_batches_pandas(order, ["row_id"], 4)
+    folds = np.where(bids == 3, 0, assign_folds_pandas(order, ["row_id"], NF))
+    cv2 = CVLogReg(D, classes, NF).fit(
+        rigged, max_steps=12, max_epochs=2, n_batches=4, allow_empty_cells=True
+    )
+    keep = folds != 0
+    exp_w, exp_losses = oracle_logreg(
+        X[keep], labels[keep], bids[keep], max_steps=12, n_epochs=2
+    )
+    exp_W = exp_w.pivot(index="label", columns="pos", values="weight").values
+    assert len(cv2.losses[0]) == 6
+    assert np.allclose(cv2.W[0], exp_W, rtol=1e-6, atol=1e-9)
+    assert np.allclose(cv2.losses[0], exp_losses, rtol=1e-6)
 
 
 def test_n_folds_guard():

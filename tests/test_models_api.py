@@ -115,3 +115,31 @@ def test_label_alignment_on_subset_frames(spark, adata_like):
     alien = adata_like.withColumn("cell_type", F.lit("delta"))
     with pytest.raises(ValueError, match="absent from the model's classes"):
         model._encode_labels(alien)
+
+
+def test_constructor_is_one_aggregate(spark, adata_like):
+    """The constructor reads width, classes and null labels in ONE aggregate
+    (at most 3 Spark jobs, adaptive execution included)."""
+    sc = spark.sparkContext
+    group = "simple-logreg-init"
+    sc.setJobGroup(group, group)
+    try:
+        model = SimpleLogReg(adata_like, label_column="cell_type")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 1 <= len(jobs) <= 3, jobs
+    assert model.classes == ["alpha", "beta", "gamma"]
+    assert len(model.feature_names) == 8
+
+
+def test_null_label_raises_at_construction(spark, adata_like):
+    from pyspark.sql import functions as F
+
+    holed = adata_like.withColumn(
+        "cell_type",
+        F.when(F.col("obs_id") == 5, F.lit(None)).otherwise(F.col("cell_type")),
+    )
+    with pytest.raises(ValueError, match="'cell_type'"):
+        SimpleLogReg(holed, label_column="cell_type")

@@ -110,6 +110,30 @@ def test_f_statistic(spark, matrix_pdf):
     assert top == set(range(K))
 
 
+def test_class_feature_stats_keeps_nan(spark):
+    """A NaN value gives its class a NaN mean and var_pop, not null, so the
+    F-statistic of that feature is NaN instead of a finite F over the other
+    classes; the other feature is untouched."""
+    rows = [
+        ("a", [float("nan"), 1.0]),
+        ("a", [1.0, 2.0]),
+        ("b", [2.0, 2.0]),
+        ("b", [3.0, 5.0]),
+        ("c", [5.0, 1.0]),
+        ("c", [6.0, 0.0]),
+    ]
+    df = spark.createDataFrame(rows, "label string, features array<double>")
+    stats = class_feature_stats(df, "label", "features")
+    got = {(r["label"], r["pos"]): r for r in stats.collect()}
+    a0 = got[("a", 0)]
+    assert a0["mean"] is not None and np.isnan(a0["mean"])
+    assert a0["var_pop"] is not None and np.isnan(a0["var_pop"])
+    assert got[("b", 0)]["mean"] == 2.5
+    f = {r["pos"]: r["f_stat"] for r in f_statistic(stats).collect()}
+    assert np.isnan(f[0])
+    assert f[1] == pytest.approx(28 / 11, rel=1e-12)
+
+
 def test_label_encode_sklearn_parity(spark, matrix_pdf):
     pdf, _, labels = matrix_pdf
     df = _spark_df(spark, pdf)
