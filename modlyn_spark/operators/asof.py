@@ -12,9 +12,9 @@ AnnData count matrix is already aligned to its labels positionally
 is the distributed substrate that produces that alignment from raw
 event-state tables (BASELINE.json north_rule).
 
-Three physical strategies, all pure PySpark, built on two shared kernels:
+Two physical plans, both pure PySpark:
 
-``union`` — :func:`carry_forward`
+``union`` (also accepted as ``merge``) — :func:`carry_forward`
     Single-shuffle, whole-stage-codegen path. The probe side and N state
     tables are unioned with a side tag and one nullable payload struct per
     table (non-null exactly on that table's rows, so
@@ -25,28 +25,36 @@ Three physical strategies, all pure PySpark, built on two shared kernels:
     one Sort, one Window however many tables. ``asof_join`` calls it with
     one table; ``training_set.build_training_set`` with N.
 
-``merge`` — :func:`_merge_sorted` per cogrouped bucket
-    The explicit merge-scan recipe: both sides are co-bucketed by a hash of
-    the key (optionally salted for hot keys), cogrouped, and merged per
-    bucket with ``pandas.merge_asof``. Hot keys (detected or supplied) are
-    salted: the left side's hot rows are scattered across ``salt_factor``
-    shards by a hash of their timestamp, and the right side's hot-key
-    history is replicated into every shard, so no single task serializes a
-    skewed entity.
+    Skew split: with ``hot_keys`` or ``hot_key_threshold``, one aggregate
+    over the state side (:func:`_hot_key_bounds`) gives every hot key
+    ``salt_factor - 1`` time boundaries from ``percentile_approx``, so its
+    ``salt_factor`` time ranges hold about equal state rows. That small
+    frame is broadcast-joined (null-safe) onto the union, every row gets a
+    range id (cold keys 0) and the window partitions by (key, range), so a
+    hot entity's history is cut over several tasks and nothing is
+    replicated. No carry-in rows are needed: ``percentile_approx`` returns
+    values of its input, so every boundary is the timestamp of a state row
+    of that key, and range ``r`` opens with that state. A state row's
+    range is the number of boundaries ``<=`` its ts; a probe's is the
+    number of boundaries ``<=`` (``<`` when ``allow_exact_matches=False``)
+    its ts. Every probe in range ``r >= 1`` therefore has the opening
+    state at (or strictly before) its own ts inside its range, and the
+    latest such state is the global answer. Rows tied on ts share a range.
+    A state ts type whose values ``percentile_approx`` cannot return
+    unchanged (decimal) is not split (:func:`_exact_ts`).
 
 ``broadcast`` — :func:`_merge_sorted` per left Arrow batch
     Zero-shuffle path for a small right side: the right table is collected,
     sorted once, broadcast to every executor, and each left batch is merged
-    against it with ``mapInPandas``. The left side is never shuffled.
-
-Both pandas paths carry the matched right timestamp internally and apply
-``tolerance`` with the same mask as ``union`` (:func:`_within_tolerance`).
+    against it with ``mapInPandas``. The left side is never shuffled. It
+    carries the matched right timestamp internally and applies
+    ``tolerance`` with the same mask as ``union`` (:func:`_within_tolerance`).
 
 Scale notes (100 TB design point): ``union`` shuffles left+right once on the
-join key — the minimum possible data movement for a sort-based as-of join;
-``merge`` shuffles the same volume but exchanges whole-stage codegen for
-explicit skew control; ``broadcast`` moves only the right side (driver +
-executor memory bound, guarded by ``broadcast_max_rows``).
+join key — the minimum possible data movement for a sort-based as-of join —
+plus, with the skew split, one aggregate and a broadcast of one row per hot
+key; ``broadcast`` moves only the right side (driver + executor memory
+bound, guarded by ``broadcast_max_rows``).
 """
 
 from __future__ import annotations
@@ -58,10 +66,24 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import (
+    ByteType,
+    DataType,
+    DateType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
 
-_BUCKET = "__asof_bucket"
 _SIDE = "__asof_side"
+_RANGE = "__asof_range"
+_BOUND = "__asof_b"
 _TS = "__asof_ts"
 _RTS = "__asof_right_ts"
 _ORD = "__asof_ord"
@@ -164,7 +186,6 @@ def asof_join(
     allow_exact_matches: bool = True,
     tolerance: Column | None = None,
     strategy: str = "auto",
-    num_buckets: int | None = None,
     hot_keys: list | None = None,
     hot_key_threshold: int | None = None,
     salt_factor: int = 8,
@@ -187,15 +208,16 @@ def asof_join(
         tolerance: optional max age as a Column interval (e.g.
             ``F.expr("INTERVAL 1 HOUR")``): matches older than
             ``left_ts - tolerance`` are nulled out.
-        strategy: "auto" | "union" | "merge" | "broadcast".
-        num_buckets: bucket count for the merge strategy (default: auto —
-            sized to the Catalyst input-size estimate at ~64 MB per
-            bucket, floored at spark.sql.shuffle.partitions; see
-            _auto_num_buckets).
-        hot_keys: explicit list of skewed key values to salt (merge strategy).
-        hot_key_threshold: if set, hot keys are detected with a right-side
-            count: keys with more than this many rows are salted.
-        salt_factor: number of salt shards per hot key.
+        strategy: "auto" | "union" | "merge" | "broadcast". "merge" is
+            another name for "union". "auto" picks "union" when hot keys
+            are requested, else "broadcast" when the right side's size
+            estimate is under ``spark.sql.autoBroadcastJoinThreshold``,
+            else "union".
+        hot_keys: explicit list of skewed key values (tuples for composite
+            keys) to split into time ranges (union strategy).
+        hot_key_threshold: if set (and ``hot_keys`` is not), keys with more
+            than this many right rows are split into time ranges.
+        salt_factor: number of time ranges per hot key.
         broadcast_max_rows: safety bound for the broadcast strategy.
         matched_ts_col: if set, also emit the matched right timestamp under
             this name (useful for age features / tolerance audits).
@@ -215,7 +237,7 @@ def asof_join(
 
     if strategy == "auto":
         if hot_keys or hot_key_threshold:
-            strategy = "merge"
+            strategy = "union"
         else:
             strategy = (
                 "broadcast"
@@ -223,13 +245,9 @@ def asof_join(
                 else "union"
             )
 
-    if strategy == "union":
-        return carry_forward(left, [spec], on, left_ts, allow_exact_matches)
-    if strategy == "merge":
-        return _asof_merge(
-            left, spec, on, left_ts, allow_exact_matches,
-            num_buckets, hot_keys, hot_key_threshold, salt_factor,
-        )
+    if strategy in ("union", "merge"):
+        bounds = _hot_key_bounds(spec, on, hot_keys, hot_key_threshold, salt_factor)
+        return carry_forward(left, [spec], on, left_ts, allow_exact_matches, bounds)
     if strategy == "broadcast":
         return _asof_broadcast(
             left, spec, on, left_ts, allow_exact_matches, broadcast_max_rows
@@ -248,11 +266,14 @@ def carry_forward(
     on: list[str],
     spine_ts: str,
     allow_exact: bool,
+    bounds: DataFrame | None = None,
 ) -> DataFrame:
     """As-of join every spec onto ``spine`` in one shuffle.
 
     Output: the spine columns in order, then per spec its prefixed payload
     and (if set) its ``matched_ts_col``. Callers validate names.
+    ``bounds`` (from :func:`_hot_key_bounds` on the single spec) splits
+    hot keys into time ranges; ``None`` keeps one window partition per key.
     """
     spine_other = [c for c in spine.columns if c not in on]
     spine_types = {f.name: f.dataType for f in spine.schema.fields}
@@ -323,6 +344,11 @@ def carry_forward(
     u = parts[0]
     for p in parts[1:]:
         u = u.unionByName(p)
+    partition = list(on)
+    if bounds is not None:
+        assert len(specs) == 1, "time-range split needs the boundaries' own table"
+        u = _split_ranges(u, bounds, on, allow_exact, side_spine)
+        partition.append(_RANGE)
 
     # tiebreak columns are null outside their own table's rows, so they
     # only order same-table equal-ts runs (last wins); the side tag already
@@ -330,7 +356,7 @@ def carry_forward(
     order = [F.col(_TS).asc_nulls_first(), F.col(_SIDE)]
     order += [F.col(n) for names in tb_names for n in names]
     w = (
-        Window.partitionBy(*on)
+        Window.partitionBy(*partition)
         .orderBy(*order)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
@@ -364,8 +390,90 @@ def carry_forward(
     return carried.select(*out_cols).select(*ordered)
 
 
+def _exact_ts(ts: Column, t: DataType) -> Column | None:
+    """``ts`` where ``percentile_approx`` (which ranks in float64) returns
+    it unchanged, null elsewhere; ``None`` if the type has no such values."""
+    if isinstance(t, (ByteType, ShortType, IntegerType, FloatType, DoubleType, DateType)):
+        return ts
+    if isinstance(t, LongType):
+        return F.when(ts.between(-(1 << 53), 1 << 53), ts)
+    if isinstance(t, (TimestampType, TimestampNTZType)):
+        # +-2^53 microseconds around the epoch: years 1685 to 2255
+        lo, hi = (F.lit(d).cast(t) for d in ("1686-01-01", "2254-12-31"))
+        return F.when(ts.between(lo, hi), ts)
+    return None
+
+
+def _hot_key_bounds(
+    spec: FeatureSpec,
+    on: list[str],
+    hot_keys: list | None,
+    threshold: int | None,
+    salt_factor: int,
+) -> DataFrame | None:
+    """One row per hot key: the key under ``__hk_<col>`` and its
+    ``salt_factor - 1`` ascending range boundaries under ``__asof_b<i>``,
+    each the ts of one of its state rows. ``None`` when nothing is split.
+
+    Hot keys are ``hot_keys`` (semi-joined, null-safe) or else the keys with
+    more than ``threshold`` state rows, found by the same aggregate.
+    """
+    state = spec.df
+    t = state.schema[spec.ts].dataType
+    ts = _exact_ts(F.col(spec.ts), t)
+    if ts is None or salt_factor < 2 or (not hot_keys and threshold is None):
+        return None
+    hk = [f"__hk_{c}" for c in on]
+    if hot_keys:
+        keys = state.sparkSession.createDataFrame(
+            [k if isinstance(k, tuple) else (k,) for k in hot_keys],
+            StructType([StructField(h, state.schema[c].dataType) for c, h in zip(on, hk)]),
+        )
+        state = state.join(F.broadcast(keys), _null_safe_eq(on, hk), "left_semi")
+    # rank error <= n / (10 * salt_factor): ranges within ~20% of n / salt_factor,
+    # and the sketch each task ships per hot key stays small
+    fracs = [i / salt_factor for i in range(1, salt_factor)]
+    agg = state.groupBy(*on).agg(
+        F.count(F.lit(1)).alias("__n"),
+        F.percentile_approx(ts, fracs, 10 * salt_factor).alias("__b"),
+    )
+    if not hot_keys:
+        agg = agg.where(F.col("__n") > threshold)
+    return agg.select(
+        *[F.col(c).alias(h) for c, h in zip(on, hk)],
+        *[F.col("__b")[i].alias(f"{_BOUND}{i}") for i in range(len(fracs))],
+    )
+
+
+def _null_safe_eq(on: list[str], hk: list[str]) -> Column:
+    cond = F.lit(True)
+    for c, h in zip(on, hk):
+        cond = cond & F.col(c).eqNullSafe(F.col(h))
+    return cond
+
+
+def _split_ranges(
+    u: DataFrame, bounds: DataFrame, on: list[str], allow_exact: bool, side_spine: int
+) -> DataFrame:
+    """``u`` plus ``_RANGE``: per row, the number of its key's boundaries
+    at or before its ts (strictly before, for strict probes); 0 for keys
+    not in ``bounds`` (their boundaries join as nulls). Unrolled
+    comparisons, not a lambda, so the projection keeps whole-stage codegen."""
+    ts = F.col(_TS)
+    hk = [c for c in bounds.columns if c.startswith("__hk_")]
+    rng = F.lit(0)
+    for c in [c for c in bounds.columns if c.startswith(_BOUND)]:
+        before = F.col(c) <= ts
+        if not allow_exact:
+            before = F.when(F.col(_SIDE) == side_spine, F.col(c) < ts).otherwise(before)
+        rng = rng + F.when(before, 1).otherwise(0)
+    return u.join(F.broadcast(bounds), _null_safe_eq(on, hk), "left").select(
+        *u.columns, rng.alias(_RANGE)
+    )
+
+
 # ---------------------------------------------------------------------------
-# pandas merge kernel shared by the merge and broadcast strategies
+# broadcast strategy: small right side, zero shuffle on the left
 # ---------------------------------------------------------------------------
 
 
@@ -447,145 +555,6 @@ def _finish(
     return merged.select(*out)
 
 
-# ---------------------------------------------------------------------------
-# merge strategy: co-bucketed cogroup + vectorized merge_asof, salted for skew
-# ---------------------------------------------------------------------------
-
-
-def _detect_hot_keys(right: DataFrame, on: list[str], threshold: int) -> list:
-    """Cheap hot-key scan: right-side key histogram, keys above threshold.
-
-    At cluster scale this is a map-side-combined count over the state table —
-    tiny output (one row per distinct key above threshold).
-    """
-    rows = (
-        right.groupBy(*on)
-        .count()
-        .where(F.col("count") > threshold)
-        .select(*on)
-        .limit(10_000)
-        .collect()
-    )
-    if len(on) == 1:
-        return [r[0] for r in rows]
-    return [tuple(r) for r in rows]
-
-
-def _bucket_expr(on: list[str], n: int) -> Column:
-    return F.pmod(F.xxhash64(*[F.col(c) for c in on]), F.lit(n)).cast("int")
-
-
-_TARGET_BUCKET_BYTES = 64 << 20  # ~64 MB of (estimated) input per bucket
-
-
-def _auto_num_buckets(
-    left: DataFrame,
-    right: DataFrame,
-    *,
-    target_bytes: int = _TARGET_BUCKET_BYTES,
-) -> int:
-    """Size merge buckets to the DATA, not the cluster.
-
-    Each merge bucket is materialized as one pandas frame inside one
-    executor task, so the bucket count must scale with input volume:
-    defaulting to spark.sql.shuffle.partitions puts data/n rows in one
-    frame — fine at bench scale, an OOM at 100 TB. Derive n from the
-    Catalyst optimizer size estimate at ~64 MB of estimated input per
-    bucket (the same sizing rule the scaling run validated for shuffle
-    partitions), floored at shuffle.partitions (never LESS parallel than
-    the session default) and capped at 2^20 buckets. Falls back to
-    shuffle.partitions when Catalyst has no estimate.
-    """
-    spark = left.sparkSession
-    base = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    est = _estimated_bytes(left) + _estimated_bytes(right)
-    if est >= 1 << 61:  # no usable estimate
-        return base
-    need = (est + target_bytes - 1) // target_bytes
-    return int(min(max(base, need), 1 << 20))
-
-
-def _asof_merge(
-    left: DataFrame,
-    spec: FeatureSpec,
-    on: list[str],
-    left_ts: str,
-    allow_exact: bool,
-    num_buckets: int | None,
-    hot_keys: list | None,
-    hot_key_threshold: int | None,
-    salt_factor: int,
-) -> DataFrame:
-    right = spec.df
-    n = num_buckets or _auto_num_buckets(left, right)
-
-    if hot_keys is None and hot_key_threshold is not None:
-        hot_keys = _detect_hot_keys(right, on, hot_key_threshold)
-    hot_keys = hot_keys or []
-
-    lsel = left.select("*", _bucket_expr(on, n).alias(_BUCKET))
-    rframe = _right_frame(spec, on)
-    rsel = rframe.select("*", _bucket_expr(on, n).alias(_BUCKET))
-
-    if hot_keys:
-        # hot-key salting: left hot rows scatter by hash(ts); right hot
-        # history replicates into every salt shard. Shard buckets live above
-        # the normal bucket range: n + hot_index * salt_factor + salt.
-        # Composite keys are matched on their null-safe concatenation.
-        if len(on) == 1:
-            lookup = F.col(on[0]).cast("string")
-            key_of = lambda k: str(k)  # noqa: E731
-        else:
-            lookup = F.concat_ws("\x1f", *[F.col(c).cast("string") for c in on])
-            key_of = lambda k: "\x1f".join(str(p) for p in k)  # noqa: E731
-        hot_map = {key_of(k): i for i, k in enumerate(hot_keys)}
-        hot_idx = F.create_map(
-            *[x for k, i in hot_map.items() for x in (F.lit(k), F.lit(i))]
-        )[lookup]
-        l_salt = F.pmod(
-            F.xxhash64(F.col(left_ts).cast("string")), F.lit(salt_factor)
-        ).cast("int")
-        lsel = lsel.withColumn(
-            _BUCKET,
-            F.when(
-                hot_idx.isNotNull(),
-                F.lit(n) + hot_idx * F.lit(salt_factor) + l_salt,
-            ).otherwise(F.col(_BUCKET)),
-        )
-        salts = F.explode(
-            F.when(hot_idx.isNotNull(), F.sequence(F.lit(0), F.lit(salt_factor - 1)))
-            .otherwise(F.array(F.lit(-1)))
-        ).alias("__salt")
-        rsel = rsel.select("*", salts).withColumn(
-            _BUCKET,
-            F.when(
-                F.col("__salt") >= 0,
-                F.lit(n) + hot_idx * F.lit(salt_factor) + F.col("__salt"),
-            ).otherwise(F.col(_BUCKET)),
-        ).drop("__salt")
-
-    payload = spec.payload(on)
-    tiebreak = spec.tiebreak
-
-    def merge(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        rpdf = _sort_right(rpdf.drop(columns=[_BUCKET]), tiebreak)
-        return _merge_sorted(
-            lpdf.drop(columns=[_BUCKET]), rpdf, on, left_ts, payload, allow_exact
-        )
-
-    merged = (
-        lsel.groupBy(_BUCKET)
-        .cogroup(rsel.groupBy(_BUCKET))
-        .applyInPandas(merge, schema=_merged_schema(left, rframe, payload))
-    )
-    return _finish(merged, left.columns, spec, on, left_ts)
-
-
-# ---------------------------------------------------------------------------
-# broadcast strategy: small right side, zero shuffle on the left
-# ---------------------------------------------------------------------------
-
-
 def _asof_broadcast(
     left: DataFrame,
     spec: FeatureSpec,
@@ -599,7 +568,7 @@ def _asof_broadcast(
     if len(rpdf) > broadcast_max_rows:
         raise ValueError(
             f"right side exceeds broadcast_max_rows={broadcast_max_rows}; "
-            "use strategy='union' or 'merge'"
+            "use strategy='union'"
         )
     bc = left.sparkSession.sparkContext.broadcast(_sort_right(rpdf, spec.tiebreak))
     payload = spec.payload(on)

@@ -17,11 +17,10 @@ Physical plan — two composable stages, never a probe x event join:
    executor memory is O(n * batch), independent of an entity's total
    history length). Rows tied on the event timestamp collapse to the
    one ordered last (it already contains its peers in the array).
-2. the existing bucketed merge-scan as-of join (operators/asof.py)
-   attaches each probe to the latest event row at-or-before its
-   timestamp — whose rolling array IS the probe's last-n history, by
-   construction. All of asof_join's scale machinery (hash bucketing,
-   hot-key salting, broadcast escape hatch) applies unchanged.
+2. the as-of join (operators/asof.py) attaches each probe to the latest
+   event row at-or-before its timestamp — whose rolling array IS the
+   probe's last-n history, by construction: the single-shuffle union
+   window or the broadcast escape hatch, picked by ``strategy``.
 
 The naive alternative — join probes to all earlier events and rank —
 is O(probes x events) per entity and explodes on hot entities; this

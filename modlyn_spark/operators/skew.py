@@ -1,7 +1,7 @@
 """Join/aggregation skew diagnostics: the heavy keys and the salt they need.
 
 The north_rule mandates "partitioning / shuffle / skew handled
-explicitly"; `operators/asof.py` (salted merge), AQE skew-join, and the
+explicitly"; `operators/asof.py` (time-range split of hot keys), AQE skew-join, and the
 two-sided chunk salting in `dedup.py`/`linkage.py` are the *mechanisms*
 — this operator is the *diagnosis*. Before launching a 100 TB join, run
 the prospective key through ``skew_report`` and read off which keys

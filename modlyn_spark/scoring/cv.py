@@ -43,7 +43,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from modlyn_spark.scoring.logreg import _SoftmaxStack
+from modlyn_spark.scoring.logreg import _fold_range_error, _SoftmaxStack
 
 
 def assign_folds(
@@ -112,6 +112,8 @@ class CVLogReg(_SoftmaxStack):
         max_epochs: int = 4,
         allow_empty_cells: bool = False,
     ) -> "CVLogReg":
+        """Train the F models; raises ``ValueError`` at the first step whose
+        batch holds a fold id outside ``0..n_folds-1``, before its update."""
         return self._train(
             df, features_col=features_col, label_idx_col=label_idx_col, batch_col=batch_col,
             fold_col=fold_col, n_batches=n_batches, max_steps=max_steps,
@@ -131,5 +133,9 @@ class CVLogReg(_SoftmaxStack):
         """Out-of-fold prediction: each row is scored by the ONE model
         that never trained on it (model ``fold_id``) — the leakage-free
         evaluation table. Zero shuffle: one Arrow map with the stacked
-        weights in the closure."""
+        weights in the closure. Raises ``ValueError`` (one job) if a fold
+        id is null or outside ``0..n_folds-1``."""
+        ok = F.coalesce(F.col(fold_col).between(0, self.F - 1), F.lit(False))
+        if not df.where(~ok).isEmpty():
+            raise ValueError(_fold_range_error(fold_col, self.F, "the frame"))
         return self._predict(df, features_col, out_col, fold_col)

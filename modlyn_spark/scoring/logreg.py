@@ -87,8 +87,9 @@ def _softmax_sums(W: np.ndarray, b: np.ndarray, M: int, k: int):
     """Executor function of one step, given the (M*k, d) weight stack ``W``
     and (M*k,) bias stack ``b``: a batch block -> the unnormalized softmax
     cross-entropy sums of all M models (gW (M*k, d), gb (M, k), loss (M,),
-    n (M,)), turned into batch means on the driver. With fold ids, row i
-    counts for model m only if ``fold_i != m``; without, every row counts."""
+    n (M,), bad: the number of fold ids outside 0..M-1), turned into batch
+    means on the driver. With fold ids, row i counts for model m only if
+    ``fold_i != m``; without, every row counts."""
 
     def grad(X: np.ndarray, y: np.ndarray, fold) -> tuple:
         m = len(X)
@@ -103,14 +104,15 @@ def _softmax_sums(W: np.ndarray, b: np.ndarray, M: int, k: int):
         loss = -np.log(np.clip(p[rows, :, y], 1e-30, None))
         p[rows, :, y] -= 1.0
         if fold is None:
-            n = np.full(M, m)
+            n, bad = np.full(M, m), 0
         else:
+            bad = int(((fold < 0) | (fold >= M)).sum())
             vis = fold[:, None] != np.arange(M)[None, :]  # (m, M)
             loss *= vis
             p *= vis[:, :, None]
             n = vis.sum(axis=0)
         # ONE GEMM for all M gradient blocks: (M*k, d)
-        return p.reshape(m, M * k).T @ X, p.sum(axis=0), loss.sum(axis=0), n
+        return p.reshape(m, M * k).T @ X, p.sum(axis=0), loss.sum(axis=0), n, bad
 
     return grad
 
@@ -149,6 +151,13 @@ class _Adam:
         return out
 
 
+def _fold_range_error(fold_col: str, n_folds: int, where: str) -> str:
+    return (
+        f"{where} holds {fold_col!r} values outside 0..{n_folds - 1}: such a row "
+        "would train every fold model (no model would be out-of-fold for it)"
+    )
+
+
 class _SoftmaxStack:
     """M softmax regressions trained over one mini-batch stream: ``W``
     (M, k, d), ``b`` (M, k) and ``losses[m]``, model m's per-step mean
@@ -178,7 +187,9 @@ class _SoftmaxStack:
         M, k, d = self.W.shape
 
         def apply(bid: int, part: tuple) -> None:
-            gW, gb, loss, n = part
+            gW, gb, loss, n, bad = part
+            if bad:
+                raise ValueError(_fold_range_error(layout["fold_col"], M, f"batch {bid}"))
             live = np.flatnonzero(n)
             if len(live) < M and not allow_empty_cells:
                 raise ValueError(

@@ -34,8 +34,12 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--score-out", default=None)
     p.add_argument("--gap-seconds", type=int, default=600)
     p.add_argument("--asof-strategy", default="union",
-                   choices=["union", "merge", "broadcast"])
-    p.add_argument("--hot-key-threshold", type=int, default=None)
+                   choices=["union", "merge", "broadcast"],
+                   help="as-of join plan: union window (merge is another "
+                        "name for it) or broadcast of the state side")
+    p.add_argument("--hot-key-threshold", type=int, default=None,
+                   help="split images with more state rows than this into "
+                        "time ranges inside the union window")
     p.add_argument("--n-buckets", type=int, default=64)
     p.add_argument("--format", default=None, choices=["parquet", "iceberg"],
                    help="table format for --images/--requests/--score-out "

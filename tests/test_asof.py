@@ -215,3 +215,211 @@ def test_asof_nested_array_payload_with_unmatched(spark, strategy):
     assert got[("a", "2024-01-01 00:00:04")] is None
     assert got[("b", "2024-01-01 00:00:07")] is None
     assert got[("a", "2024-01-01 00:00:07")] == [1.0, 2.0]
+
+
+# ---------------------------------------------------------------------------
+# skew split: hot keys cut into time ranges inside the union window
+# ---------------------------------------------------------------------------
+
+BASE = pd.Timestamp("2024-05-01")
+
+
+def _split_frames(ts_kind: str):
+    """Hot key "h" (two tied rows per second, 40 tied rows at second 30, so
+    several boundaries coincide and some ranges are empty), a hot NULL key
+    and two cold keys; probes on every half second from before each key's
+    first state to past the tolerance, so every boundary is probed exactly."""
+    rng = np.random.default_rng(5)
+    rows = []
+    for s in range(60):
+        for seq in range(40 if s == 30 else 2):
+            rows.append(("h", s, seq))
+    rows += [(None, s, 0) for s in range(0, 60, 3)]
+    rows += [(k, s, 0) for k in ["c0", "c1"] for s in (5, 17, 40)]
+    ev = pd.DataFrame(rows, columns=["key", "sec", "state"])
+    ev["value"] = rng.normal(size=len(ev))
+    ev["version"] = np.arange(len(ev))
+    pr = pd.DataFrame(
+        [(k, s / 2) for k in ["h", None, "c0", "c2"] for s in range(-4, 140)],
+        columns=["key", "sec"],
+    )
+    pr["probe_id"] = np.arange(len(pr))
+    if ts_kind == "timestamp":
+        to_ts = lambda sec: BASE + pd.to_timedelta(sec, unit="s")  # noqa: E731
+    else:  # epoch microseconds as a long
+        to_ts = lambda sec: (np.asarray(sec) * 1e6).astype(np.int64)  # noqa: E731
+    ev["ts"], pr["feature_ts"] = to_ts(ev["sec"]), to_ts(pr["sec"])
+    # the oracle breaks ts ties by row order: order rows by the tiebreak
+    ev = ev.sort_values(["ts", "state"], kind="mergesort").drop(columns="sec")
+    return ev.reset_index(drop=True), pr.drop(columns="sec")
+
+
+@pytest.mark.parametrize("ts_kind", ["timestamp", "long"])
+@pytest.mark.parametrize("exact", [True, False])
+def test_split_matches_oracle(spark, ts_kind, exact):
+    """Split vs oracle on the cases a range cut could get wrong: state rows
+    and probes tied exactly on a boundary, a tiebreak-ordered tie run at a
+    boundary, empty ranges (coinciding boundaries), probes before the hot
+    key's first state, a hot null key; with and without tolerance and the
+    matched ts."""
+    from modlyn_spark.operators.asof import FeatureSpec, _hot_key_bounds
+
+    ev, pr = _split_frames(ts_kind)
+    right = spark.createDataFrame(ev.iloc[::-1])  # the tiebreak decides ties
+    spec = FeatureSpec(df=right, ts="ts", cols=PAYLOAD)
+    # toPandas: timestamps in the session time zone, like createDataFrame's
+    bounds = _hot_key_bounds(spec, ["key"], None, 10, 8).toPandas()
+    assert set(bounds["__hk_key"]) == {"h", None}
+    hb = bounds.loc[bounds["__hk_key"] == "h"].iloc[0, 1:].tolist()
+    assert len(hb) == 7 and len(set(hb)) < 7  # coinciding boundaries
+    h_ts = set(ev.loc[ev["key"] == "h", "ts"])
+    assert set(hb) <= h_ts  # boundaries are state timestamps
+    assert set(hb) <= set(pr.loc[pr["key"] == "h", "feature_ts"])
+    tol_cases = [(None, None)] + (
+        [(F.expr("INTERVAL 3 SECONDS"), pd.Timedelta(seconds=3))]
+        if ts_kind == "timestamp"
+        else [(F.lit(3_000_000), 3_000_000)]
+    )
+    for tol, otol in tol_cases:
+        exp = _oracle(ev, pr, allow_exact_matches=exact, tolerance=otol)
+        for matched_ts_col in ["matched_ts", None]:
+            got = (
+                asof_join(
+                    spark.createDataFrame(pr), right, on="key", left_ts="feature_ts",
+                    right_ts="ts", right_cols=PAYLOAD, strategy="union",
+                    allow_exact_matches=exact, tolerance=tol,
+                    matched_ts_col=matched_ts_col, right_tiebreak=["state"],
+                    hot_key_threshold=10, salt_factor=8,
+                )
+                .toPandas()
+                .sort_values("probe_id")
+                .reset_index(drop=True)
+            )
+            assert ("matched_ts" in got.columns) == bool(matched_ts_col)
+            _assert_match(got, exp)
+
+
+def test_split_skips_ts_float64_cannot_hold(spark):
+    """percentile_approx ranks in float64. Epoch-nanosecond longs near 1.7e18
+    are not float64 values, so a boundary computed from them could be a
+    rounded value that no state row has, opening a range with no state.
+    Such timestamps give no boundaries, the key is not split, and the
+    answer still matches the oracle."""
+    from modlyn_spark.operators.asof import FeatureSpec, _hot_key_bounds
+
+    ev, pr = _split_frames("long")
+    offset = 1_700_000_000_000_000_001  # odd: above 2**53, not a float64
+    ev["ts"] += offset
+    pr["feature_ts"] += offset
+    right = spark.createDataFrame(ev.iloc[::-1])
+    spec = FeatureSpec(df=right, ts="ts", cols=PAYLOAD)
+    rows = _hot_key_bounds(spec, ["key"], None, 10, 8).collect()
+    assert rows and all(r["__asof_b0"] is None for r in rows)
+    for exact in [True, False]:
+        got = (
+            asof_join(
+                spark.createDataFrame(pr), right, on="key", left_ts="feature_ts",
+                right_ts="ts", right_cols=PAYLOAD, allow_exact_matches=exact,
+                matched_ts_col="matched_ts", right_tiebreak=["state"],
+                hot_key_threshold=10, salt_factor=8,
+            )
+            .toPandas()
+            .sort_values("probe_id")
+            .reset_index(drop=True)
+        )
+        _assert_match(got, _oracle(ev, pr, allow_exact_matches=exact))
+
+
+def test_split_plan_one_exchange_no_python(spark, events_pdf, probes_pdf):
+    """With hot keys the probe and state rows still cross one hash Exchange
+    (the only other one is the hot-key aggregate's, inside the broadcast,
+    one row per key and task), no Python runs, and the hot key's rows land
+    in several tasks instead of one."""
+    import re
+
+    left = spark.createDataFrame(probes_pdf)
+    right = spark.createDataFrame(events_pdf)
+
+    def join(**kw):
+        return asof_join(
+            left, right, on="key", left_ts="feature_ts", right_ts="ts",
+            right_cols=PAYLOAD, strategy="merge", **kw,
+        )
+
+    out = join(hot_key_threshold=50)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    # FlatMapCoGroupsInPandas, MapInPandas, ArrowEvalPython, ...
+    assert not re.search(r"Python|Pandas|MapInArrow", plan), plan
+    lines = plan.splitlines()
+
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    outside, inside, bdepth = 0, 0, None
+    for line in lines:
+        if bdepth is not None and depth(line) <= bdepth:
+            bdepth = None
+        if "BroadcastExchange" in line:
+            bdepth = depth(line)
+        if "Exchange hashpartitioning" in line:
+            if bdepth is None:
+                outside += 1
+            else:
+                inside += 1
+    assert (outside, inside) == (1, 1), plan
+
+    def tasks_of_hot_key(df):
+        return (
+            df.where(F.col("key") == "ent_000")
+            .select(F.spark_partition_id().alias("p"))
+            .distinct()
+            .count()
+        )
+
+    old = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
+    try:
+        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+        assert tasks_of_hot_key(join()) == 1
+        assert tasks_of_hot_key(out) > 1
+    finally:
+        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", old)
+
+
+def test_merge_after_union_on_frames_of_one_parquet_scan(spark, tmp_path):
+    """Probes and state filtered from ONE parquet scan, a union join of the
+    two run first, then ``merge``: the former cogroup merge lost the key
+    column here (KeyError inside pd.merge_asof). ``merge`` now runs the
+    union window, so all three runs agree."""
+    rng = np.random.default_rng(3)
+    n = 600
+    ev = pd.DataFrame(
+        {
+            "event_id": np.arange(n),
+            "ts": pd.Timestamp("2024-01-01")
+            + pd.to_timedelta(np.sort(rng.integers(0, 10**6, n)), unit="s"),
+            "user_id": rng.integers(0, 20, n),
+            "event_type": rng.choice(["purchase", "view", "error"], n),
+            "value": rng.normal(size=n).round(2),
+        }
+    )
+    path = str(tmp_path / "events.parquet")
+    spark.createDataFrame(ev).write.parquet(path)
+    scan = spark.read.parquet(path)
+    probes = scan.where(F.col("event_type") != "purchase").select(
+        "event_id", "user_id", F.col("ts").alias("feature_ts")
+    )
+    state = scan.where(F.col("event_type") == "purchase").select(
+        "user_id", "ts", F.col("value").alias("pv"), F.col("event_id").alias("eid")
+    )
+    kw = dict(on="user_id", left_ts="feature_ts", right_ts="ts", matched_ts_col="mts")
+    got = [
+        asof_join(probes, state, strategy=s, **extra, **kw)
+        .toPandas()
+        .sort_values("event_id")
+        .reset_index(drop=True)
+        for s, extra in [("union", {}), ("merge", {}), ("merge", {"hot_key_threshold": 5})]
+    ]
+    assert len(got[0]) == (ev["event_type"] != "purchase").sum()
+    assert got[0]["pv"].notna().any()
+    for g in got[1:]:
+        pd.testing.assert_frame_equal(g, got[0])

@@ -1,6 +1,7 @@
 """Auto strategy selection: small right side -> broadcast (zero shuffle on
 the probe side); large right side / disabled broadcast -> union; hot-key
-hints -> merge. Results identical across all choices."""
+hints -> union with the hot keys split into time ranges. Results identical
+across all choices."""
 
 from __future__ import annotations
 
@@ -88,29 +89,3 @@ def test_auto_hot_keys_selects_merge(spark):
     )
     got = out.toPandas().sort_values("probe_id")
     assert np.allclose(got["val"].fillna(-1).values, [1.0, 2.0, -1.0])
-
-
-def test_merge_buckets_autosize_to_data(spark):
-    """Bucket count follows the Catalyst size estimate (~64 MB/bucket):
-    a multi-GB input must pick hundreds of buckets, never the session's
-    shuffle-partition count; tiny inputs keep the parallelism floor."""
-    from pyspark.sql import functions as F
-
-    from modlyn_spark.operators.asof import _auto_num_buckets
-
-    base = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    # spark.range carries exact stats: 8 bytes/row -> 2B rows ~ 16 GiB on
-    # the left + the same on the right ~ 32 GiB total -> 512 buckets
-    big_l = spark.range(2_000_000_000).select(
-        F.col("id").alias("k"), F.col("id").alias("ts")
-    )
-    big_r = spark.range(2_000_000_000).select(
-        F.col("id").alias("k"), F.col("id").alias("ts")
-    )
-    n_big = _auto_num_buckets(big_l, big_r)
-    assert n_big > 256
-    assert n_big >= base
-
-    small = spark.range(1000).select(F.col("id").alias("k"))
-    assert _auto_num_buckets(small, small) == base

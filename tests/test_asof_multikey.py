@@ -94,3 +94,38 @@ def test_multikey_salted_merge(spark, multikey):
         e = exp[c].reset_index(drop=True)
         assert g.isna().equals(e.isna()), c
         assert np.allclose(g.dropna().astype(float), e.dropna().astype(float)), c
+
+
+@pytest.mark.parametrize("exact", [True, False])
+def test_multikey_split_matches_oracle(spark, multikey, exact):
+    """Composite hot keys (found by threshold) cut into time ranges, with
+    probes exactly on every state timestamp, so exactly on every boundary."""
+    probes, right = multikey
+    on_ts = right[["ent", "shard", "ts"]].rename(columns={"ts": "feature_ts"})
+    probes = pd.concat([probes, on_ts], ignore_index=True)
+    probes["pid"] = np.arange(len(probes))
+    exp = oracle_asof(
+        probes, right, on=["ent", "shard"], left_ts="feature_ts", right_ts="ts",
+        payload=["val", "v"], allow_exact_matches=exact,
+    ).sort_values("pid")
+    got = (
+        asof_join(
+            spark.createDataFrame(probes),
+            spark.createDataFrame(right),
+            on=["ent", "shard"],
+            left_ts="feature_ts",
+            right_ts="ts",
+            right_cols=["val", "v"],
+            allow_exact_matches=exact,
+            hot_key_threshold=3,
+            salt_factor=3,
+        )
+        .toPandas()
+        .sort_values("pid")
+    )
+    assert len(got) == len(exp)
+    for c in ["val", "v"]:
+        g = got[c].reset_index(drop=True)
+        e = exp[c].reset_index(drop=True)
+        assert g.isna().equals(e.isna()), c
+        assert np.allclose(g.dropna().astype(float), e.dropna().astype(float)), c

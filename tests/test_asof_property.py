@@ -1,6 +1,7 @@
 """Property-based as-of join testing: random event streams (random keys,
 duplicate timestamps, nulls, empty sides) must always match the pandas
-merge_asof oracle for every strategy."""
+merge_asof oracle for every strategy, and with hot keys split into time
+ranges (a threshold low enough that most keys are cut)."""
 
 from __future__ import annotations
 
@@ -52,8 +53,12 @@ def streams(draw):
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.data_too_large],
 )
-@given(data=streams(), exact=st.booleans())
-def test_asof_union_matches_oracle_property(spark, data, exact):
+@given(
+    data=streams(),
+    exact=st.booleans(),
+    split=st.tuples(st.integers(0, 4), st.integers(2, 5)),
+)
+def test_asof_union_matches_oracle_property(spark, data, exact, split):
     left, right = data
     exp = oracle_asof(
         left, right, on="key", left_ts="feature_ts", right_ts="ts",
@@ -67,20 +72,25 @@ def test_asof_union_matches_oracle_property(spark, data, exact):
         if len(right)
         else spark.createDataFrame([], schema=rschema)
     )
-    for strategy in ["union", "merge", "broadcast"]:
+    threshold, salt_factor = split
+    hot = {"hot_key_threshold": threshold, "salt_factor": salt_factor}
+    for strategy, kw in [
+        ("union", {}), ("merge", {}), ("broadcast", {}), ("union", hot)
+    ]:
+        name = f"{strategy}{kw or ''}"
         got = (
             asof_join(
                 sleft, sright, on="key", left_ts="feature_ts", right_ts="ts",
                 right_cols=["val", "seq"], allow_exact_matches=exact,
-                strategy=strategy,
+                strategy=strategy, **kw,
             )
             .toPandas()
             .sort_values("probe_id")
         )
-        assert len(got) == len(exp), strategy
+        assert len(got) == len(exp), name
         for c in ["val", "seq"]:
             g, e = got[c].reset_index(drop=True), exp[c].reset_index(drop=True)
-            assert g.isna().equals(e.isna()), f"{strategy}.{c} null mask"
+            assert g.isna().equals(e.isna()), f"{name}.{c} null mask"
             assert np.allclose(
                 g.dropna().astype(float), e.dropna().astype(float)
-            ), f"{strategy}.{c}"
+            ), f"{name}.{c}"

@@ -159,6 +159,30 @@ def test_empty_cell_raises(spark, cv_data):
     assert np.allclose(cv2.losses[0], exp_losses, rtol=1e-6)
 
 
+def test_fold_id_out_of_range_raises(spark, cv_data):
+    """A fold id outside 0..F-1 has no out-of-fold model: fold -1 would
+    train every fold model (and be scored by model F-1 through a negative
+    index), fold F would fail inside the Arrow map. Both are rejected on
+    the driver, naming the fold column."""
+    _, _, _, classes, enc = cv_data
+    rigged = enc.withColumn(
+        "fold_id",
+        F.when(F.col("row_id") % 7 == 0, F.lit(-1))
+        .when(F.col("row_id") % 7 == 1, F.lit(NF))
+        .otherwise(F.col("fold_id")),
+    )
+    with pytest.raises(ValueError, match="fold_id"):
+        CVLogReg(D, classes, NF).fit(rigged, max_steps=2, max_epochs=1, n_batches=4)
+    cv = CVLogReg(D, classes, NF).fit(enc, max_steps=2, max_epochs=1, n_batches=4)
+    for bad in [-1, NF]:
+        one = enc.withColumn(
+            "fold_id",
+            F.when(F.col("row_id") == 0, F.lit(bad)).otherwise(F.col("fold_id")),
+        )
+        with pytest.raises(ValueError, match="fold_id"):
+            cv.oof_predict(one)
+
+
 def test_n_folds_guard():
     with pytest.raises(ValueError):
         CVLogReg(4, ["a", "b"], 1)
