@@ -415,7 +415,6 @@ def q_asof_join(spark, sf_dir):
         left_ts="feature_ts",
         right_ts="ts",
         right_cols=["purchase_value"],
-        strategy="union",
         matched_ts_col="state_ts",
     ).select("event_id", "user_id", "purchase_value", "state_ts")
 
@@ -430,7 +429,6 @@ def q_asof_join_merge(spark, sf_dir):
         left_ts="feature_ts",
         right_ts="ts",
         right_cols=["purchase_value"],
-        strategy="merge",
         hot_key_threshold=1000,
     ).select("event_id", "user_id", "purchase_value")
 
@@ -445,7 +443,6 @@ def q_asof_join_tolerance(spark, sf_dir):
         left_ts="feature_ts",
         right_ts="ts",
         right_cols=["purchase_value"],
-        strategy="union",
         tolerance=F.expr("INTERVAL 1 DAY"),
         matched_ts_col="state_ts",
     ).select("event_id", "user_id", "purchase_value", "state_ts")
@@ -495,20 +492,6 @@ def q_training_set(spark, sf_dir):
         F.round("signup_value", 4).alias("signup_value"),
         F.round("err_value", 4).alias("err_value"),
     )
-
-
-def q_asof_join_broadcast(spark, sf_dir):
-    from modlyn_spark.operators.asof import asof_join
-
-    return asof_join(
-        _probes(spark, sf_dir),
-        _purchase_state(spark, sf_dir),
-        on="user_id",
-        left_ts="feature_ts",
-        right_ts="ts",
-        right_cols=["purchase_value"],
-        strategy="broadcast",
-    ).select("event_id", "user_id", "purchase_value")
 
 
 def q_rolling_range_window(spark, sf_dir):
@@ -1151,8 +1134,7 @@ def q_image_pipeline(spark, sf_dir):
     requests = spark.createDataFrame(
         synth_feature_requests(generate_images_pandas(50, hot_every=25, hot_factor=10))
     )
-    out = image_feature_pipeline(images, requests, asof_strategy="merge",
-                                 hot_key_threshold=30)
+    out = image_feature_pipeline(images, requests, hot_key_threshold=30)
     return out.select(
         "image_id",
         "label",
@@ -3266,10 +3248,9 @@ def q_source_quality_rollup(spark, sf_dir):
 # spend driver slots. Retired, with the entry that still covers the
 # operator: tpch_q6 (filter+agg — tpch_q1), tpch_q12 / q4 / q10
 # (join+conditional-agg shapes — tpch_q1/q3/q5 + filter_min_class_freq),
-# asof_join_broadcast AND asof_join (strategy variants of the as-of
-# operator; asof_join_merge is the north-star merge-scan recipe and
-# asof_join_tolerance the bounded-staleness semantics — broadcast/union
-# plans asserted in tests/test_asof.py), dedup_groups (exact-dup grouping
+# asof_join (the plain as-of join; asof_join_merge runs the same one plan
+# with the hot-key split and asof_join_tolerance adds the bounded-staleness
+# mask — plan asserted in tests/test_asof.py), dedup_groups (exact-dup grouping
 # — dedup_exact gates the same fingerprint operator on a corpus with zero
 # dup groups), filter_isin / limit_slice / log1p / groupby_count /
 # global_minmax (single-expression operators exercised inside the green
@@ -3413,8 +3394,8 @@ def q_history_features(spark, sf_dir):
     """Point-in-time last-N history features (operators/history.py): for
     every 10th event as a probe, the user's 5 most recent event values at
     or before the probe timestamp, most-recent-first — built as ONE
-    rolling window over the event stream + the engine's bucketed as-of
-    join (never a probe x event join), then exploded to (probe, pos,
+    rolling window over the event stream + the engine's single-shuffle
+    as-of join (never a probe x event join), then exploded to (probe, pos,
     value) rows so the driver's value hash sees scalars. Oracle: the
     brute-force rank in DuckDB — equality proves both the window frame
     and the zero-leakage cutoff on every probe."""
@@ -4355,7 +4336,6 @@ def _retired_queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame
         "agg_maintainer": q_agg_maintainer,
         "tpch_q6_forecast_revenue": q_tpch_q6_forecast_revenue,
         "tpch_q12_shipmode": q_tpch_q12_shipmode,
-        "asof_join_broadcast": q_asof_join_broadcast,
         "dedup_groups": q_dedup_groups,
         "tpch_q4_order_priority": q_tpch_q4_order_priority,
         "tpch_q10_returned_items": q_tpch_q10_returned_items,
@@ -6526,12 +6506,6 @@ def _retired_oracle_sql_base() -> dict[str, str]:
             WHERE l_shipdate >= TIMESTAMP '1996-01-01'
               AND l_shipdate < TIMESTAMP '1997-01-01'
             GROUP BY 1
-        """,
-        "asof_join_broadcast": f"""
-            WITH st AS ({_PURCHASE_STATE_SQL}), pr AS ({_PROBES_SQL})
-            SELECT pr.event_id, pr.user_id, st.purchase_value
-            FROM pr ASOF LEFT JOIN st
-              ON pr.user_id = st.user_id AND st.ts <= pr.feature_ts
         """,
         "dedup_groups": """
             SELECT fp, n_dups, keep_id FROM (

@@ -12,58 +12,46 @@ AnnData count matrix is already aligned to its labels positionally
 is the distributed substrate that produces that alignment from raw
 event-state tables (BASELINE.json north_rule).
 
-Two physical plans, both pure PySpark:
+One physical plan, pure PySpark, and building it runs no job:
+:func:`carry_forward`, a single-shuffle, whole-stage-codegen
+carry-forward. The probe side and N state tables are unioned with a side
+tag and one nullable payload struct per table (non-null exactly on that
+table's rows, so ``last(..., ignorenulls=True)`` tracks row presence, not
+field non-nullness), shuffled once by key, and every table's latest state
+is carried forward by N ``last`` calls sharing one
+``(key) ORDER BY (ts, side, tiebreaks)`` running window: one Exchange, one
+Sort, one Window however many tables. ``asof_join`` calls it with one
+table; ``training_set.build_training_set`` with N.
 
-``union`` (also accepted as ``merge``) — :func:`carry_forward`
-    Single-shuffle, whole-stage-codegen path. The probe side and N state
-    tables are unioned with a side tag and one nullable payload struct per
-    table (non-null exactly on that table's rows, so
-    ``last(..., ignorenulls=True)`` tracks row presence, not field
-    non-nullness), shuffled once by key, and every table's latest state is
-    carried forward by N ``last`` calls sharing one
-    ``(key) ORDER BY (ts, side, tiebreaks)`` running window: one Exchange,
-    one Sort, one Window however many tables. ``asof_join`` calls it with
-    one table; ``training_set.build_training_set`` with N.
+Skew split: with ``hot_keys`` or ``hot_key_threshold``, one aggregate over
+the state side (:func:`_hot_key_bounds`) gives every hot key
+``salt_factor - 1`` time boundaries from ``percentile_approx``, so its
+``salt_factor`` time ranges hold about equal state rows. That small frame
+is broadcast-joined (null-safe) onto the union, every row gets a range id
+(cold keys 0) and the window partitions by (key, range), so a hot entity's
+history is cut over several tasks and nothing is replicated. No carry-in
+rows are needed: ``percentile_approx`` returns values of its input, so
+every boundary is the timestamp of a state row of that key, and range
+``r`` opens with that state. A state row's range is the number of
+boundaries ``<=`` its ts; a probe's is the number of boundaries ``<=``
+(``<`` when ``allow_exact_matches=False``) its ts. Every probe in range
+``r >= 1`` therefore has the opening state at (or strictly before) its own
+ts inside its range, and the latest such state is the global answer. Rows
+tied on ts share a range. A state ts type whose values
+``percentile_approx`` cannot return unchanged (decimal) is not split
+(:func:`_exact_ts`).
 
-    Skew split: with ``hot_keys`` or ``hot_key_threshold``, one aggregate
-    over the state side (:func:`_hot_key_bounds`) gives every hot key
-    ``salt_factor - 1`` time boundaries from ``percentile_approx``, so its
-    ``salt_factor`` time ranges hold about equal state rows. That small
-    frame is broadcast-joined (null-safe) onto the union, every row gets a
-    range id (cold keys 0) and the window partitions by (key, range), so a
-    hot entity's history is cut over several tasks and nothing is
-    replicated. No carry-in rows are needed: ``percentile_approx`` returns
-    values of its input, so every boundary is the timestamp of a state row
-    of that key, and range ``r`` opens with that state. A state row's
-    range is the number of boundaries ``<=`` its ts; a probe's is the
-    number of boundaries ``<=`` (``<`` when ``allow_exact_matches=False``)
-    its ts. Every probe in range ``r >= 1`` therefore has the opening
-    state at (or strictly before) its own ts inside its range, and the
-    latest such state is the global answer. Rows tied on ts share a range.
-    A state ts type whose values ``percentile_approx`` cannot return
-    unchanged (decimal) is not split (:func:`_exact_ts`).
-
-``broadcast`` — :func:`_merge_sorted` per left Arrow batch
-    Zero-shuffle path for a small right side: the right table is collected,
-    sorted once, broadcast to every executor, and each left batch is merged
-    against it with ``mapInPandas``. The left side is never shuffled. It
-    carries the matched right timestamp internally and applies
-    ``tolerance`` with the same mask as ``union`` (:func:`_within_tolerance`).
-
-Scale notes (100 TB design point): ``union`` shuffles left+right once on the
-join key — the minimum possible data movement for a sort-based as-of join —
-plus, with the skew split, one aggregate and a broadcast of one row per hot
-key; ``broadcast`` moves only the right side (driver + executor memory
-bound, guarded by ``broadcast_max_rows``).
+Scale notes (100 TB design point): the plan shuffles left+right once on
+the join key — the minimum possible data movement for a sort-based as-of
+join — plus, with the skew split, one aggregate and a broadcast of one row
+per hot key. A small state table probed by many requests is a serving
+problem (an in-memory sorted index), not a second Spark plan.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Iterator
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -85,8 +73,6 @@ _SIDE = "__asof_side"
 _RANGE = "__asof_range"
 _BOUND = "__asof_b"
 _TS = "__asof_ts"
-_RTS = "__asof_right_ts"
-_ORD = "__asof_ord"
 
 
 @dataclass
@@ -132,23 +118,6 @@ def _within_tolerance(
     return F.when(matched_ts >= ts - tolerance, value)
 
 
-def _denanify(pdf: pd.DataFrame, cols: list[str]) -> pd.DataFrame:
-    """pd.merge_asof fills unmatched payload cells with float NaN. For
-    scalar payloads Arrow maps NaN -> NULL, but for NESTED payload types
-    (array/struct columns — e.g. a rolling-history array riding through
-    the as-of) Arrow refuses to coerce a float into a list ("'float'
-    object is not iterable"). Normalize NaN to None on object-dtype
-    payload columns so unmatched rows serialize as NULL for any type."""
-    for c in cols:
-        if c in pdf.columns and pdf[c].dtype == object:
-            pdf[c] = pdf[c].map(
-                lambda x: None
-                if x is None or (isinstance(x, float) and np.isnan(x))
-                else x
-            )
-    return pdf
-
-
 def _check_no_clash(left: DataFrame, payload: list[str], matched_ts_col: str | None):
     clash = (set(payload) | ({matched_ts_col} if matched_ts_col else set())) & set(
         left.columns
@@ -158,21 +127,6 @@ def _check_no_clash(left: DataFrame, payload: list[str], matched_ts_col: str | N
             f"right payload columns {sorted(clash)} clash with left columns; "
             "rename them (right.withColumnRenamed) or pass right_cols"
         )
-
-
-def _estimated_bytes(df: DataFrame) -> int:
-    """Catalyst's optimizer size estimate (no job launched)."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        return 1 << 62  # unknown -> treat as large
-
-
-def _broadcast_threshold(df: DataFrame) -> int:
-    """Same knob, parsed by Spark itself, that Catalyst's broadcast-join
-    selection uses (-1 disables broadcast)."""
-    conf = df.sparkSession._jsparkSession.sessionState().conf()
-    return int(conf.autoBroadcastJoinThreshold())
 
 
 def asof_join(
@@ -185,15 +139,18 @@ def asof_join(
     *,
     allow_exact_matches: bool = True,
     tolerance: Column | None = None,
-    strategy: str = "auto",
     hot_keys: list | None = None,
     hot_key_threshold: int | None = None,
     salt_factor: int = 8,
-    broadcast_max_rows: int = 2_000_000,
     matched_ts_col: str | None = None,
     right_tiebreak: list[str] | None = None,
 ) -> DataFrame:
     """Point-in-time join: latest right state at each left timestamp.
+
+    Always the one plan of this module: left and right shuffled once by
+    key into a shared running window (:func:`carry_forward`), with hot keys
+    cut into time ranges when asked. Building it runs no job, however
+    small the right side.
 
     Args:
         left: probe side; one output row per left row.
@@ -208,17 +165,11 @@ def asof_join(
         tolerance: optional max age as a Column interval (e.g.
             ``F.expr("INTERVAL 1 HOUR")``): matches older than
             ``left_ts - tolerance`` are nulled out.
-        strategy: "auto" | "union" | "merge" | "broadcast". "merge" is
-            another name for "union". "auto" picks "union" when hot keys
-            are requested, else "broadcast" when the right side's size
-            estimate is under ``spark.sql.autoBroadcastJoinThreshold``,
-            else "union".
         hot_keys: explicit list of skewed key values (tuples for composite
-            keys) to split into time ranges (union strategy).
+            keys) to split into time ranges.
         hot_key_threshold: if set (and ``hot_keys`` is not), keys with more
             than this many right rows are split into time ranges.
         salt_factor: number of time ranges per hot key.
-        broadcast_max_rows: safety bound for the broadcast strategy.
         matched_ts_col: if set, also emit the matched right timestamp under
             this name (useful for age features / tolerance audits).
         right_tiebreak: extra right columns ordering ties among right rows with
@@ -234,30 +185,8 @@ def asof_join(
         matched_ts_col=matched_ts_col,
     )
     _check_no_clash(left, spec.payload(on), matched_ts_col)
-
-    if strategy == "auto":
-        if hot_keys or hot_key_threshold:
-            strategy = "union"
-        else:
-            strategy = (
-                "broadcast"
-                if _estimated_bytes(right) <= _broadcast_threshold(left)
-                else "union"
-            )
-
-    if strategy in ("union", "merge"):
-        bounds = _hot_key_bounds(spec, on, hot_keys, hot_key_threshold, salt_factor)
-        return carry_forward(left, [spec], on, left_ts, allow_exact_matches, bounds)
-    if strategy == "broadcast":
-        return _asof_broadcast(
-            left, spec, on, left_ts, allow_exact_matches, broadcast_max_rows
-        )
-    raise ValueError(f"unknown strategy {strategy!r}")
-
-
-# ---------------------------------------------------------------------------
-# union strategy: one shuffle, shared-window carry-forward, full codegen
-# ---------------------------------------------------------------------------
+    bounds = _hot_key_bounds(spec, on, hot_keys, hot_key_threshold, salt_factor)
+    return carry_forward(left, [spec], on, left_ts, allow_exact_matches, bounds)
 
 
 def carry_forward(
@@ -470,115 +399,3 @@ def _split_ranges(
     return u.join(F.broadcast(bounds), _null_safe_eq(on, hk), "left").select(
         *u.columns, rng.alias(_RANGE)
     )
-
-
-# ---------------------------------------------------------------------------
-# broadcast strategy: small right side, zero shuffle on the left
-# ---------------------------------------------------------------------------
-
-
-def _right_frame(spec: FeatureSpec, on: list[str]) -> DataFrame:
-    """Right columns the pandas kernel reads: key(s), the right ts under
-    ``_RTS`` and the payload, then the tiebreaks (sorted on, never emitted)."""
-    return spec.df.select(
-        *on,
-        F.col(spec.ts).alias(_RTS),
-        *spec.payload(on),
-        *[F.col(c).alias(f"__tb_{c}") for c in spec.tiebreak],
-    )
-
-
-def _sort_right(rpdf: pd.DataFrame, tiebreak: list[str]) -> pd.DataFrame:
-    """Stable sort by (ts, *tiebreak), nulls first like Spark's ascending
-    order, so the last of a tied run by tiebreak is the one merge_asof picks."""
-    tb = [f"__tb_{c}" for c in tiebreak]
-    return rpdf.sort_values([_RTS, *tb], kind="mergesort", na_position="first")
-
-
-def _merge_sorted(
-    lpdf: pd.DataFrame,
-    rpdf: pd.DataFrame,
-    on: list[str],
-    left_ts: str,
-    payload: list[str],
-    allow_exact: bool,
-) -> pd.DataFrame:
-    """Backward ``merge_asof`` of ``lpdf`` against ``rpdf`` (sorted by
-    :func:`_sort_right`), in left row order: the left columns, the payload,
-    then the matched right ts as ``_RTS``."""
-    out_names = list(lpdf.columns) + payload + [_RTS]
-    if lpdf.empty or rpdf.empty:
-        return lpdf.assign(**{c: None for c in payload + [_RTS]})[out_names]
-    lpdf = lpdf.assign(**{_ORD: np.arange(len(lpdf))}).sort_values(
-        left_ts, kind="mergesort"
-    )
-    merged = pd.merge_asof(
-        lpdf,
-        rpdf,
-        left_on=left_ts,
-        right_on=_RTS,
-        by=on,
-        direction="backward",
-        allow_exact_matches=allow_exact,
-    ).sort_values(_ORD)
-    return _denanify(merged, payload)[out_names]
-
-
-def _merged_schema(left: DataFrame, right: DataFrame, payload: list[str]) -> StructType:
-    right_fields = {f.name: f for f in right.schema.fields}
-    return StructType(
-        list(left.schema.fields)
-        + [StructField(c, right_fields[c].dataType, True) for c in payload]
-        + [StructField(_RTS, right_fields[_RTS].dataType, True)]
-    )
-
-
-def _finish(
-    merged: DataFrame,
-    left_cols: list[str],
-    spec: FeatureSpec,
-    on: list[str],
-    left_ts: str,
-) -> DataFrame:
-    """Tolerance mask and output columns of a pandas-kernel result."""
-    m_ts = F.col(_RTS)
-    out = [F.col(c) for c in left_cols] + [
-        _within_tolerance(F.col(c), m_ts, F.col(left_ts), spec.tolerance).alias(c)
-        for c in spec.payload(on)
-    ]
-    if spec.matched_ts_col:
-        out.append(
-            _within_tolerance(m_ts, m_ts, F.col(left_ts), spec.tolerance).alias(
-                spec.matched_ts_col
-            )
-        )
-    return merged.select(*out)
-
-
-def _asof_broadcast(
-    left: DataFrame,
-    spec: FeatureSpec,
-    on: list[str],
-    left_ts: str,
-    allow_exact: bool,
-    broadcast_max_rows: int,
-) -> DataFrame:
-    rframe = _right_frame(spec, on)
-    rpdf = rframe.limit(broadcast_max_rows + 1).toPandas()
-    if len(rpdf) > broadcast_max_rows:
-        raise ValueError(
-            f"right side exceeds broadcast_max_rows={broadcast_max_rows}; "
-            "use strategy='union'"
-        )
-    bc = left.sparkSession.sparkContext.broadcast(_sort_right(rpdf, spec.tiebreak))
-    payload = spec.payload(on)
-
-    def merge_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rp = bc.value
-        for lpdf in batches:
-            yield _merge_sorted(lpdf, rp, on, left_ts, payload, allow_exact)
-
-    merged = left.mapInPandas(
-        merge_iter, schema=_merged_schema(left, rframe, payload)
-    )
-    return _finish(merged, left.columns, spec, on, left_ts)

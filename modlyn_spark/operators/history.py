@@ -19,8 +19,8 @@ Physical plan — two composable stages, never a probe x event join:
    one ordered last (it already contains its peers in the array).
 2. the as-of join (operators/asof.py) attaches each probe to the latest
    event row at-or-before its timestamp — whose rolling array IS the
-   probe's last-n history, by construction: the single-shuffle union
-   window or the broadcast escape hatch, picked by ``strategy``.
+   probe's last-n history, by construction (one shuffle of probes and
+   collapsed event rows, one running window).
 
 The naive alternative — join probes to all earlier events and rank —
 is O(probes x events) per entity and explodes on hot entities; this
@@ -61,7 +61,6 @@ def history_features(
     allow_exact_matches: bool = True,
     out_prefix: str = "hist_",
     count_col: str = "hist_n",
-    strategy: str = "auto",
 ) -> DataFrame:
     """All probe columns + per value column ``<out_prefix><col>`` (an
     array of the last ``n`` values, most-recent-first, empty when the
@@ -124,7 +123,6 @@ def history_features(
         "__ets",
         right_cols=["__hist"],
         allow_exact_matches=allow_exact_matches,
-        strategy=strategy,
     )
     hist = F.coalesce(
         F.col("__hist"),

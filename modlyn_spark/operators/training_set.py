@@ -13,7 +13,7 @@ spine. Here it is ONE shuffle when every feature table shares the spine's
 entity key (the common feature-store case): the spine and all N state
 tables go through the shared-window carry-forward kernel
 (:func:`modlyn_spark.operators.asof.carry_forward`, the same kernel as
-``asof_join(strategy="union")``), so Catalyst plans a single Exchange +
+``asof_join``), so Catalyst plans a single Exchange +
 Sort + Window for the whole assembly; per-table ``tolerance`` (max state
 age) and column ``prefix`` are applied on the way out.
 
@@ -21,7 +21,7 @@ At 100 TB the plan moves spine + Σ(state tables) through exactly one
 shuffle — the same bytes a SINGLE as-of join of the concatenated state
 would move, and N× less spine traffic than chaining.
 
-Semantics per table match ``asof_join(strategy="union")``: latest right
+Semantics per table match ``asof_join``: latest right
 row with ``ts <= spine_ts`` (``<`` when ``allow_exact_matches=False``);
 ties among same-(key, ts) state rows are resolved by ``tiebreak`` columns
 (last wins) or should be pre-deduplicated by the caller.

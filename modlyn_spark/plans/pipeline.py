@@ -106,7 +106,13 @@ def image_feature_pipeline(
     Returns DataFrame(image_id, feature_ts, label, features: array<double>)
     with features = IMAGE_FEATURE_NAMES, all as-of the request timestamp.
     ``decode_px_stats=True`` swaps the px_mean proxy for real decoded
-    per-pixel means (see image_state_features)."""
+    per-pixel means (see image_state_features). ``asof_strategy`` is kept
+    for callers that still pass it: ``"union"`` and ``"merge"`` both name
+    the one as-of plan, anything else raises ``ValueError``."""
+    if asof_strategy not in ("union", "merge"):
+        raise ValueError(
+            f"asof_strategy must be 'union' or 'merge', got {asof_strategy!r}"
+        )
     state = image_state_features(images, gap_seconds, decode_px_stats=decode_px_stats)
     joined = asof_join(
         requests,
@@ -121,7 +127,6 @@ def image_feature_pipeline(
             "n_in_session_so_far",
             "px_mean_ffill",
         ],
-        strategy=asof_strategy,
         hot_key_threshold=hot_key_threshold,
         matched_ts_col="state_ts",
     )
@@ -189,7 +194,6 @@ def events_feature_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         on="user_id",
         left_ts="feature_ts",
         right_ts="ts",
-        strategy="union",
         matched_ts_col="state_ts",
     )
     feats = joined.select(

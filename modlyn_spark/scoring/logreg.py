@@ -53,7 +53,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-from modlyn_spark.scoring.blocks import BatchBlocks
+from modlyn_spark.scoring.blocks import BatchBlocks, _dense
 
 
 def assign_batches(
@@ -231,18 +231,22 @@ class _SoftmaxStack:
         W, b = self.W.reshape(M * k, d), self.b.reshape(M * k)
         schema = StructType(df.schema.fields + [StructField(out_col, LongType(), False)])
 
-        def pred(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                X = np.stack(pdf[features_col].to_numpy()).astype(np.float64)
-                own = 0 if fold_col is None else pdf[fold_col].to_numpy(dtype=np.int64)
-                logits = (X @ W.T + b).reshape(len(X), M, k)
-                pdf = pdf.copy()
-                pdf[out_col] = np.argmax(logits[np.arange(len(X)), own], axis=1)
-                yield pdf
+        def pred(batches: Iterator) -> Iterator:
+            import pyarrow as pa
 
-        return df.mapInPandas(pred, schema=schema)
+            for rb in batches:
+                if not rb.num_rows:
+                    continue
+                X = _dense(rb.column(features_col), d)
+                own = (
+                    0 if fold_col is None
+                    else rb.column(fold_col).to_numpy(zero_copy_only=False).astype(np.int64)
+                )
+                logits = (X @ W.T + b).reshape(len(X), M, k)
+                idx = np.argmax(logits[np.arange(len(X)), own], axis=1)
+                yield rb.append_column(out_col, pa.array(idx, pa.int64()))
+
+        return df.mapInArrow(pred, schema=schema)
 
 
 class DistributedLogReg:

@@ -51,12 +51,18 @@ def label_encode(df: DataFrame, label_col: str) -> tuple[list, DataFrame]:
     int codes. Returns (classes, df with ``<label_col>_idx``).
 
     The mapping is collected (n_classes is small) and applied as a broadcast
-    literal map — no join, no shuffle.
+    literal map — no join, no shuffle. A null label raises ``ValueError``
+    (a map cannot hold a null key).
     """
     classes = [
         r[0]
         for r in df.select(label_col).distinct().orderBy(label_col).collect()
     ]
+    if None in classes:
+        raise ValueError(
+            f"label column {label_col!r} holds null label(s); "
+            "drop or fill them before encoding"
+        )
     mapping = F.create_map(
         *[x for i, c in enumerate(classes) for x in (F.lit(c), F.lit(i))]
     )

@@ -198,6 +198,17 @@ def write_checkpointed(
             f"{hash_family!r} — rerun with the original portable_hash "
             "setting (or start a fresh path)"
         )
+    # the same holds for the bucket count and the key: another layout
+    # assigns rows to other buckets, so the missing ones would re-write
+    # rows already committed under the recorded layout
+    for name, want in [("n_buckets", n_buckets), ("key_cols", list(key_cols))]:
+        other = {repr(rec[name]) for rec in done.values() if rec.get(name, want) != want}
+        if other:
+            raise ValueError(
+                f"checkpoint at {path} was written with {name}="
+                f"{', '.join(sorted(other))}; resume requested {name}={want!r} "
+                "— rerun with the original layout (or start a fresh path)"
+            )
     bucketed = df.withColumn(_BUCKET, _bucket_col(key_cols, n_buckets, hash_family))
     todo_buckets = [b for b in range(n_buckets) if b not in done]
     result = {"computed": todo_buckets, "skipped": sorted(done), "rows_written": 0}

@@ -2,7 +2,7 @@
 
     spark-submit --py-files modlyn_spark.zip scripts/run_pipeline.py \
         --images /path/images --requests /path/requests --out /path/features \
-        [--gap-seconds 600] [--asof-strategy union|merge|broadcast] \
+        [--gap-seconds 600] \
         [--hot-key-threshold N] [--n-buckets 64] [--score-out /path/scores]
 
 Output is written through the manifest-based checkpoint layer: re-submitting
@@ -33,10 +33,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--out", required=True)
     p.add_argument("--score-out", default=None)
     p.add_argument("--gap-seconds", type=int, default=600)
-    p.add_argument("--asof-strategy", default="union",
-                   choices=["union", "merge", "broadcast"],
-                   help="as-of join plan: union window (merge is another "
-                        "name for it) or broadcast of the state side")
     p.add_argument("--hot-key-threshold", type=int, default=None,
                    help="split images with more state rows than this into "
                         "time ranges inside the union window")
@@ -96,7 +92,6 @@ def main(argv: list[str] | None = None) -> int:
         images,
         requests,
         gap_seconds=args.gap_seconds,
-        asof_strategy=args.asof_strategy,
         hot_key_threshold=args.hot_key_threshold,
     )
     result = write_checkpointed(
@@ -105,7 +100,7 @@ def main(argv: list[str] | None = None) -> int:
         key_cols=["image_id", "feature_ts"],
         n_buckets=args.n_buckets,
         lineage=f"image_feature_pipeline(images={args.images}, "
-        f"requests={args.requests}, strategy={args.asof_strategy})",
+        f"requests={args.requests})",
     )
     summary = {
         "out": args.out,

@@ -114,10 +114,10 @@ if steady:
     # (it costs the 4-core run ~10% and the 1-core run ~3%).
     si = images.where(F.pmod(F.xxhash64("image_id"), F.lit(25)) == 0)
     sr = requests.where(F.pmod(F.xxhash64("image_id"), F.lit(25)) == 0)
-    score_features(image_feature_pipeline(si, sr, asof_strategy="union")).collect()
+    score_features(image_feature_pipeline(si, sr)).collect()
 
 t0 = time.perf_counter()
-feats = image_feature_pipeline(images, requests, asof_strategy="union")
+feats = image_feature_pipeline(images, requests)
 ranked = score_features(feats)
 ranked.collect()
 dt = time.perf_counter() - t0

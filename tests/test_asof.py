@@ -1,5 +1,5 @@
-"""As-of join: all three strategies vs the pandas merge_asof oracle, plus
-temporal-leakage and boundary adversarial tests (SURVEY.md §5.2-4)."""
+"""As-of join vs the pandas merge_asof oracle, plus temporal-leakage and
+boundary adversarial tests (SURVEY.md §5.2-4)."""
 
 from __future__ import annotations
 
@@ -14,14 +14,12 @@ from modlyn_spark.oracle.pandas_oracle import oracle_asof
 PAYLOAD = ["value", "state", "version"]
 
 
-def _run(
-    spark, events_pdf, probes_pdf, strategy, matched_ts_col="matched_ts", **kw
-):
+def _run(spark, events_pdf, probes_pdf, matched_ts_col="matched_ts", **kw):
     left = spark.createDataFrame(probes_pdf)
     right = spark.createDataFrame(events_pdf)
     out = asof_join(
         left, right, on="key", left_ts="feature_ts", right_ts="ts",
-        right_cols=PAYLOAD, strategy=strategy, matched_ts_col=matched_ts_col, **kw,
+        right_cols=PAYLOAD, matched_ts_col=matched_ts_col, **kw,
     )
     return out.toPandas().sort_values("probe_id").reset_index(drop=True)
 
@@ -51,36 +49,31 @@ def _assert_match(got: pd.DataFrame, exp: pd.DataFrame):
             ), c
 
 
-@pytest.mark.parametrize("strategy", ["union", "merge", "broadcast"])
-def test_asof_matches_oracle(spark, events_pdf, probes_pdf, strategy):
-    got = _run(spark, events_pdf, probes_pdf, strategy)
+def test_asof_matches_oracle(spark, events_pdf, probes_pdf):
+    got = _run(spark, events_pdf, probes_pdf)
     exp = _oracle(events_pdf, probes_pdf)
     _assert_match(got, exp)
 
 
-@pytest.mark.parametrize("strategy", ["union", "merge", "broadcast"])
-def test_asof_strict_inequality(spark, events_pdf, probes_pdf, strategy):
-    got = _run(spark, events_pdf, probes_pdf, strategy, allow_exact_matches=False)
+def test_asof_strict_inequality(spark, events_pdf, probes_pdf):
+    got = _run(spark, events_pdf, probes_pdf, allow_exact_matches=False)
     exp = _oracle(events_pdf, probes_pdf, allow_exact_matches=False)
     _assert_match(got, exp)
 
 
 def test_asof_salted_hot_keys(spark, events_pdf, probes_pdf):
-    got = _run(
-        spark, events_pdf, probes_pdf, "merge", hot_key_threshold=50, salt_factor=4
-    )
+    got = _run(spark, events_pdf, probes_pdf, hot_key_threshold=50, salt_factor=4)
     exp = _oracle(events_pdf, probes_pdf)
     _assert_match(got, exp)
 
 
 def test_asof_explicit_hot_keys(spark, events_pdf, probes_pdf):
-    got = _run(spark, events_pdf, probes_pdf, "merge", hot_keys=["ent_000"])
+    got = _run(spark, events_pdf, probes_pdf, hot_keys=["ent_000"])
     exp = _oracle(events_pdf, probes_pdf)
     _assert_match(got, exp)
 
 
-@pytest.mark.parametrize("strategy", ["union", "merge", "broadcast"])
-def test_no_temporal_leakage(spark, events_pdf, probes_pdf, strategy):
+def test_no_temporal_leakage(spark, events_pdf, probes_pdf):
     """Poison every entity's future: add right rows strictly AFTER the
     entity's latest probe with a sentinel value. If the join ever looks
     forward in time, the sentinel shows up."""
@@ -94,7 +87,7 @@ def test_no_temporal_leakage(spark, events_pdf, probes_pdf, strategy):
         [events_pdf, poison[["key", "ts", "value", "state", "version"]]],
         ignore_index=True,
     )
-    got = _run(spark, poisoned_right, probes_pdf, strategy)
+    got = _run(spark, poisoned_right, probes_pdf)
     assert not (got["value"].dropna() == 1e18).any()
     assert not (got["state"].dropna() == -1).any()
     # and the non-poisoned answers are unchanged
@@ -103,24 +96,21 @@ def test_no_temporal_leakage(spark, events_pdf, probes_pdf, strategy):
 
 
 def test_asof_tolerance(spark, events_pdf, probes_pdf):
-    """Every strategy (``auto`` picks broadcast for this small right side),
-    with and without the matched ts in the output."""
+    """With and without the matched ts in the output."""
     tol = F.expr("INTERVAL 10 SECONDS")
     exp = _oracle(
         events_pdf, probes_pdf, tolerance=pd.Timedelta(seconds=10)
     )
-    for strategy in ["union", "merge", "broadcast", "auto"]:
-        for matched_ts_col in ["matched_ts", None]:
-            got = _run(
-                spark, events_pdf, probes_pdf, strategy,
-                matched_ts_col=matched_ts_col, tolerance=tol,
-            )
-            assert ("matched_ts" in got.columns) == bool(matched_ts_col)
-            _assert_match(got, exp)
+    for matched_ts_col in ["matched_ts", None]:
+        got = _run(
+            spark, events_pdf, probes_pdf,
+            matched_ts_col=matched_ts_col, tolerance=tol,
+        )
+        assert ("matched_ts" in got.columns) == bool(matched_ts_col)
+        _assert_match(got, exp)
 
 
-@pytest.mark.parametrize("strategy", ["union", "merge", "broadcast"])
-def test_asof_tiebreak_independent_of_partitioning(spark, strategy):
+def test_asof_tiebreak_independent_of_partitioning(spark):
     """Two right rows at the same (key, ts): the one last by right_tiebreak
     wins whatever the right side's partitioning, exact and strict."""
     right = spark.createDataFrame(
@@ -151,7 +141,7 @@ def test_asof_tiebreak_independent_of_partitioning(spark, strategy):
                 asof_join(
                     left, r, on="key", left_ts="feature_ts", right_ts="ts",
                     right_cols=["val"], allow_exact_matches=exact,
-                    strategy=strategy, right_tiebreak=["seq"],
+                    right_tiebreak=["seq"],
                 )
                 .toPandas()
                 .sort_values("probe_id")
@@ -163,7 +153,6 @@ def test_union_is_single_exchange(spark, events_pdf, probes_pdf):
     out = asof_join(
         spark.createDataFrame(probes_pdf), spark.createDataFrame(events_pdf),
         on="key", left_ts="feature_ts", right_ts="ts", right_cols=PAYLOAD,
-        strategy="union",
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 1, plan
@@ -177,12 +166,11 @@ def test_asof_column_clash_raises(spark, events_pdf, probes_pdf):
         asof_join(left, right, on="key", left_ts="feature_ts", right_ts="ts")
 
 
-@pytest.mark.parametrize("strategy", ["merge", "broadcast", "union"])
-def test_asof_nested_array_payload_with_unmatched(spark, strategy):
-    """Array/struct payloads must survive every strategy INCLUDING
-    unmatched left rows: pd.merge_asof fills misses with float NaN, which
-    Arrow cannot coerce to a list type — the pandas paths normalize it to
-    None (regression for the history-features composition)."""
+def test_asof_nested_array_payload_with_unmatched(spark):
+    """Array payloads survive the join INCLUDING unmatched left rows, which
+    read NULL (a probe before any state, and a key with no state at all):
+    the history-features composition carries a rolling array through the
+    as-of join."""
     right = spark.createDataFrame(
         pd.DataFrame(
             {
@@ -209,12 +197,70 @@ def test_asof_nested_array_payload_with_unmatched(spark, strategy):
         (r["key"], str(r["feature_ts"])): r["hist"]
         for r in asof_join(
             left, right, on="key", left_ts="feature_ts", right_ts="ts",
-            strategy=strategy,
         ).collect()
     }
     assert got[("a", "2024-01-01 00:00:04")] is None
     assert got[("b", "2024-01-01 00:00:07")] is None
     assert got[("a", "2024-01-01 00:00:07")] == [1.0, 2.0]
+
+
+def _small_frames(spark):
+    left = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "key": ["a", "a", "b"],
+                "feature_ts": pd.to_datetime(
+                    ["2024-01-01 00:00:05", "2024-01-01 00:00:20", "2024-01-01 00:00:10"]
+                ),
+                "probe_id": [0, 1, 2],
+            }
+        )
+    )
+    right = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "key": ["a", "a", "b"],
+                "ts": pd.to_datetime(
+                    ["2024-01-01 00:00:01", "2024-01-01 00:00:10", "2024-01-01 00:00:30"]
+                ),
+                "val": [1.0, 2.0, 3.0],
+            }
+        )
+    )
+    return left, right
+
+
+def test_hot_keys_on_small_right_side(spark):
+    left, right = _small_frames(spark)
+    out = asof_join(
+        left, right, on="key", left_ts="feature_ts", right_ts="ts",
+        hot_keys=["a"], salt_factor=2,
+    )
+    got = out.toPandas().sort_values("probe_id")
+    assert np.allclose(got["val"].fillna(-1).values, [1.0, 2.0, -1.0])
+
+
+def test_building_the_plan_runs_no_job(spark):
+    """However small the right side, building the join only plans it: no
+    job runs until an action (the right side is never collected to the
+    driver), with or without tolerance and hot keys."""
+    left, right = _small_frames(spark)
+    sc = spark.sparkContext
+    group = "asof-plan-build"
+    sc.setJobGroup(group, group)
+    try:
+        for kw in [
+            {},
+            {"tolerance": F.expr("INTERVAL 1 SECOND"), "matched_ts_col": "m"},
+            {"hot_keys": ["a"], "salt_factor": 2},
+            {"hot_key_threshold": 1},
+        ]:
+            out = asof_join(left, right, on="key", left_ts="feature_ts",
+                            right_ts="ts", **kw)
+            out._jdf.queryExecution().executedPlan()
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
 
 
 # ---------------------------------------------------------------------------
@@ -286,7 +332,7 @@ def test_split_matches_oracle(spark, ts_kind, exact):
             got = (
                 asof_join(
                     spark.createDataFrame(pr), right, on="key", left_ts="feature_ts",
-                    right_ts="ts", right_cols=PAYLOAD, strategy="union",
+                    right_ts="ts", right_cols=PAYLOAD,
                     allow_exact_matches=exact, tolerance=tol,
                     matched_ts_col=matched_ts_col, right_tiebreak=["state"],
                     hot_key_threshold=10, salt_factor=8,
@@ -343,7 +389,7 @@ def test_split_plan_one_exchange_no_python(spark, events_pdf, probes_pdf):
     def join(**kw):
         return asof_join(
             left, right, on="key", left_ts="feature_ts", right_ts="ts",
-            right_cols=PAYLOAD, strategy="merge", **kw,
+            right_cols=PAYLOAD, **kw,
         )
 
     out = join(hot_key_threshold=50)
@@ -386,10 +432,10 @@ def test_split_plan_one_exchange_no_python(spark, events_pdf, probes_pdf):
 
 
 def test_merge_after_union_on_frames_of_one_parquet_scan(spark, tmp_path):
-    """Probes and state filtered from ONE parquet scan, a union join of the
-    two run first, then ``merge``: the former cogroup merge lost the key
-    column here (KeyError inside pd.merge_asof). ``merge`` now runs the
-    union window, so all three runs agree."""
+    """Probes and state filtered from ONE parquet scan, a plain join of the
+    two run first, then the same join again and one with hot keys split:
+    a former cogroup merge plan lost the key column on such frames
+    (KeyError inside pd.merge_asof). All three runs agree."""
     rng = np.random.default_rng(3)
     n = 600
     ev = pd.DataFrame(
@@ -413,11 +459,11 @@ def test_merge_after_union_on_frames_of_one_parquet_scan(spark, tmp_path):
     )
     kw = dict(on="user_id", left_ts="feature_ts", right_ts="ts", matched_ts_col="mts")
     got = [
-        asof_join(probes, state, strategy=s, **extra, **kw)
+        asof_join(probes, state, **extra, **kw)
         .toPandas()
         .sort_values("event_id")
         .reset_index(drop=True)
-        for s, extra in [("union", {}), ("merge", {}), ("merge", {"hot_key_threshold": 5})]
+        for extra in [{}, {}, {"hot_key_threshold": 5}]
     ]
     assert len(got[0]) == (ev["event_type"] != "purchase").sum()
     assert got[0]["pv"].notna().any()

@@ -1,5 +1,5 @@
 """As-of join with composite keys: (entity, shard) pairs must align
-independently per composite key in every strategy."""
+independently per composite key."""
 
 from __future__ import annotations
 
@@ -37,8 +37,7 @@ def multikey(spark):
     return pd.DataFrame(probes), right
 
 
-@pytest.mark.parametrize("strategy", ["union", "merge", "broadcast"])
-def test_multikey_asof(spark, multikey, strategy):
+def test_multikey_asof(spark, multikey):
     probes, right = multikey
     exp = oracle_asof(
         probes, right, on=["ent", "shard"], left_ts="feature_ts", right_ts="ts",
@@ -52,7 +51,6 @@ def test_multikey_asof(spark, multikey, strategy):
             left_ts="feature_ts",
             right_ts="ts",
             right_cols=["val", "v"],
-            strategy=strategy,
         )
         .toPandas()
         .sort_values("pid")
@@ -82,7 +80,6 @@ def test_multikey_salted_merge(spark, multikey):
             left_ts="feature_ts",
             right_ts="ts",
             right_cols=["val", "v"],
-            strategy="merge",
             hot_keys=[("e0", 0), ("e1", 1)],
             salt_factor=3,
         )

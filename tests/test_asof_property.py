@@ -1,7 +1,7 @@
 """Property-based as-of join testing: random event streams (random keys,
 duplicate timestamps, nulls, empty sides) must always match the pandas
-merge_asof oracle for every strategy, and with hot keys split into time
-ranges (a threshold low enough that most keys are cut)."""
+merge_asof oracle, without and with hot keys split into time ranges (a
+threshold low enough that most keys are cut)."""
 
 from __future__ import annotations
 
@@ -74,15 +74,12 @@ def test_asof_union_matches_oracle_property(spark, data, exact, split):
     )
     threshold, salt_factor = split
     hot = {"hot_key_threshold": threshold, "salt_factor": salt_factor}
-    for strategy, kw in [
-        ("union", {}), ("merge", {}), ("broadcast", {}), ("union", hot)
-    ]:
-        name = f"{strategy}{kw or ''}"
+    for kw in [{}, hot]:
+        name = f"split{kw}" if kw else "plain"
         got = (
             asof_join(
                 sleft, sright, on="key", left_ts="feature_ts", right_ts="ts",
-                right_cols=["val", "seq"], allow_exact_matches=exact,
-                strategy=strategy, **kw,
+                right_cols=["val", "seq"], allow_exact_matches=exact, **kw,
             )
             .toPandas()
             .sort_values("probe_id")

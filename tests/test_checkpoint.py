@@ -176,3 +176,19 @@ def test_resume_rejects_hash_family_switch(spark, tmp_path):
     assert r["computed"] == []
     with pytest.raises(ValueError, match="hash family"):
         write_checkpointed(df, out, ["id"], n_buckets=4, portable_hash=True)
+
+
+def test_resume_rejects_layout_switch(spark, tmp_path):
+    """Resuming a complete write under another bucket count or key would
+    compute the "missing" buckets of the new layout and write their rows a
+    second time; refuse instead."""
+    df = spark.range(1000).selectExpr("id", "id % 7 AS g")
+    out = str(tmp_path / "ck")
+    write_checkpointed(df, out, ["id"], n_buckets=4)
+    with pytest.raises(ValueError, match="n_buckets=4"):
+        write_checkpointed(df, out, ["id"], n_buckets=8)
+    with pytest.raises(ValueError, match="key_cols"):
+        write_checkpointed(df, out, ["g"], n_buckets=4)
+    assert write_checkpointed(df, out, ["id"], n_buckets=4)["computed"] == []
+    back = read_checkpointed(spark, out)
+    assert back.count() == back.distinct().count() == 1000

@@ -86,6 +86,13 @@ def test_image_pipeline_allclose(spark, strategy):
     assert np.allclose(G, E), np.argwhere(~np.isclose(G, E))[:5]
 
 
+def test_image_pipeline_rejects_unknown_asof_strategy(spark):
+    images = generate_images_df(spark, 4, num_partitions=1)
+    requests = spark.createDataFrame(synth_feature_requests(generate_images_pandas(4)))
+    with pytest.raises(ValueError, match="'union' or 'merge'"):
+        image_feature_pipeline(images, requests, asof_strategy="broadcast")
+
+
 def test_image_pipeline_salted_matches_unsalted(spark):
     images = generate_images_df(spark, 12, hot_every=6, hot_factor=20, num_partitions=4)
     requests = spark.createDataFrame(synth_feature_requests(generate_images_pandas(12, hot_every=6, hot_factor=20)))

@@ -144,6 +144,29 @@ def test_label_encode_sklearn_parity(spark, matrix_pdf):
     assert lut == {c: i for i, c in enumerate(classes)}
 
 
+def test_label_encode_rejects_null_label(spark):
+    df = spark.createDataFrame([("a",), (None,), ("b",)], "label string")
+    with pytest.raises(ValueError, match="'label' holds null label"):
+        label_encode(df, "label")
+
+
+def test_predict_df_rejects_bad_feature_vectors(spark):
+    """A null or short feature vector fails with the trainer's own decode
+    error, not a numpy shape error from inside the map."""
+    model = DistributedLogReg(2, ["a", "b"])
+    model.W = np.array([[1.0, 0.0], [0.0, 1.0]])
+    good = spark.createDataFrame(
+        [(0, [2.0, 1.0]), (1, [0.0, 3.0])], "id int, features array<double>"
+    )
+    got = model.predict_df(good).orderBy("id").collect()
+    assert [r["pred_idx"] for r in got] == [0, 1]
+    assert got[0]["features"] == [2.0, 1.0]
+    for bad in [(2, None), (2, [1.0])]:
+        df = good.union(spark.createDataFrame([bad], good.schema))
+        with pytest.raises(Exception, match="every feature vector must hold exactly 2 values"):
+            model.predict_df(df).collect()
+
+
 def test_batch_assignment_parity(spark, matrix_pdf):
     pdf, _, _ = matrix_pdf
     df = _spark_df(spark, pdf)

@@ -78,7 +78,7 @@ def _batch_expected(spark, state, requests):
         asof_join(
             requests, state,
             on="user_id", left_ts="feature_ts", right_ts="ts",
-            right_cols=["purchase_value"], strategy="union",
+            right_cols=["purchase_value"],
             matched_ts_col="state_ts",
         )
         .select("event_id", "purchase_value", "state_ts")

@@ -197,13 +197,13 @@ def test_compact_history_preserves_asof_semantics(spark, events_pdf, probes_pdf)
     left = spark.createDataFrame(probes_pdf)
     full = asof_join(
         left, right, on="key", left_ts="feature_ts", right_ts="ts",
-        right_cols=["value"], strategy="union",
+        right_cols=["value"],
     ).toPandas().sort_values("probe_id").reset_index(drop=True)
     compacted = compact_history(right, "key", "ts")
     assert compacted.count() < right.count()
     cmp = asof_join(
         left, compacted, on="key", left_ts="feature_ts", right_ts="ts",
-        right_cols=["value"], strategy="union",
+        right_cols=["value"],
     ).toPandas().sort_values("probe_id").reset_index(drop=True)
     pd.testing.assert_series_equal(full["value"], cmp["value"])
 
