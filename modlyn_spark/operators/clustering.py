@@ -2,18 +2,17 @@
 
 The curation primitive LLM-data pipelines use for topic balancing,
 cluster-based sampling, and semantic dedup at corpus scale. Same
-physical pattern as the scoring layer (scoring/stats.py partials):
+physical pattern as the other sufficient-statistics scans:
 
 - centroids live on the driver (k x dim — tiny) and broadcast each
   round inside the UDF closure;
-- one ``mapInPandas`` pass per round computes, per input partition, the
-  per-cluster (count, vector sum, inertia) partials with a single
-  (batch x dim) @ (dim x k) GEMM per Arrow batch — rows never shuffle,
-  only k x (dim + 2) scalars per partition come back;
-- partials tree-combine executor-side in ascending-pid order (float64;
-  operators/combine.py — the driver collects <= 64 rows per round, not
-  one per partition), so results are deterministic at ANY parallelism —
-  the same N-vs-4N invariant the logreg trainer guarantees;
+- one pass per round through ``operators/combine.sum_partials`` (the
+  engine's one reducer) sums the per-cluster (count, vector sum,
+  inertia) with a single (batch x dim) @ (dim x k) GEMM per Arrow batch
+  — rows never shuffle, only k x (dim + 2) numbers per task come back,
+  tree-combined executor-side in ascending-pid order, so results are
+  deterministic at ANY parallelism — the same N-vs-4N invariant the
+  logreg trainer guarantees;
 - iteration stops when assignments imply unchanged centroids (movement
   below ``tol``) or at ``max_iter``.
 
@@ -31,25 +30,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
-from modlyn_spark.operators.combine import collect_partials
-
-_PARTIAL_SCHEMA = StructType(
-    [
-        StructField("pid", LongType()),
-        StructField("counts", ArrayType(LongType())),
-        StructField("sums", ArrayType(DoubleType())),  # flattened (k, dim)
-        StructField("inertia", DoubleType()),
-    ]
-)
+from modlyn_spark.operators.combine import sum_partials
 
 
 def _init_centroids(
@@ -101,62 +84,26 @@ def kmeans_fit(
     Pass ``id_col`` so the init sample is unbiased under any storage
     order (see _init_centroids); the numpy twin (oracle_kmeans) mirrors
     the same md5-ordered pool when given ids."""
+    # with fewer init rows than k, the fit proceeds with the smaller k
+    # (matches the oracle twin's behavior)
     C = _init_centroids(df, vec_col, k, sample, seed, id_col=id_col)
-    if len(C) < k:
-        # fewer distinct init rows than requested clusters: proceed with
-        # the smaller k (matches the oracle twin's behavior) instead of
-        # shape-mismatching the partial combine
-        k = len(C)
     dim = C.shape[1]
     data = df.select(vec_col).cache()
     history: list[float] = []
 
     for _ in range(max_iter):
-        C_b = C  # captured in the closure, shipped with the task
+        c_sq = (C * C).sum(axis=1)
 
-        def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from pyspark import TaskContext
+        def assign(X):
+            # ||x - c||^2 = ||x||^2 - 2 x.c + ||c||^2; argmin over c
+            d = -2.0 * (X @ C.T) + c_sq[None, :]
+            a = d.argmin(axis=1)
+            sums = np.zeros((len(C), dim), dtype=np.float64)
+            np.add.at(sums, a, X)
+            inertia = float((d[np.arange(len(X)), a] + (X * X).sum(axis=1)).sum())
+            return np.bincount(a, minlength=len(C)), sums, inertia
 
-            pid = TaskContext.get().partitionId()
-            counts = np.zeros(len(C_b), dtype=np.int64)
-            sums = np.zeros((len(C_b), dim), dtype=np.float64)
-            inertia = 0.0
-            c_sq = (C_b * C_b).sum(axis=1)
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                # ||x - c||^2 = ||x||^2 - 2 x.c + ||c||^2; argmin over c
-                d = -2.0 * (X @ C_b.T) + c_sq[None, :]
-                a = d.argmin(axis=1)
-                inertia += float(
-                    (d[np.arange(len(X)), a] + (X * X).sum(axis=1)).sum()
-                )
-                counts += np.bincount(a, minlength=len(C_b))
-                np.add.at(sums, a, X)
-            if counts.sum():
-                yield pd.DataFrame(
-                    {
-                        "pid": [pid],
-                        "counts": [counts.tolist()],
-                        "sums": [sums.ravel().tolist()],
-                        "inertia": [inertia],
-                    }
-                )
-
-        # executor-side tree combine (operators/combine.py): driver gets
-        # <= 64 rows per iteration instead of one (k*d)-double partial per
-        # partition; bit-identical to a plain sorted collect when P <= 64
-        parts = collect_partials(
-            data.mapInPandas(partials, schema=_PARTIAL_SCHEMA)
-        )
-        counts = np.zeros(k, dtype=np.int64)
-        sums = np.zeros((k, dim), dtype=np.float64)
-        inertia = 0.0
-        for r in parts:
-            counts += np.asarray(r["counts"], dtype=np.int64)
-            sums += np.asarray(r["sums"], dtype=np.float64).reshape(k, dim)
-            inertia += r["inertia"]
+        counts, sums, inertia = sum_partials(data, assign)
         history.append(inertia)
         newC = C.copy()
         nz = counts > 0

@@ -1,95 +1,125 @@
-"""Executor-side tree combination of per-partition partial rows.
+"""One reducer for every sufficient-statistics scan.
 
-The shared collect path for the moment/GEMM reductions (PCA covariance,
-k-means centroid sums; the logreg trainers need none — one partial per
-step, scoring/blocks.py): a ``mapInPandas`` pass emits
-ONE wide row per input partition (id ``pid`` + numeric scalars + dense
-``array`` columns), and the driver needs their elementwise sum.
+The engine's closed-form scores (PCA covariance, correlation, z-scoring,
+drift and Mahalanobis moments, k-means and PQ centroid sums, ridge
+``A'A``, mutual-information and PSI count tensors) are all sums, over
+rows, of a few numpy arrays per Arrow batch. :func:`sum_partials` is the
+one scan behind them: the caller supplies only the per-batch math
+``fn(*cols)``, and the reducer
 
-Collecting the raw partials does not survive scale: a d=1024 PCA partial
-is d*(d+1) doubles ~ 8 MB, and a 100 TB input at 128 MB splits is ~800k
-partitions — terabytes shipped to the driver. Instead the partials are
-tree-combined executor-side: level l groups rows by ``pid % g_l`` and
-sums each group with a vectorized applyInPandas combiner, so the driver
-collects at most ``levels[-1]`` rows no matter how many partitions the
-scan produced.
+1. runs ONE ``mapInArrow`` pass in which each task decodes its Arrow
+   batches (a list column becomes float64 ``(n, d)`` through
+   ``blocks._dense`` with a null value read as NaN; any other column a
+   numpy array), sums the tuples ``fn`` returns in batch order, and ships
+   the sum as one binary row tagged with its partition id;
+2. tree-combines the partials executor-side: level l groups rows by
+   ``pid % _LEVELS[l]`` and folds each group in ascending pid order, so
+   the driver collects at most ``_LEVELS[-1]`` rows however many
+   partitions the scan had (a d=1024 moment partial is ~8 MB; a 100 TB
+   scan at 128 MB splits has ~800k of them);
+3. folds the surviving rows in pid order on the driver.
 
-Determinism contract (the N-vs-4N invariant the fixture oracles pin):
-
-- every group sums its member rows in ASCENDING ORIGINAL pid order
-  (numpy pairwise summation over the pid-sorted stack — deterministic
-  for a fixed member set), and the driver folds the surviving rows in
-  pid order;
-- when the partition count is <= every level's fanout (the correctness
-  gate always is: sf0.01 scans under local[32] yield <= 32 partials),
-  each group contains exactly one row and the combiner is an exact
-  identity — the collected rows are BIT-IDENTICAL to a plain
-  ``.collect()``, so the tree path can be always-on without perturbing
-  any fixture-pinned float.
+Rows never shuffle. Determinism: every fold runs in ascending pid order,
+so the result does not depend on task scheduling; when the partition
+count is at most every fanout (sf0.01 scans under local[32]), each group
+holds one row, the combine is an exact identity, and the result is
+bit-identical to a plain fold of the per-task partials in pid order.
 """
 
 from __future__ import annotations
 
+import pickle
+from typing import Callable, Iterator
+
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType
+
+from modlyn_spark.scoring.blocks import _dense, _null_as_nan
+
+# tree fanouts: the driver collects at most _LEVELS[-1] partials. Group
+# width at the first level is ~P/_LEVELS[0] rows; raise it for large d
+_LEVELS = (4096, 64)
+_SCHEMA = "pid long, part binary"
 
 
-def _make_combiner(schema):
-    array_cols = [
-        f.name for f in schema.fields if isinstance(f.dataType, ArrayType)
-    ]
-    scalar_cols = [
-        f.name
-        for f in schema.fields
-        if f.name != "pid" and not isinstance(f.dataType, ArrayType)
-    ]
-
-    def combine(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 1:
-            # exact identity (no float re-summation) for the common
-            # small-P case — but the pid must become the group key so the
-            # next level groups consistently
-            row = pdf.iloc[[0]][["pid", *scalar_cols, *array_cols]].copy()
-            row["pid"] = int(key[0])
-            return row
-        pdf = pdf.sort_values("pid", kind="mergesort")
-        out = {"pid": [int(key[0])]}
-        for c in scalar_cols:
-            out[c] = [pdf[c].sum()]
-        for c in array_cols:
-            out[c] = [np.sum(np.stack(pdf[c].to_numpy()), axis=0).tolist()]
-        return pd.DataFrame(out)
-
-    return combine
-
-
-def collect_partials(
-    partial_df: DataFrame, *, levels: tuple[int, ...] = (4096, 64)
-) -> list:
-    """Collect partial rows (schema: ``pid`` + summable columns),
-    tree-combining executor-side so the driver receives at most
-    ``levels[-1]`` rows. Numeric scalar columns sum; ``array`` columns
-    sum elementwise (dtype preserved: long arrays stay long).
-
-    Returns the rows sorted by pid — drop-in for
-    ``sorted(df.collect(), key=pid)``, and bit-identical to it whenever
-    the input partition count is below every level fanout (see module
-    docstring). Group width at the first level is ~P/levels[0] rows; at
-    d=1024 partials (~8 MB/row) and 800k partitions that is ~200 rows
-    (~1.6 GB) per combiner task — raise ``levels[0]`` for larger d.
-    """
-    schema = partial_df.schema
-    if "pid" not in schema.names:
-        raise ValueError("partial_df must carry a 'pid' column")
-    combine = _make_combiner(schema)
-    out = partial_df
-    for g in levels:
-        out = (
-            out.withColumn("__g", F.pmod(F.col("pid"), F.lit(int(g))))
-            .groupBy("__g")
-            .applyInPandas(combine, schema=schema)
+def _add(total, part):
+    if total is None:
+        return part
+    if any(np.shape(t) != np.shape(p) for t, p in zip(total, part)):
+        raise ValueError(
+            "partials differ in shape: every feature vector must hold the "
+            "same number of values"
         )
-    return sorted(out.collect(), key=lambda r: r["pid"])
+    return tuple(t + p for t, p in zip(total, part))
+
+
+def _row(pid: int, total):
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_arrays(
+        [pa.array([pid], pa.int64()), pa.array([pickle.dumps(total, 5)], pa.binary())],
+        names=["pid", "part"],
+    )
+
+
+def _columns(rb) -> list:
+    """The batch's columns as numpy: list columns float64 (n, d)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    cols = []
+    for col in rb.columns:
+        if pa.types.is_list(col.type):
+            d = pc.list_value_length(col)[0].as_py() or 0
+            cols.append(_dense(_null_as_nan(col), d))
+        else:
+            cols.append(col.to_numpy(zero_copy_only=False))
+    return cols
+
+
+def _map_fn(fn: Callable):
+    def partials(batches: Iterator) -> Iterator:
+        from pyspark import TaskContext
+
+        total = None
+        for rb in batches:
+            if rb.num_rows:
+                total = _add(total, tuple(fn(*_columns(rb))))
+        if total is not None:
+            yield _row(TaskContext.get().partitionId(), total)
+
+    return partials
+
+
+def _fold(bufs):
+    total = None
+    for buf in bufs:
+        total = _add(total, pickle.loads(buf))
+    return total
+
+
+def _combine(key, table):
+    """One group of partials folded in ascending pid order, re-keyed by
+    its group so the next level groups consistently."""
+    import pyarrow as pa
+
+    order = np.argsort(table.column("pid").to_numpy(), kind="stable")
+    total = _fold(table.column("part").take(order).to_pylist())
+    return pa.Table.from_batches([_row(int(key[0].as_py()), total)])
+
+
+def sum_partials(df: DataFrame, fn: Callable):
+    """Sum ``fn(*cols)`` over every non-empty Arrow batch of ``df``.
+
+    ``fn`` receives one numpy array per column of ``df`` (list columns as
+    float64 ``(n, d)``) and returns a tuple of addable numpy arrays or
+    scalars; it is shipped to the executors, so it should close over
+    O(model) state only. Returns the elementwise sum of those tuples,
+    shapes and dtypes intact (int64 counts stay exact), or ``None`` when
+    ``df`` has no rows.
+    """
+    out = df.mapInArrow(_map_fn(fn), _SCHEMA)
+    for g in _LEVELS:
+        out = out.groupBy(F.pmod("pid", F.lit(g))).applyInArrow(_combine, _SCHEMA)
+    return _fold(r["part"] for r in sorted(out.collect(), key=lambda r: r["pid"]))

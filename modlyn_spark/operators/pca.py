@@ -5,18 +5,16 @@ corpus scale: decorrelate or reduce ``array<float>`` embeddings when dim
 is modest (d <= ~2000) and n is astronomically large — exactly the regime
 where the (d x d) covariance fits on the driver but the data never could.
 
-Physical shape (the same partial-aggregation pattern as scoring/stats.py
-and clustering.py):
+Physical shape:
 
-- one ``mapInPandas`` pass computes per-partition (n, col-sum, X^T X)
-  with a single (batch x d)^T @ (batch x d) GEMM per Arrow batch — rows
-  NEVER shuffle; d*(d+1) doubles per partition come back;
-- partials tree-combine executor-side in ascending-pid order (float64;
-  operators/combine.py), so the fitted basis is deterministic at ANY
-  parallelism — the same N-vs-4N invariant the logreg trainer and
-  k-means keep — and the driver collects ~levels[-1] rows (≈ sqrt-P
-  behavior), never one partial per partition: at d=1024 a partial is
-  ~8 MB, so a raw collect from a 100 TB scan would ship terabytes;
+- ``feature_moments`` sums per-batch (n, col-sum, X^T X) — one
+  (batch x d)^T @ (batch x d) GEMM per Arrow batch — through
+  ``operators/combine.sum_partials``, the engine's one reducer: rows
+  NEVER shuffle, d*(d+1) doubles per task come back and tree-combine
+  executor-side in ascending-pid order, so the fitted basis is
+  deterministic at ANY parallelism and the driver collects a bounded
+  number of partials, never one per partition (at d=1024 a partial is
+  ~8 MB);
 - eigendecomposition of the (d x d) covariance runs on the driver
   (np.linalg.eigh — symmetric, stable), eigenvectors sign-fixed so each
   component's largest-|loading| entry is positive (basis is unique, not
@@ -39,24 +37,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
-from modlyn_spark.operators.combine import collect_partials
-
-_PARTIAL_SCHEMA = StructType(
-    [
-        StructField("pid", LongType()),
-        StructField("n", LongType()),
-        StructField("s", ArrayType(DoubleType())),      # column sums (d,)
-        StructField("xtx", ArrayType(DoubleType())),    # flattened (d, d)
-    ]
-)
+from modlyn_spark.operators.combine import sum_partials
 
 
 @dataclass
@@ -71,57 +54,24 @@ class PCAModel:
 def feature_moments(df: DataFrame, vec_col: str) -> tuple[int, np.ndarray, np.ndarray]:
     """One distributed pass over an ``array`` column: returns
     ``(n, column_sums (d,), X^T X (d, d))`` — the sufficient statistics for
-    PCA, covariance, correlation, and z-scoring. NULL vectors are excluded
-    (a None inside np.stack would otherwise die deep in the executor with
-    no row context). Partials are tree-combined executor-side
-    (operators/combine.py); deterministic under any partitioning."""
-    from modlyn_spark.operators.similarity import _vec_dim
+    PCA, covariance, correlation, and z-scoring, summed by
+    ``combine.sum_partials`` (deterministic under any partitioning). NULL
+    vectors are excluded; a null value inside a vector reads as NaN. With
+    no rows, ``n`` is 0 (and d is 0)."""
 
-    df = df.where(F.col(vec_col).isNotNull())
-    dim = _vec_dim(df, vec_col)
+    def moments(X):
+        return len(X), X.sum(axis=0), X.T @ X
 
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        n = 0
-        s = np.zeros(dim, dtype=np.float64)
-        xtx = np.zeros((dim, dim), dtype=np.float64)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            n += len(X)
-            s += X.sum(axis=0)
-            xtx += X.T @ X
-        if n:
-            yield pd.DataFrame(
-                {"pid": [pid], "n": [n], "s": [s.tolist()],
-                 "xtx": [xtx.ravel().tolist()]}
-            )
-
-    # executor-side tree combine: the driver collects at most 64 rows no
-    # matter how many partitions the scan produced (a raw collect of
-    # d=1024 partials from a 100 TB / 128 MB-split scan would be ~TBs);
-    # bit-identical to a plain sorted collect when P <= 64 — see
-    # operators/combine.py for the determinism contract
-    parts = collect_partials(
-        df.select(vec_col).mapInPandas(partials, schema=_PARTIAL_SCHEMA)
-    )
-    n = 0
-    s = np.zeros(dim, dtype=np.float64)
-    xtx = np.zeros((dim, dim), dtype=np.float64)
-    for r in parts:
-        n += int(r["n"])
-        s += np.asarray(r["s"], dtype=np.float64)
-        xtx += np.asarray(r["xtx"], dtype=np.float64).reshape(dim, dim)
-    return n, s, xtx
+    got = sum_partials(df.select(vec_col).where(F.col(vec_col).isNotNull()), moments)
+    if got is None:
+        return 0, np.zeros(0), np.zeros((0, 0))
+    return got
 
 
 def pca_fit(df: DataFrame, vec_col: str, n_components: int) -> PCAModel:
     """Fit PCA on an ``array``-typed column via :func:`feature_moments`.
-    One data pass; deterministic under any partitioning. Requires at
-    least 2 rows."""
+    One data pass plus a one-row probe of the width; deterministic under
+    any partitioning. Requires at least 2 rows."""
     from modlyn_spark.operators.similarity import _vec_dim
 
     dim = _vec_dim(df.where(F.col(vec_col).isNotNull()), vec_col)

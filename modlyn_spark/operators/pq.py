@@ -14,10 +14,9 @@ Physical design (all the audited house patterns):
 
 - **train** — one Lloyd's loop fits ALL ``m`` subspace codebooks
   simultaneously: per Arrow batch, reshape (n, dim) -> (n, m, dsub),
-  one GEMM per subspace against its codebook, partials keyed
-  (count, sum) per (subspace, code) tree-combined executor-side
-  (operators/combine.py — driver sees <= 64 rows/round, same as
-  ``clustering.kmeans_fit``). Rows never shuffle. Init is the shared
+  one GEMM per subspace against its codebook; the (count, sum) per
+  (subspace, code) are summed by ``operators/combine.sum_partials``,
+  the reducer ``clustering.kmeans_fit`` also runs. Rows never shuffle. Init is the shared
   md5-ordered sample pool (deterministic under any partitioning,
   unbiased under any storage order).
 - **encode** — one ``mapInPandas`` pass appending an
@@ -55,16 +54,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from modlyn_spark.operators.combine import collect_partials
-
-_PARTIAL_SCHEMA = StructType(
-    [
-        StructField("pid", LongType()),
-        StructField("counts", ArrayType(LongType())),  # flattened (m, k)
-        StructField("sums", ArrayType(DoubleType())),  # flattened (m, k, dsub)
-        StructField("inertia", DoubleType()),
-    ]
-)
+from modlyn_spark.operators.combine import sum_partials
 
 
 def _split(dim: int, m: int) -> int:
@@ -128,56 +118,24 @@ def pq_train(
     data = df.select(vec_col).where(F.col(vec_col).isNotNull()).cache()
     history: list[float] = []
     for _ in range(max_iter):
-        C_b = C
+        c_sq = (C * C).sum(axis=2)  # (m, k)
 
-        def partials(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            from pyspark import TaskContext
-
-            pid = TaskContext.get().partitionId()
+        def assign(X):
+            Xs = X.reshape(len(X), m, dsub)
             counts = np.zeros((m, k), dtype=np.int64)
             sums = np.zeros((m, k, dsub), dtype=np.float64)
             inertia = 0.0
-            c_sq = (C_b * C_b).sum(axis=2)  # (m, k)
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                Xs = X.reshape(len(X), m, dsub)
-                for j in range(m):
-                    d = -2.0 * (Xs[:, j] @ C_b[j].T) + c_sq[j][None, :]
-                    a = d.argmin(axis=1)
-                    inertia += float(
-                        (
-                            d[np.arange(len(X)), a]
-                            + (Xs[:, j] * Xs[:, j]).sum(axis=1)
-                        ).sum()
-                    )
-                    counts[j] += np.bincount(a, minlength=k)
-                    np.add.at(sums[j], a, Xs[:, j])
-            if counts.sum():
-                yield pd.DataFrame(
-                    {
-                        "pid": [pid],
-                        "counts": [counts.ravel().tolist()],
-                        "sums": [sums.ravel().tolist()],
-                        "inertia": [inertia],
-                    }
+            for j in range(m):
+                d = -2.0 * (Xs[:, j] @ C[j].T) + c_sq[j][None, :]
+                a = d.argmin(axis=1)
+                inertia += float(
+                    (d[np.arange(len(X)), a] + (Xs[:, j] * Xs[:, j]).sum(axis=1)).sum()
                 )
+                counts[j] = np.bincount(a, minlength=k)
+                np.add.at(sums[j], a, Xs[:, j])
+            return counts, sums, inertia
 
-        parts = collect_partials(
-            data.mapInPandas(partials, schema=_PARTIAL_SCHEMA)
-        )
-        counts = np.zeros((m, k), dtype=np.int64)
-        sums = np.zeros((m, k, dsub), dtype=np.float64)
-        inertia = 0.0
-        for r in parts:
-            counts += np.asarray(r["counts"], dtype=np.int64).reshape(m, k)
-            sums += np.asarray(r["sums"], dtype=np.float64).reshape(
-                m, k, dsub
-            )
-            inertia += r["inertia"]
+        counts, sums, inertia = sum_partials(data, assign)
         history.append(inertia)
         newC = C.copy()
         nz = counts > 0

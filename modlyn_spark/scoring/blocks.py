@@ -55,14 +55,29 @@ BLOCK_BYTES = 32 << 20
 
 
 def _dense(col, d: int) -> np.ndarray:
-    """An Arrow list<number> column of length-``d`` lists as float64 (n, d)."""
+    """An Arrow list<number> column of length-``d`` lists as float64 (n, d).
+    A null vector, a null value or a vector of another length raises."""
     import pyarrow.compute as pc
 
     lengths = pc.list_value_length(col).to_numpy(zero_copy_only=False)
-    if col.null_count or (lengths != d).any():
+    flat = col.flatten()
+    if col.null_count or flat.null_count or (lengths != d).any():
         raise ValueError(f"every feature vector must hold exactly {d} values")
-    flat = col.flatten().to_numpy(zero_copy_only=False)
+    flat = flat.to_numpy(zero_copy_only=False)
     return flat.astype(np.float64, copy=False).reshape(len(col), d)
+
+
+def _null_as_nan(col):
+    """A list<number> column whose null values (inside its lists) read as
+    NaN. A column holding a null list is returned as it is, for
+    ``_dense`` to reject."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if col.null_count or not col.flatten().null_count:
+        return col
+    values = pc.fill_null(col.values.cast(pa.float64()), np.nan)
+    return type(col).from_arrays(col.offsets, values)
 
 
 def _block(y: np.ndarray, fold, X: np.ndarray) -> bytes:

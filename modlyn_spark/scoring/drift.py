@@ -103,11 +103,12 @@ def embedding_drift(
     run before retraining on a refreshed corpus.
 
     Physical plan: ONE moments pass per side through
-    ``operators/pca.feature_moments`` (per-Arrow-batch GEMM partials,
-    executor-side tree combine — rows never shuffle, the driver sees
-    <= 64 combined rows per side, and each side's scan gets the group
-    filter pushed down); the d-row report assembles driver-side. At
-    100 TB this is two filtered scans and nothing else."""
+    ``operators/pca.feature_moments`` (per-Arrow-batch GEMM partials
+    summed by ``operators/combine.sum_partials`` — rows never shuffle,
+    the driver sees <= 64 combined partials per side, and each side's
+    scan gets the group filter pushed down); the d-row report assembles
+    driver-side. At 100 TB this is two filtered scans and nothing
+    else."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import SparkSession

@@ -11,8 +11,9 @@ Physical design — the shared-moments pattern:
 
 - μ and Σ come from ONE ``operators.pca.feature_moments`` pass (the
   same (n, Σx, XᵀX) sufficient statistics PCA / standardize /
-  correlation selection already share): tree-combined partials, rows
-  never shuffle, driver state is O(d²);
+  correlation selection already share), summed by
+  ``operators.combine.sum_partials``: rows never shuffle, driver state
+  is O(d²);
 - the (d, d) ridge-regularized precision matrix inverts on the driver
   (d ≤ a few thousand — same driver-holds-the-model contract as the
   logreg weights) and broadcasts into one scoring ``mapInPandas``:

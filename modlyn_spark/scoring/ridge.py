@@ -6,11 +6,11 @@ For a CONTINUOUS target the classical analogue is the linear-model
 coefficient + its t-statistic, and at Spark scale the whole fit is one
 pass of sufficient statistics — no iterative training at all:
 
-- each partition accumulates the Gram block A'A (m x m, A = features
-  with an optional intercept column), the moment vector A'y, y'y and n
-  with one GEMM per Arrow batch;
-- partials tree-combine executor-side (operators/combine.py — the
-  driver sees <= 64 rows at any partition count);
+- ``operators/combine.sum_partials`` (the engine's one reducer) sums the
+  Gram block A'A (m x m, A = features with an optional intercept
+  column), the moment vector A'y, y'y and n, one GEMM per Arrow batch,
+  tree-combined executor-side (the driver sees a bounded number of
+  partials at any partition count);
 - the driver solves the m x m system (G + alpha*D) beta = c, D =
   identity with a zero at the intercept (the standard unpenalized
   intercept), and reads coefficient covariance off the closed form
@@ -20,37 +20,18 @@ pass of sufficient statistics — no iterative training at all:
 Scale notes: the data pass is shuffle-free; per-partition partial size
 is m*(m+3) doubles (~34 KB at d=64, ~8 MB at d=1024), independent of
 row count; the driver solve is O(m^3) on an m x m matrix. Determinism:
-partials sum in ascending pid order (combine.py contract), so results
+partials sum in ascending pid order (the reducer's contract), so results
 are allclose across parallelism levels — the N-vs-4N invariant.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-)
 
-from modlyn_spark.operators.combine import collect_partials
-
-_RIDGE_PARTIAL_SCHEMA = StructType(
-    [
-        StructField("pid", LongType()),
-        StructField("gram", ArrayType(DoubleType())),  # flattened (m, m)
-        StructField("aty", ArrayType(DoubleType())),  # (m,)
-        StructField("yy", DoubleType()),
-        StructField("n", LongType()),
-    ]
-)
+from modlyn_spark.operators.combine import sum_partials
 
 
 class RidgeResult:
@@ -87,62 +68,21 @@ class RidgeResult:
 def _suffstats(
     df: DataFrame, features_col: str, target_col: str, intercept: bool
 ) -> tuple[np.ndarray, np.ndarray, float, int]:
-    """One shuffle-free pass: tree-combined (A'A, A'y, y'y, n)."""
+    """One shuffle-free pass: (A'A, A'y, y'y, n) by ``sum_partials``."""
     fc, tc = features_col, target_col
     data = df.select(fc, F.col(tc).cast("double").alias(tc)).where(
         F.col(fc).isNotNull() & F.col(tc).isNotNull()
     )
 
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
+    def moments(X, y):
+        if intercept:
+            X = np.hstack([np.ones((len(X), 1)), X])
+        return X.T @ X, X.T @ y, float(y @ y), len(X)
 
-        pid = TaskContext.get().partitionId()
-        gram = None
-        aty = None
-        yy = 0.0
-        n = 0
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            X = np.stack(pdf[fc].to_numpy()).astype(np.float64)
-            if intercept:
-                X = np.hstack([np.ones((len(X), 1)), X])
-            y = pdf[tc].to_numpy(dtype=np.float64)
-            if gram is None:
-                m = X.shape[1]
-                gram = np.zeros((m, m))
-                aty = np.zeros(m)
-            gram += X.T @ X
-            aty += X.T @ y
-            yy += float(y @ y)
-            n += len(X)
-        if n:
-            yield pd.DataFrame(
-                {
-                    "pid": [pid],
-                    "gram": [gram.ravel().tolist()],
-                    "aty": [aty.tolist()],
-                    "yy": [yy],
-                    "n": [n],
-                }
-            )
-
-    rows = collect_partials(
-        data.mapInPandas(partials, schema=_RIDGE_PARTIAL_SCHEMA)
-    )
-    if not rows:
+    got = sum_partials(data, moments)
+    if got is None:
         raise ValueError("ridge_fit: no non-null rows")
-    m = int(np.sqrt(len(rows[0]["gram"])))
-    G = np.zeros((m, m))
-    c = np.zeros(m)
-    yy = 0.0
-    n = 0
-    for r in rows:  # already pid-sorted (deterministic combine order)
-        G += np.asarray(r["gram"]).reshape(m, m)
-        c += np.asarray(r["aty"])
-        yy += r["yy"]
-        n += r["n"]
-    return G, c, yy, n
+    return got
 
 
 def ridge_fit(

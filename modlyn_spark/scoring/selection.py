@@ -17,8 +17,10 @@ over the same ``array``-typed feature column:
 
 Scale design: everything derives from ONE distributed pass — the
 ``(n, Σx, XᵀX)`` sufficient statistics of ``operators.pca.feature_moments``
-(per-Arrow-batch GEMM partials, executor-side tree combine; rows never
-shuffle, the driver sees ≤64 combined rows). The d×d solve itself is
+(per-Arrow-batch GEMM partials summed by ``operators.combine.sum_partials``,
+the engine's one reducer; rows never shuffle, the driver sees ≤64
+combined partials). The mutual-information, PSI and mRMR count tensors
+are sums over the same reducer. The d×d solve itself is
 driver-side numpy: feature selection operates on d ≲ a few thousand
 features, so the matrix is ≤ tens of MB while the row count is unbounded.
 A zero-variance feature yields NULL correlations (matching SQL ``corr``)
@@ -32,6 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from modlyn_spark.operators.combine import sum_partials
 from modlyn_spark.operators.pca import feature_moments
 
 
@@ -154,8 +157,9 @@ def mutual_information(
 
     1. per-position min/max as 2d JVM aggregate expressions (pure codegen,
        no explode shuffle — positions stay inside the array);
-    2. one Arrow pass accumulating the (d × bins × labels) joint-count
-       tensor per partition, tree-combined executor-side; the driver gets
+    2. one ``sum_partials`` pass summing the (labels × d × bins)
+       joint-count tensor of each Arrow batch (labels are encoded to int
+       codes in the JVM), tree-combined executor-side; the driver gets
        ≤64 tensors and closes the plogp sum in numpy.
 
     Constant features (or single-label inputs) score 0. Rows with NULL
@@ -166,16 +170,6 @@ def mutual_information(
     At 100 TB: pass 1 ships 2d doubles per mapper, pass 2 ships one
     d·bins·L long tensor per partition — nothing row-shaped ever moves.
     """
-    from typing import Iterator
-
-    from pyspark.sql.types import (
-        ArrayType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    from modlyn_spark.operators.combine import collect_partials
     from modlyn_spark.operators.similarity import _vec_dim
 
     if bins < 2:
@@ -188,48 +182,26 @@ def mutual_information(
     labels = sorted(
         r[0] for r in base.select("__l").distinct().collect()
     )
-    lab_idx = {v: i for i, v in enumerate(labels)}
     nl = len(labels)
+    code = F.create_map(
+        *[x for i, v in enumerate(labels) for x in (F.lit(v), F.lit(i))]
+    )
 
     mn, mx = _minmax(base, d)
     w = np.where(mx > mn, (mx - mn) / float(bins), 1.0)
+    offs = np.arange(d, dtype=np.int64) * bins
 
-    schema = StructType(
-        [
-            StructField("pid", LongType()),
-            StructField("t", ArrayType(LongType())),  # (L, d, bins) flat
-        ]
-    )
-
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
+    def counts(X, li):
+        B = np.clip(np.floor((X - mn) / w).astype(np.int64), 0, bins - 1)
         t = np.zeros((nl, d * bins), dtype=np.int64)
-        seen = False
-        offs = np.arange(d, dtype=np.int64) * bins
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            seen = True
-            X = np.stack(pdf["__v"].to_numpy()).astype(np.float64)
-            B = np.clip(
-                np.floor((X - mn) / w).astype(np.int64), 0, bins - 1
-            )
-            li = pdf["__l"].map(lab_idx).to_numpy()
-            for i in range(nl):
-                sel = B[li == i]
-                if len(sel):
-                    t[i] += np.bincount(
-                        (sel + offs).ravel(), minlength=d * bins
-                    )
-        if seen:
-            yield pd.DataFrame({"pid": [pid], "t": [t.ravel().tolist()]})
+        for i in range(nl):
+            sel = B[li == i]
+            if len(sel):
+                t[i] = np.bincount((sel + offs).ravel(), minlength=d * bins)
+        return (t,)
 
-    parts = collect_partials(base.mapInPandas(partials, schema=schema))
-    t = np.zeros((nl, d, bins), dtype=np.int64)
-    for r in parts:
-        t += np.asarray(r["t"], dtype=np.int64).reshape(nl, d, bins)
+    (t,) = sum_partials(base.select("__v", code[F.col("__l")].alias("__c")), counts)
+    t = t.reshape(nl, d, bins)
     n = int(t.sum(axis=(0, 2))[0]) if d else 0
     if n < 1:
         raise ValueError("no rows with non-null vector and label")
@@ -261,39 +233,17 @@ def _minmax(base: DataFrame, d: int) -> tuple[np.ndarray, np.ndarray]:
 def _hist_tensor(
     base: DataFrame, d: int, bins: int, mn: np.ndarray, w: np.ndarray
 ) -> np.ndarray:
-    """(d, bins) histogram counts: one Arrow pass of per-partition
-    tensors, tree-combined. Values outside [mn, mx] clamp to edge bins."""
-    from typing import Iterator
-
-    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
-
-    from modlyn_spark.operators.combine import collect_partials
-
-    schema = StructType(
-        [StructField("pid", LongType()), StructField("t", ArrayType(LongType()))]
-    )
+    """(d, bins) histogram counts: one ``sum_partials`` pass of per-batch
+    tensors. Values outside [mn, mx] clamp to edge bins; no rows give
+    zero counts."""
     offs = np.arange(d, dtype=np.int64) * bins
 
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
+    def counts(X):
+        B = np.clip(np.floor((X - mn) / w).astype(np.int64), 0, bins - 1)
+        return (np.bincount((B + offs).ravel(), minlength=d * bins),)
 
-        pid = TaskContext.get().partitionId()
-        t = np.zeros(d * bins, dtype=np.int64)
-        seen = False
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            seen = True
-            X = np.stack(pdf["__v"].to_numpy()).astype(np.float64)
-            B = np.clip(np.floor((X - mn) / w).astype(np.int64), 0, bins - 1)
-            t += np.bincount((B + offs).ravel(), minlength=d * bins)
-        if seen:
-            yield pd.DataFrame({"pid": [pid], "t": [t.tolist()]})
-
-    out = np.zeros(d * bins, dtype=np.int64)
-    for r in collect_partials(base.mapInPandas(partials, schema=schema)):
-        out += np.asarray(r["t"], dtype=np.int64)
-    return out.reshape(d, bins)
+    got = sum_partials(base, counts)
+    return (np.zeros(d * bins, dtype=np.int64) if got is None else got[0]).reshape(d, bins)
 
 
 def psi_scores(
@@ -401,24 +351,14 @@ def pairwise_mutual_information(
     (nats) as :func:`mutual_information`'s relevance term.
 
     Same physical plan as the relevance pass: per-position equal-width
-    bins from one min/max aggregate, then ONE Arrow pass accumulating a
-    (d(d-1)/2, bins, bins) joint-count tensor per partition,
-    tree-combined; the driver closes the plogp sums. Per-partition state
+    bins from one min/max aggregate, then ONE ``sum_partials`` pass
+    summing a (d(d-1)/2, bins, bins) joint-count tensor per Arrow batch;
+    the driver closes the plogp sums. Per-partition state
     is d(d-1)/2 * bins^2 longs (~1.6 MB at d=64, bins=10) — independent
     of row count, but quadratic in d: this is a selection-scale-d
     operator (the bound :func:`correlation_matrix` and
     :func:`redundancy_prune` already document).
     """
-    from typing import Iterator
-
-    from pyspark.sql.types import (
-        ArrayType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    from modlyn_spark.operators.combine import collect_partials
     from modlyn_spark.operators.similarity import _vec_dim
 
     if bins < 2:
@@ -433,42 +373,22 @@ def pairwise_mutual_information(
 
     mn, mx = _minmax(base, d)
     w = np.where(mx > mn, (mx - mn) / float(bins), 1.0)
-
-    schema = StructType(
-        [
-            StructField("pid", LongType()),
-            StructField("t", ArrayType(LongType())),  # (npairs*bins*bins,)
-        ]
-    )
     b2 = bins * bins
     offs = np.arange(npairs, dtype=np.int64) * b2
 
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
+    def counts(X):
+        B = np.clip(np.floor((X - mn) / w).astype(np.int64), 0, bins - 1)
         t = np.zeros(npairs * b2, dtype=np.int64)
-        seen = False
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            seen = True
-            X = np.stack(pdf["__v"].to_numpy()).astype(np.float64)
-            B = np.clip(np.floor((X - mn) / w).astype(np.int64), 0, bins - 1)
-            # joint cell per pair: bin_i * bins + bin_j, offset per pair.
-            # Row-chunked: the (rows, npairs) index block is d^2/2 wide,
-            # so cap its footprint at ~512 rows (~8 MB at d=64) per slab
-            for lo in range(0, len(B), 512):
-                Bc = B[lo : lo + 512]
-                idx = (Bc[:, iu] * bins + Bc[:, ju]) + offs[None, :]
-                t += np.bincount(idx.ravel(), minlength=npairs * b2)
-        if seen:
-            yield pd.DataFrame({"pid": [pid], "t": [t.tolist()]})
+        # joint cell per pair: bin_i * bins + bin_j, offset per pair.
+        # Row-chunked: the (rows, npairs) index block is d^2/2 wide,
+        # so cap its footprint at ~512 rows (~8 MB at d=64) per slab
+        for lo in range(0, len(B), 512):
+            Bc = B[lo : lo + 512]
+            idx = (Bc[:, iu] * bins + Bc[:, ju]) + offs[None, :]
+            t += np.bincount(idx.ravel(), minlength=npairs * b2)
+        return (t,)
 
-    parts = collect_partials(base.mapInPandas(partials, schema=schema))
-    t = np.zeros(npairs * b2, dtype=np.int64)
-    for r in parts:
-        t += np.asarray(r["t"], dtype=np.int64)
+    (t,) = sum_partials(base, counts)
     t = t.reshape(npairs, bins, bins)
     n = int(t.sum(axis=(1, 2))[0]) if npairs else 0
     if npairs and n < 1:

@@ -39,7 +39,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from modlyn_spark.scoring.blocks import _dense
+from modlyn_spark.scoring.blocks import _dense, _null_as_nan
 
 # Wilcoxon histogram bins a task holds before it ships them (map side) or
 # scores the features it holds completely (combine side)
@@ -114,7 +114,7 @@ class _RowDecoder:
             self.d = int(pc.list_value_length(feats)[0].as_py())
         idx, names = _codes(rb.column(0))
         lut = np.array([self.code.setdefault(v, len(self.code)) for v in names], dtype=np.int64)
-        return lut[idx], _dense(feats, self.d)
+        return lut[idx], _dense(_null_as_nan(feats), self.d)
 
 
 def _lists(values: np.ndarray, offsets: np.ndarray):

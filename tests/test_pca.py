@@ -37,34 +37,57 @@ def emb(spark):
     return df, X
 
 
-def test_collect_partials_tree_combine(spark):
-    """The shared partial collector (operators/combine.py): bit-identical
-    to a plain sorted collect at small P (identity groups), and the exact
-    elementwise sum — dtypes preserved — when the tree levels actually
-    combine (forced with tiny fanouts)."""
-    from modlyn_spark.operators.combine import collect_partials
+def test_sum_partials_reducer_contract(spark, monkeypatch):
+    """The one reducer (operators/combine.py): bit-identical to a numpy
+    fold of the per-task partials in pid order at small P, int64 partials
+    stay int64, exact sums when the tree levels actually combine (forced
+    with tiny fanouts over 37 partitions), and None on an empty frame."""
+    from modlyn_spark.operators import combine
+    from modlyn_spark.operators.combine import sum_partials
 
-    rows = [
-        {"pid": p, "n": p + 1, "s": [float(p), 2.0 * p], "c": [p, 2 * p]}
-        for p in range(37)
-    ]
-    sch = ("pid long, n long, s array<double>, c array<long>")
-    df = spark.createDataFrame(pd.DataFrame(rows), schema=sch)
+    # six partitions of 15 rows, no shuffle: each task's rows are fixed
+    df = spark.range(0, 90, 1, 6).select(
+        F.array(*[F.sin(F.col("id") * (j + 1)) for j in range(5)]).alias("v"),
+        F.col("id").alias("i"),
+    )
 
-    direct = sorted(df.collect(), key=lambda r: r["pid"])
-    got = collect_partials(df)  # default levels >> 37 -> identity
-    assert [r.asDict() for r in got] == [r.asDict() for r in direct]
+    def fn(X, i):
+        return X.sum(axis=0), X.T @ X, np.bincount(i % 4, minlength=4)
 
-    combined = collect_partials(df, levels=(8, 4))
-    assert [r["pid"] for r in combined] == [0, 1, 2, 3]
-    for g in range(4):
-        members = [r for r in rows if r["pid"] % 4 == g]
-        row = combined[g]
-        assert row["n"] == sum(m["n"] for m in members)
-        np.testing.assert_allclose(
-            row["s"], np.sum([m["s"] for m in members], axis=0)
-        )
-        assert row["c"] == list(np.sum([m["c"] for m in members], axis=0))
+    got = sum_partials(df, fn)
+    # every task holds one Arrow batch here, so its partial is fn of its rows
+    parts = (
+        df.withColumn("pid", F.spark_partition_id()).toPandas().groupby("pid", sort=True)
+    )
+    want = None
+    for _, p in parts:
+        part = fn(np.stack(p["v"].to_numpy()), p["i"].to_numpy())
+        want = part if want is None else tuple(w + q for w, q in zip(want, part))
+    assert len(got) == 3
+    for g, w in zip(got, want):
+        assert g.shape == w.shape and np.array_equal(g, w)
+    assert got[2].dtype == np.int64 and got[2].sum() == 90
+
+    monkeypatch.setattr(combine, "_LEVELS", (8, 4))
+    wide = spark.range(0, 370, 1, 37).select(
+        F.array(F.col("id").cast("double"), F.lit(1.0)).alias("v"), "id"
+    )
+    s, n, c = sum_partials(
+        wide, lambda X, i: (X.sum(axis=0), len(X), np.bincount(i % 3, minlength=3))
+    )
+    assert np.array_equal(s, [sum(range(370)), 370.0]) and n == 370
+    assert c.dtype == np.int64 and c.tolist() == [124, 123, 123]
+
+    assert sum_partials(wide.where("id < 0"), lambda X, i: (len(X),)) is None
+
+    # vectors of length 1 in one task and 3 in another must not broadcast
+    ragged = spark.range(0, 4, 1, 2).select(
+        F.when(F.col("id") < 2, F.array(F.lit(1.0)))
+        .otherwise(F.array(F.lit(1.0), F.lit(2.0), F.lit(3.0)))
+        .alias("v")
+    )
+    with pytest.raises(Exception, match="partials differ in shape"):
+        sum_partials(ragged, lambda X: (X.sum(axis=0),))
 
 
 def test_pca_and_kmeans_tree_combined_at_many_partitions(spark, emb):

@@ -161,10 +161,23 @@ def test_predict_df_rejects_bad_feature_vectors(spark):
     got = model.predict_df(good).orderBy("id").collect()
     assert [r["pred_idx"] for r in got] == [0, 1]
     assert got[0]["features"] == [2.0, 1.0]
-    for bad in [(2, None), (2, [1.0])]:
+    for bad in [(2, None), (2, [1.0]), (2, [None, 1.0])]:
         df = good.union(spark.createDataFrame([bad], good.schema))
         with pytest.raises(Exception, match="every feature vector must hold exactly 2 values"):
             model.predict_df(df).collect()
+
+
+def test_fit_rejects_null_feature_value(spark):
+    """A null value inside a training vector fails the fit with the
+    decode error instead of training non-finite weights."""
+    rows = [(i % 2, [float(i), 1.0 - i % 2], 0) for i in range(20)]
+    schema = "label_idx int, features array<double>, batch_id int"
+    good = spark.createDataFrame(rows, schema)
+    model = DistributedLogReg(2, ["a", "b"]).fit(good, max_steps=1, n_batches=1)
+    assert np.isfinite(model.W).all() and np.isfinite(model.losses).all()
+    bad = good.union(spark.createDataFrame([(0, [None, 1.0], 0)], schema))
+    with pytest.raises(Exception, match="every feature vector must hold exactly 2 values"):
+        DistributedLogReg(2, ["a", "b"]).fit(bad, max_steps=1, n_batches=1)
 
 
 def test_batch_assignment_parity(spark, matrix_pdf):
