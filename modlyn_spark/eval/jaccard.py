@@ -8,10 +8,10 @@ pairwise Jaccard |A∩B|/|A∪B|, append the analytic random baseline
 
 Two implementations:
 
-- ``CompareScores`` — driver-side pandas on wide score matrices, exact parity
-  with the reference including pandas nlargest tie semantics (score matrices
-  are k x d — tiny — so driver pandas is the right physical plan even at
-  cluster scale; SURVEY.md §3.3).
+- ``CompareScores`` — driver-side numpy on wide score matrices, exact parity
+  with the reference including pandas nlargest tie and NaN semantics
+  (score matrices are k x d — tiny — so the driver is the right physical
+  plan even at cluster scale; SURVEY.md §3.3).
 - ``topn_jaccard`` — distributed long-form variant for relational consumers:
   window top-k per (method, class), self-join on (class, feature) for the
   intersection, set sizes from a groupBy. Used when score tables are large
@@ -20,10 +20,12 @@ Two implementations:
 
 from __future__ import annotations
 
+from itertools import combinations
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from modlyn_spark.oracle.pandas_oracle import oracle_jaccard
 
 
 class CompareScores:
@@ -36,7 +38,52 @@ class CompareScores:
         self.results_df = None
 
     def compute_jaccard_comparison(self):
-        self.results_df = oracle_jaccard(self.dataframes, self.n_top_values)
+        """Long results (cell_line, n_top, method_pair, jaccard): per
+        n_top, class and method pair, then one random-baseline row per
+        n_top. Classes and features are the sorted ones common to every
+        matrix."""
+        names = [df.attrs["method_name"] for df in self.dataframes]
+        genes = sorted(set.intersection(*[set(df.columns) for df in self.dataframes]))
+        cells = sorted(set.intersection(*[set(df.index) for df in self.dataframes]))
+        # features per class by descending |score|, as pandas
+        # nlargest(keep="first"): a stable sort keeps the earlier feature of
+        # a tie, and NaN sorts last, in position order
+        order = {
+            name: np.argsort(
+                -np.abs(df.loc[cells, genes].to_numpy(np.float64)),
+                axis=1,
+                kind="stable",
+            )
+            for df, name in zip(self.dataframes, names)
+        }
+        rows = np.arange(len(cells))[:, None]
+        results = []
+        for n_top in self.n_top_values:
+            tops = {}
+            for name, o in order.items():
+                tops[name] = np.zeros((len(cells), len(genes)), dtype=bool)
+                tops[name][rows, o[:, :n_top]] = True
+            pairs = [
+                (f"{a}<->{b}", (tops[a] & tops[b]).sum(1), (tops[a] | tops[b]).sum(1))
+                for a, b in combinations(names, 2)
+            ]
+            for i, cell in enumerate(cells):
+                for pair, inter, union in pairs:
+                    results.append(
+                        {
+                            "cell_line": cell,
+                            "n_top": n_top,
+                            "method_pair": pair,
+                            "jaccard": int(inter[i]) / int(union[i]) if union[i] else 0,
+                        }
+                    )
+        n_genes = len(genes)
+        for n_top in self.n_top_values:
+            rj = 1.0 if n_top >= n_genes else (2 * n_top) / (2 * n_genes - n_top)
+            results.append(
+                {"n_top": n_top, "method_pair": "Random baseline", "jaccard": rj}
+            )
+        self.results_df = pd.DataFrame(results)
         return self.results_df
 
 

@@ -62,12 +62,14 @@ class SimpleLogReg:
         self.label_column = label_column
         self.features_col = features_col
         # ONE aggregate: feature width, sorted distinct labels (the
-        # label_encode class axis) and the null-label count
-        n_features, self.classes, n_null = df.agg(
+        # label_encode class axis), the null-label count and the row count
+        n_features, self.classes, n_null, self._n_rows = df.agg(
             F.max(F.size(features_col)),
             F.sort_array(F.collect_set(label_column)),
             F.count(F.when(F.col(label_column).isNull(), F.lit(1))),
+            F.count(F.lit(1)),
         ).first()
+        self._df = df
         if n_null:
             raise ValueError(
                 f"label column {label_column!r} holds {n_null} null label(s); "
@@ -92,17 +94,22 @@ class SimpleLogReg:
         an arbitrary frame would silently misalign indices whenever that
         frame holds a subset of the classes. Unseen labels raise.
 
-        Returns (encoded frame, row count): ONE eager aggregate counts the
-        rows and the non-null labels that found no class index; only when
-        the latter is non-zero does a bounded listing of the offenders run
-        (distinct labels anti-joined with the broadcast class list, at most
-        20 back — bounded even if a caller passes a near-unique column as
-        the label by mistake)."""
+        Returns (encoded frame, row count). On the constructor's frame,
+        whose labels made the class axis, nothing runs. Otherwise ONE
+        eager aggregate counts the rows and the non-null labels that found
+        no class index; only when the latter is non-zero does a bounded
+        listing of the offenders run (distinct labels anti-joined with the
+        broadcast class list, at most 20 back — bounded even if a caller
+        passes a near-unique column as the label by mistake)."""
         idx_col = f"{self.label_column}_idx"
         mapping = F.create_map(
             *[x for i, c in enumerate(self.classes) for x in (F.lit(c), F.lit(i))]
         )
         enc = df.withColumn(idx_col, mapping[F.col(self.label_column)])
+        # the constructor's frame (the same object, or the same plan:
+        # comparing plans runs no job) was counted already
+        if df is self._df or df.sameSemantics(self._df):
+            return enc, self._n_rows
         unseen_row = F.col(self.label_column).isNotNull() & F.col(idx_col).isNull()
         n_rows, n_unseen = enc.agg(
             F.count(F.lit(1)), F.count(F.when(unseen_row, F.lit(1)))

@@ -2,45 +2,51 @@
 
 The engine's one stacked softmax trainer (``scoring/logreg._SoftmaxStack``,
 behind ``DistributedLogReg``, ``RegPathLogReg`` and ``CVLogReg``) takes one
-gradient step per mini-batch for all its models at once. Filtering a
-cached table by ``batch_id`` still launches one task per cached partition
-on every step, so a step used to cost a full-width Python stage of which
-all but one task read nothing. This layout makes each step one Spark job
-of ONE task:
+gradient step per mini-batch for all its models at once. A Spark job costs
+~50 ms or more of fixed overhead plus a driver round trip, so a job per
+step would spend the reference's step budget on launches. This layout runs
+up to K steps in ONE task:
 
 1. the training columns are hash-repartitioned once, in the JVM, into
-   ``n_batches`` partitions such that partition ``b`` holds batch ``b``
-   alone (one shuffle of ``UnsafeRow``s; its map stage runs at set-up),
-   and each partition is sorted by ``(label, fold, features)`` in the JVM
-   (an external sort that spills like any other), which fixes a
-   canonical row order;
+   ceil(n_batches / K) partitions, K = ceil(n_batches / G) with
+   ``G = min(n_batches, defaultParallelism)``, such that partition ``g``
+   holds the K consecutive batches ``g*K .. g*K+K-1`` (one shuffle of
+   ``UnsafeRow``s; its map stage runs at set-up), and each partition is
+   sorted by ``(batch, label, fold, features)`` in the JVM (an external
+   sort that spills like any other), which fixes a canonical row order.
+   The partition keys come from a numpy port of Spark's int hash
+   (``_hash_int``), so finding them runs no job;
 2. an Arrow map streams each partition and cuts it into blocks of at
-   most ``BLOCK_BYTES``, each one raw buffer (row count, labels, optional
-   fold ids, float64 features). The blocks are kept in the JVM as plain
-   byte arrays, cached MEMORY_AND_DISK; the batches the first steps read
-   are packed up front, in parallel, any other on first use;
-3. a step runs ``SparkContext.runJob`` on partition ``bid``; the task
-   streams the batch's blocks (with their fold ids when the trainer masks
-   rows per model), sums their gradient partials in block order and ships
-   back one partial as numpy arrays.
+   most ``BLOCK_BYTES``, each one raw buffer (row count, batch id,
+   labels, optional fold ids, float64 features); no block spans two
+   batches. The blocks are kept in the JVM as plain byte arrays, cached
+   MEMORY_AND_DISK; when the first steps read more than one partition
+   those are packed up front, in parallel, any other on first use;
+3. a step group runs ``SparkContext.runJob`` on partition ``g``: the task
+   receives the trainer's state, and per batch in id order sums the
+   gradient partials of the batch's blocks in block order and applies the
+   update, for at most the steps left; it returns the new state and one
+   record per step. The driver writes the state back between groups, so
+   a group never spans an epoch and the epoch hook sees the update.
 
 Determinism: rows reach the pack in the canonical order and blocks are
-cut at fixed row counts, so a batch's blocks, and the order their
-partials are summed in, do not depend on how the shuffle delivered the
-rows; each step has exactly one partial to combine, so weights are
-bit-identical at any parallelism (the N-vs-4N invariant).
+cut at fixed row counts from each batch's first row, so a batch's blocks,
+and the order their partials are summed in, do not depend on how the
+shuffle delivered the rows nor on K; a step has exactly one partial, so
+weights are bit-identical at any parallelism (the N-vs-4N invariant).
 
-Scale notes: per step the driver ships O(weights) bytes to one task,
-which reads one batch's blocks and holds one at a time; no block comes
-near Arrow's 2 GB binary limit, and the pack holds one block plus one
-Arrow batch. The other cached partitions are not touched. A step's
-numpy work runs on one core: the layout pays off when steps are many
-and batches modest, the mini-batch regime; a batch of millions of rows
-would rather be split over several tasks.
+Scale notes: per group the driver ships O(state) bytes to one task, which
+reads K batches' blocks and holds one at a time; no block comes near
+Arrow's 2 GB binary limit, and the pack holds one block plus one Arrow
+batch. The other cached partitions are not touched. A step's numpy work
+runs on one core: the layout pays off when steps are many and batches
+modest, the mini-batch regime; a batch of millions of rows would rather
+be split over several tasks.
 """
 
 from __future__ import annotations
 
+from itertools import groupby
 from typing import Callable, Iterator
 
 import numpy as np
@@ -52,6 +58,41 @@ from pyspark.sql import functions as F
 
 # target size of one packed block; a batch larger than this spans several
 BLOCK_BYTES = 32 << 20
+
+
+def _group_size(n_batches: int, parallelism: int) -> int:
+    """K, the number of consecutive batches one partition (and one step
+    task) holds: the batches spread over at most ``parallelism``
+    partitions."""
+    return -(-n_batches // max(1, min(n_batches, parallelism)))
+
+
+def _rotl(x: np.ndarray, r: int) -> np.ndarray:
+    return (x << np.uint32(r)) | (x >> np.uint32(32 - r))
+
+
+def _hash_int(x: np.ndarray) -> np.ndarray:
+    """Spark's ``hash`` of an int column: Murmur3_x86_32 ``hashInt`` with
+    seed 42, as int32 (uint32 arithmetic wraps like Java's int)."""
+    k = np.asarray(x, dtype=np.int64).astype(np.uint32)
+    k = _rotl(k * np.uint32(0xCC9E2D51), 15) * np.uint32(0x1B873593)
+    h = _rotl(np.uint32(42) ^ k, 13) * np.uint32(5) + np.uint32(0xE6546B64)
+    h ^= np.uint32(4)  # the input length in bytes
+    h = (h ^ (h >> np.uint32(16))) * np.uint32(0x85EBCA6B)
+    h = (h ^ (h >> np.uint32(13))) * np.uint32(0xC2B2AE35)
+    return (h ^ (h >> np.uint32(16))).view(np.int32)
+
+
+def _partition_keys(n_parts: int) -> np.ndarray:
+    """For each partition p, the smallest int that
+    ``repartition(n_parts, key)`` (``pmod(hash(key), n_parts)``) sends to
+    p; a partition is left without one of 64n candidates with odds
+    ~n*e^-64."""
+    cand = np.arange(64 * n_parts)
+    found, keys = np.unique(_hash_int(cand) % n_parts, return_index=True)
+    if len(found) < n_parts:
+        raise RuntimeError(f"no partitioning key found for {n_parts} partitions")
+    return cand[keys]
 
 
 def _dense(col, d: int) -> np.ndarray:
@@ -80,47 +121,52 @@ def _null_as_nan(col):
     return type(col).from_arrays(col.offsets, values)
 
 
-def _block(y: np.ndarray, fold, X: np.ndarray) -> bytes:
-    """One block's buffer: int64 row count n, y, [fold], X (n, d)."""
-    parts = [np.array([len(y)], dtype=np.int64), y]
+def _block(bid: int, y: np.ndarray, fold, X: np.ndarray) -> bytes:
+    """One block's buffer: int64 row count n, int64 batch id, y, [fold],
+    X (n, d)."""
+    parts = [np.array([len(y), bid], dtype=np.int64), y]
     if fold is not None:
         parts.append(fold)
     return b"".join(p.tobytes() for p in parts + [X])
 
 
 def _unblock(buf: bytes, d: int, has_fold: bool):
-    """(X, y, fold) views over a block buffer (no copy)."""
-    n = int(np.frombuffer(buf, dtype=np.int64, count=1)[0])
-    y = np.frombuffer(buf, dtype=np.int64, count=n, offset=8)
-    off = 8 + 8 * n
+    """(batch id, (X, y, fold)) with views over a block buffer (no copy)."""
+    n, bid = (int(v) for v in np.frombuffer(buf, dtype=np.int64, count=2))
+    y = np.frombuffer(buf, dtype=np.int64, count=n, offset=16)
+    off = 16 + 8 * n
     fold = None
     if has_fold:
         fold = np.frombuffer(buf, dtype=np.int64, count=n, offset=off)
         off += 8 * n
     X = np.frombuffer(buf, dtype=np.float64, count=n * d, offset=off)
-    return X.reshape(n, d), y, fold
+    return bid, (X.reshape(n, d), y, fold)
 
 
-def _pack_fn(d: int, has_fold: bool, block_rows: int):
+def _pack_fn(d: int, has_fold: bool, block_rows: int, K: int):
     """mapInArrow body: the sorted (features, label, batch[, fold]) rows
-    of batch ``partition id`` -> blocks of at most ``block_rows`` rows."""
+    of batches ``K*pid .. K*pid+K-1`` -> blocks of at most ``block_rows``
+    rows of one batch each."""
 
     def pack(batches: Iterator) -> Iterator:
         import pyarrow as pa
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
-        held: list[tuple] = []  # row runs not yet emitted, in order
-        n_held = 0
+        held: list[tuple] = []  # row runs of batch ``held_bid`` not yet emitted
+        n_held, held_bid = 0, None
 
         def emit():
+            nonlocal n_held
             y, fold, X = (
                 None if held[0][i] is None else np.concatenate([h[i] for h in held])
                 for i in range(3)
             )
             held.clear()
+            n_held = 0
             return pa.RecordBatch.from_arrays(
-                [pa.array([_block(y, fold, X)], type=pa.binary())], names=["block"]
+                [pa.array([_block(held_bid, y, fold, X)], type=pa.binary())],
+                names=["block"],
             )
 
         for rb in batches:
@@ -129,41 +175,82 @@ def _pack_fn(d: int, has_fold: bool, block_rows: int):
             label, bids = rb.column(1), rb.column(2).to_numpy()
             if label.null_count or (has_fold and rb.column(3).null_count):
                 raise ValueError("label index and fold columns must not hold nulls")
-            if (bids != pid).any():
+            stray = bids // K != pid
+            if stray.any():
                 raise RuntimeError(
                     f"partition {pid} received rows of batch(es) "
-                    f"{sorted(set(bids[bids != pid].tolist()))}: Spark's hash "
+                    f"{sorted(set(bids[stray].tolist()))}: Spark's hash "
                     "partitioning rule changed"
                 )
             X = _dense(rb.column(0), d)
             y = label.to_numpy().astype(np.int64)
             fold = rb.column(3).to_numpy().astype(np.int64) if has_fold else None
-            s = 0
-            while s < len(y):
-                t = min(len(y), s + block_rows - n_held)
-                held.append((y[s:t], None if fold is None else fold[s:t], X[s:t]))
-                n_held += t - s
-                s = t
-                if n_held == block_rows:
+            cuts = np.flatnonzero(np.diff(bids)) + 1
+            for s, end in zip([0, *cuts], [*cuts, len(y)]):
+                if held and bids[s] != held_bid:
                     yield emit()
-                    n_held = 0
+                held_bid = int(bids[s])
+                while s < end:
+                    t = min(end, s + block_rows - n_held)
+                    held.append((y[s:t], None if fold is None else fold[s:t], X[s:t]))
+                    n_held += t - s
+                    s = t
+                    if n_held == block_rows:
+                        yield emit()
         if held:
             yield emit()
 
     return pack
 
 
-def _summed(d: int, has_fold: bool, fn: Callable):
-    """runJob body: ``fn(X, y, fold)`` over the partition's blocks, summed
-    in block order; nothing if the partition (batch) has no rows."""
+def _sum_blocks(fn: Callable, blocks: Iterator):
+    """``fn(X, y, fold)`` over ``blocks``, summed in block order."""
+    total = None
+    for blk in blocks:
+        part = fn(*blk)
+        total = part if total is None else tuple(t + p for t, p in zip(total, part))
+    return total
+
+
+def _batch_fn(d: int, has_fold: bool, fn: Callable, bid: int):
+    """runJob body: ``fn`` summed over batch ``bid``'s blocks; nothing if
+    the batch has no rows. The rest of the partition is read and dropped
+    (a Python task that leaves input unread loses its worker)."""
 
     def run(bufs: Iterator) -> Iterator:
-        total = None
-        for buf in bufs:
-            part = fn(*_unblock(buf, d, has_fold))
-            total = part if total is None else tuple(t + p for t, p in zip(total, part))
+        blocks = (_unblock(buf, d, has_fold) for buf in bufs)
+        total = _sum_blocks(fn, (blk for b, blk in blocks if b == bid))
         if total is not None:
             yield total
+
+    return run
+
+
+def _group_fn(d: int, has_fold: bool, grad_fn, update_fn, state, n_steps: int):
+    """runJob body of one step group: one step per non-empty batch of the
+    partition, in batch order, at most ``n_steps``. Yields ``(state,
+    records, error)``: the state after the last step taken, one record per
+    step and the message of the ``ValueError`` that stopped the group, if
+    any."""
+
+    def run(bufs: Iterator) -> Iterator:
+        s, records, error = state, [], None
+        blocks = (_unblock(buf, d, has_fold) for buf in bufs)
+        for bid, batch in groupby(blocks, key=lambda b: b[0]):
+            total = _sum_blocks(grad_fn(s), (blk for _, blk in batch))
+            try:
+                s, rec = update_fn(s, bid, total)
+            except ValueError as e:
+                error = str(e)
+                break
+            records.append(rec)
+            if len(records) == n_steps:
+                break
+        # drain: a Python task that returns before reading all its input
+        # makes pyspark drop its worker, and the next task forks a new one
+        for _ in bufs:
+            pass
+        yield s, records, error
 
     return run
 
@@ -173,7 +260,8 @@ def _count(bufs: Iterator) -> Iterator:
 
 
 class BatchBlocks:
-    """A training set laid out as cached numpy blocks per mini-batch.
+    """A training set laid out as cached numpy blocks, K consecutive
+    mini-batches per partition.
 
     Args:
         df: frame holding the feature, label-index and batch-id columns
@@ -198,39 +286,29 @@ class BatchBlocks:
         data = df.select(features_col, label_idx_col, batch_col, *extra)
         if n_batches is None:
             n_batches = data.agg(F.max(batch_col)).collect()[0][0] + 1
-        self.n_batches = int(n_batches)
+        self.n_batches = n = int(n_batches)
         self.d = int(n_features)
         self.has_fold = fold_col is not None
-        spark = df.sparkSession
-        self.sc = spark.sparkContext
-        # partition b holds batch b alone. repartition(n, key) puts a row in
-        # partition pmod(murmur3(key), n), so each batch id is mapped to a
-        # key that Spark's own hash sends to the partition of that id: the
-        # smallest of 32n candidates hashing there (one single-task job; a
-        # partition is left without a candidate with odds ~n*e^-32)
-        n = self.n_batches
-        btype = data.schema[batch_col].dataType
-        hashed = (
-            spark.range(0, 32 * n, 1, 1)
-            .select(F.pmod(F.hash(F.col("id").cast(btype)), F.lit(n)).alias("p"))
-            .toPandas()["p"]
-            .to_numpy()
-        )
-        found, keys = np.unique(hashed, return_index=True)
-        if len(found) < n:
-            raise RuntimeError(f"no partitioning key found for {n} batches")
+        self.sc = df.sparkSession.sparkContext
+        self.K = _group_size(n, self.sc.defaultParallelism)
+        self.n_groups = -(-n // self.K)
+        # partition g holds batches gK .. gK+K-1: batch b is sent under the
+        # int key that Spark's hash puts in partition b // K
+        keys = _partition_keys(self.n_groups)[np.arange(n) // self.K]
         key = F.element_at(
             F.expr(f"array({','.join(map(str, keys))})"),
             (F.col(batch_col) + 1).cast("int"),
-        ).cast(btype)
+        ).cast("int")
         block_rows = max(1, BLOCK_BYTES // (8 * (self.d + 2)))
         # rows whose batch id is null or out of range are never trained on;
         # the sort fixes each batch's row order (the canonical order)
         packed = (
             data.where(F.col(batch_col).between(0, n - 1))
-            .repartition(n, key)
-            .sortWithinPartitions(label_idx_col, *extra, features_col)
-            .mapInArrow(_pack_fn(self.d, self.has_fold, block_rows), "block binary")
+            .repartition(self.n_groups, key)
+            .sortWithinPartitions(batch_col, label_idx_col, *extra, features_col)
+            .mapInArrow(
+                _pack_fn(self.d, self.has_fold, block_rows, self.K), "block binary"
+            )
         )
         # the blocks as a JVM RDD of byte arrays, handed to Python workers
         # as raw bytes (a DataFrame's .rdd would re-encode every block
@@ -249,13 +327,17 @@ class BatchBlocks:
         order, as one Spark job of one task; ``None`` if the batch has no
         rows. ``fn`` returns a tuple of addable partials and is shipped to
         the executor, so it should close over O(model) state only."""
-        out = self.sc.runJob(self._rdd, _summed(self.d, self.has_fold, fn), [bid])
+        out = self.sc.runJob(
+            self._rdd, _batch_fn(self.d, self.has_fold, fn, bid), [bid // self.K]
+        )
         return out[0] if out else None
 
     def train(
         self,
-        partial_fn: Callable[[], Callable],
-        apply_fn: Callable[[int, object], None],
+        grad_fn: Callable[[object], Callable],
+        update_fn: Callable[[object, int, tuple], tuple],
+        state,
+        apply_fn: Callable[[object, list], None],
         *,
         max_steps: int,
         max_epochs: int,
@@ -263,29 +345,36 @@ class BatchBlocks:
     ) -> None:
         """The mini-batch loop: batches in increasing id order, one step
         per non-empty batch, at most ``max_steps`` steps over at most
-        ``max_epochs`` epochs. Per step ``partial_fn()`` builds the
-        executor function from the current weights and ``apply_fn(bid,
-        partial)`` applies its result on the driver. ``epoch_callback(e)``
-        runs after each completed epoch. The blocks the first
-        ``max_steps`` steps read are packed up front, in parallel; the
-        cached blocks are released when the loop ends."""
+        ``max_epochs`` epochs, each group of K batches in one single-task
+        job. On the executor, per step ``grad_fn(state)`` gives the
+        per-block partial function and ``update_fn(state, bid, partial)``
+        returns ``(state, record)``, or raises ``ValueError`` (before any
+        change to the state) to stop. After every group ``apply_fn(state,
+        records)`` runs on the driver, then a stopping ``ValueError`` is
+        raised again there. ``epoch_callback(e)`` runs after each epoch.
+        The cached blocks are released when the loop ends."""
         step = 0
         try:
-            # pack the batches the first steps read in one parallel job
-            # rather than one per step
-            first = list(range(min(max_steps, self.n_batches)))
-            self.sc.runJob(self._rdd, _count, first)
+            # the partitions the first steps read: packed in one parallel
+            # job when there are several, else by the step task itself
+            first = -(-min(max_steps, self.n_batches) // self.K)
+            if first > 1:
+                self.sc.runJob(self._rdd, _count, list(range(first)))
             for epoch in range(max_epochs):
                 if step >= max_steps:
                     break
-                for bid in range(self.n_batches):
+                for g in range(self.n_groups):
                     if step >= max_steps:
                         break
-                    part = self.run(bid, partial_fn())
-                    if part is None:
-                        continue
-                    apply_fn(bid, part)
-                    step += 1
+                    fn = _group_fn(
+                        self.d, self.has_fold, grad_fn, update_fn, state,
+                        max_steps - step,
+                    )
+                    state, records, error = self.sc.runJob(self._rdd, fn, [g])[0]
+                    apply_fn(state, records)
+                    if error is not None:
+                        raise ValueError(error)
+                    step += len(records)
                 if epoch_callback is not None:
                     epoch_callback(epoch)
         finally:

@@ -15,9 +15,9 @@ per-model regularizer:
   in pandas/DuckDB, independent of the batch hash — a shared hash would
   correlate fold membership with batch membership and starve some
   (batch, fold) cells);
-- per step, in one single-task job over the step's batch block (the
-  per-batch layout of scoring/blocks.py), ONE stacked GEMM computes all F
-  models' logits; model f's gradient masks out its own fold's rows and is
+- per step, inside one single-task job per group of K steps over the
+  group's batch blocks (the layout of scoring/blocks.py), ONE stacked
+  GEMM computes all F models' logits; model f's gradient masks out its own fold's rows and is
   normalized by ITS visible row count, so model f's trajectory is exactly
   a standalone trainer run on ``fold != f`` with the same batch
   assignment (pytest pins allclose per fold against both the standalone

@@ -11,35 +11,39 @@ own weight decay and, when a fold column is given, sees only the rows with
 ``RegPathLogReg`` (scoring/regpath.py) stacks one model per weight decay
 and ``CVLogReg`` (scoring/cv.py) one model per held-out fold.
 
-- the training table is laid out once as cached numpy blocks, one
-  partition per deterministic mini-batch (``scoring/blocks.py``: one JVM
-  shuffle and sort, one Arrow pack per batch, blocks of at most 32 MB);
-- each step ships the stacked (W, b) to the ONE task holding the step's
-  batch; per block, ``_softmax_sums`` computes the logits of all M models
-  with one GEMM and their gradient sums with a second (the M1 forward
-  pass), in float64, and the task returns their sum in block order — one
-  Spark job of one task per step, however many models the stack holds;
-- the Adam update (torch parity: L2 weight decay folded into the gradient,
-  bias-corrected moments) runs on the driver, vectorized over the stack
+- the training table is laid out once as cached numpy blocks, K
+  consecutive deterministic mini-batches per partition
+  (``scoring/blocks.py``: one JVM shuffle and sort, one Arrow pack per
+  partition, blocks of at most 32 MB and of one batch each);
+- each step group ships the stack's state (W, b and the ``_Adam``
+  moments and per-model step counts) to the ONE task holding its K
+  batches; per block, ``_softmax_sums`` computes the logits of all M
+  models with one GEMM and their gradient sums with a second (the M1
+  forward pass), in float64, and per batch the task sums them in block
+  order and takes the Adam step (torch parity: L2 weight decay folded
+  into the gradient, bias-corrected moments), vectorized over the stack
   with one step count and one weight decay per model (``_Adam``). A model
   that saw no row of the batch neither updates nor counts the step. The
-  models are tiny next to the data: the classic parameter-server-on-driver
-  layout.
+  task returns the new state and the per-step losses: one Spark job of
+  one task per K steps, however many models the stack holds. The models
+  are tiny next to the data.
 
 Determinism: batch composition is a pure function of the row key
 (md5-derived, replicable in pandas/DuckDB), each batch's rows are packed in
-a canonical order and each step has exactly one partial, so two runs at
-different parallelism produce bit-identical weights (the N-vs-4N-cluster
-invariant). Model m of a stack follows the same sequence of updates as a
-standalone fit at its weight decay on its visible rows (allclose; the
-stacked GEMMs may sum in another order).
+a canonical order, each step has exactly one partial and the steps run
+in batch order whatever K is, so two runs at different parallelism produce
+bit-identical weights (the N-vs-4N-cluster invariant). Model m of a stack
+follows the same sequence of updates as a standalone fit at its weight
+decay on its visible rows (allclose; the stacked GEMMs may sum in another
+order).
 
-Scale notes: a step reads only its own batch's cached blocks; the other
-partitions of the cache are not touched. Weights move driver<->executor
-once per step: O(M*k*d) bytes, independent of data size; an extra model
-costs FLOPs on a block already in cache, not another scan. A step's numpy
-work runs on one core, which suits many modest mini-batches; measured on a
-4-core host, 4 batches of 50k x 256 rows take ~0.2-0.3 s per step (the
+Scale notes: a step group reads only its own partition's cached blocks;
+the other partitions of the cache are not touched. The state moves
+driver<->executor once per K steps: O(M*k*d) bytes, independent of data
+size; an extra model costs FLOPs on a block already in cache, not another
+scan. A step's numpy work runs on one core, which suits many modest
+mini-batches; measured on a 4-core host with one batch per task, 4
+batches of 50k x 256 rows took ~0.2-0.3 s per step (the
 partition-parallel scan it replaced: ~0.65 s) after ~2 s more set-up.
 """
 
@@ -88,8 +92,8 @@ def _softmax_sums(W: np.ndarray, b: np.ndarray, M: int, k: int):
     and (M*k,) bias stack ``b``: a batch block -> the unnormalized softmax
     cross-entropy sums of all M models (gW (M*k, d), gb (M, k), loss (M,),
     n (M,), bad: the number of fold ids outside 0..M-1), turned into batch
-    means on the driver. With fold ids, row i counts for model m only if
-    ``fold_i != m``; without, every row counts."""
+    means by the step's update. With fold ids, row i counts for model m
+    only if ``fold_i != m``; without, every row counts."""
 
     def grad(X: np.ndarray, y: np.ndarray, fold) -> tuple:
         m = len(X)
@@ -180,16 +184,23 @@ class _SoftmaxStack:
         allow_empty_cells: bool = False, **layout,
     ):
         """Fit every model over the ``BatchBlocks(df, **layout)`` batches:
-        per step one single-task job returns the stack's gradient sums and
-        ``_Adam`` steps every model that saw a row of the batch. A model
-        that saw none raises unless ``allow_empty_cells``."""
+        one single-task job per group of K batches sums, per step, the
+        stack's gradients and ``_Adam`` steps every model that saw a row of
+        the batch. A model that saw none raises unless
+        ``allow_empty_cells``."""
         blocks = BatchBlocks(df, n_features=self.d, **layout)
         M, k, d = self.W.shape
+        fold_col = layout.get("fold_col")
 
-        def apply(bid: int, part: tuple) -> None:
+        def grad(state):
+            W, b, _ = state
+            return _softmax_sums(W.reshape(M * k, d), b.reshape(M * k), M, k)
+
+        def update(state, bid: int, part: tuple):
+            W, b, adam = state
             gW, gb, loss, n, bad = part
             if bad:
-                raise ValueError(_fold_range_error(layout["fold_col"], M, f"batch {bid}"))
+                raise ValueError(_fold_range_error(fold_col, M, f"batch {bid}"))
             live = np.flatnonzero(n)
             if len(live) < M and not allow_empty_cells:
                 raise ValueError(
@@ -199,13 +210,18 @@ class _SoftmaxStack:
                 )
             nl = n[live]
             grads = [gW.reshape(M, k, d)[live] / nl[:, None, None], gb[live] / nl[:, None]]
-            self.W, self.b = self._adam.step([self.W, self.b], grads, live)
-            for m in live:
-                self.losses[m].append(float(loss[m] / n[m]))
+            W, b = adam.step([W, b], grads, live)
+            return (W, b, adam), (live, loss[live] / nl)
+
+        def apply(state, records: list) -> None:
+            self.W, self.b, self._adam = state
+            for live, mean in records:
+                for m, x in zip(live, mean):
+                    self.losses[m].append(float(x))
 
         blocks.train(
-            lambda: _softmax_sums(self.W.reshape(M * k, d), self.b.reshape(M * k), M, k),
-            apply, max_steps=max_steps, max_epochs=max_epochs, epoch_callback=epoch_callback,
+            grad, update, (self.W, self.b, self._adam), apply,
+            max_steps=max_steps, max_epochs=max_epochs, epoch_callback=epoch_callback,
         )
         return self
 
@@ -302,10 +318,11 @@ class DistributedLogReg:
     ) -> "DistributedLogReg":
         """Train over a (features, label_idx, batch_id) DataFrame.
 
-        The frame is laid out once as cached blocks per batch
-        (``BatchBlocks``); each step is one Spark job of one task on its
-        batch's blocks, followed by a torch-parity Adam update on the
-        driver. Batches run in increasing id order; empty ones are skipped.
+        The frame is laid out once as cached blocks, K consecutive batches
+        per partition (``BatchBlocks``); one Spark job of one task runs a
+        group's steps, each a gradient over its batch's blocks followed by
+        a torch-parity Adam update. Batches run in increasing id order;
+        empty ones are skipped.
 
         ``epoch_callback``: optional ``f(epoch_idx)`` invoked after each
         completed epoch with the model already updated — the hook the

@@ -11,22 +11,22 @@ weight-decay values SIMULTANEOUSLY over the same mini-batch stream.
 ``RegPathLogReg`` is the engine's one stacked trainer
 (``scoring/logreg._SoftmaxStack``) with one model per weight decay:
 
-- each step is one Spark job of one task over the step's batch blocks
-  (``scoring/blocks.py``); the task computes all L models' logits with
-  ONE GEMM per block and all their gradient blocks with a second — the
-  marginal cost of an extra lambda is FLOPs on data already in cache, not
-  another scan of the table;
-- the driver's vectorized Adam keeps one weight decay per model (folded
-  into the update, torch parity), so lambda l's trajectory is numerically
-  the SAME sequence of updates a standalone
+- each group of K consecutive steps is one Spark job of one task over
+  the group's batch blocks (``scoring/blocks.py``); per step the task
+  computes all L models' logits with ONE GEMM per block and all their
+  gradient blocks with a second — the marginal cost of an extra lambda is
+  FLOPs on data already in cache, not another scan of the table;
+- the vectorized Adam, run in that task, keeps one weight decay per
+  model (folded into the update, torch parity), so lambda l's trajectory
+  is numerically the SAME sequence of updates a standalone
   ``DistributedLogReg(weight_decay=lambda_l)`` would produce — the sweep
   is a fusion, not an approximation. Tests pin allclose equality per
   lambda against both the standalone trainer and the independent numpy
   twin.
 
-Scale notes: driver<->executor traffic per step is O(L*k*d) — the model
-stack, independent of data size; with the reference's 5k x 50 score
-matrix and L=8 that is ~16 MB per step, well under broadcast budgets.
+Scale notes: driver<->executor traffic per step group is O(L*k*d) — the
+model stack and its Adam moments, independent of data size; with the
+reference's 5k x 50 score matrix and L=8 that is ~50 MB per K steps.
 The data passes once per epoch regardless of L; a naive per-lambda loop
 costs L full passes. Selection-path summaries (features surviving at
 each lambda) are pure column expressions over the long-form output.
@@ -76,8 +76,9 @@ class RegPathLogReg(_SoftmaxStack):
         max_epochs: int = 4,
     ) -> "RegPathLogReg":
         """Train all L models over a (features, label_idx, batch_id)
-        DataFrame: one single-task job per step computes every model's
-        gradient from a single traversal of the step's batch block.
+        DataFrame: one single-task job per group of K steps computes, per
+        step, every model's gradient from a single traversal of the step's
+        batch blocks.
 
         Batch layout, batch order and step accounting are
         DistributedLogReg.fit's (the same stacked trainer), so per-lambda

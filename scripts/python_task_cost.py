@@ -10,6 +10,14 @@ per-task cost (such as re-reading zip archives on every task) shows here.
 
     python scripts/python_task_cost.py                  # engine daemon
     python scripts/python_task_cost.py --default-daemon # Spark's own daemon
+    python scripts/python_task_cost.py --early-stop     # unread input
+
+``--early-stop`` gives every task ``EARLY_STOP_ROWS`` input rows and
+prints the same two medians for a function that returns after the first
+row next to one that reads them all. pyspark drops a worker whose task
+left input unread, so the next task forks a new one: the trainer's
+step-group task drains its partition for this reason, and a gap between
+the two numbers shows the cost of forgetting to.
 
 The first job (it forks the workers) is not counted.
 """
@@ -26,6 +34,10 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from modlyn_spark.session import get_spark  # noqa: E402
+
+# input rows per task under --early-stop: many more than one pickled batch,
+# so a task that reads one row leaves input unread
+EARLY_STOP_ROWS = 20000
 
 
 def _task_run_ms(sc, group: str) -> list[int]:
@@ -45,6 +57,31 @@ def _task_run_ms(sc, group: str) -> list[int]:
     return out
 
 
+def _first(rows):
+    yield next(iter(rows), None)
+
+
+def _drained(rows):
+    yield sum(1 for _ in rows)
+
+
+def _measure(sc, rdd, fn, repeats: int, tag: str) -> dict:
+    """Median per-task executorRunTime and job wall time of ``repeats``
+    runs of ``fn`` over every partition of ``rdd``."""
+    walls, run_ms = [], []
+    for r in range(repeats):
+        group = f"python-task-cost-{tag}-{r}"
+        sc.setJobGroup(group, group)
+        t0 = time.perf_counter()
+        sc.runJob(rdd, fn)
+        walls.append(time.perf_counter() - t0)
+        run_ms += _task_run_ms(sc, group)
+    return {
+        "median_task_run_ms": statistics.median(run_ms),
+        "median_job_wall_s": round(statistics.median(walls), 3),
+    }
+
+
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--tasks", type=int, default=32)
@@ -55,36 +92,37 @@ def main() -> None:
         action="store_true",
         help="use pyspark.daemon instead of the engine's daemon module",
     )
+    ap.add_argument(
+        "--early-stop",
+        action="store_true",
+        help="time tasks that return before reading their input against "
+        "tasks that drain it",
+    )
     args = ap.parse_args()
     extra = {"spark.ui.showConsoleProgress": "false"}
     if args.default_daemon:
         extra["spark.python.daemon.module"] = "pyspark.daemon"
     spark = get_spark("python-task-cost", master=args.master, extra=extra)
     sc = spark.sparkContext
-    rdd = sc.parallelize(range(args.tasks), args.tasks)
-    rdd.foreach(lambda _: None)  # fork every worker first
-    walls, run_ms = [], []
-    for r in range(args.repeats):
-        group = f"python-task-cost-{r}"
-        sc.setJobGroup(group, group)
-        t0 = time.perf_counter()
-        rdd.foreach(lambda _: None)
-        walls.append(time.perf_counter() - t0)
-        run_ms += _task_run_ms(sc, group)
-    print(
-        json.dumps(
-            {
-                "master": sc.master,
-                "daemon": sc.getConf().get("spark.python.daemon.module", "pyspark.daemon"),
-                "python": sys.version.split()[0],
-                "pyspark": spark.version,
-                "tasks": args.tasks,
-                "repeats": args.repeats,
-                "median_task_run_ms": statistics.median(run_ms),
-                "median_job_wall_s": round(statistics.median(walls), 3),
-            }
-        )
-    )
+    out = {
+        "master": sc.master,
+        "daemon": sc.getConf().get("spark.python.daemon.module", "pyspark.daemon"),
+        "python": sys.version.split()[0],
+        "pyspark": spark.version,
+        "tasks": args.tasks,
+        "repeats": args.repeats,
+    }
+    if args.early_stop:
+        rdd = sc.parallelize(range(args.tasks * EARLY_STOP_ROWS), args.tasks).cache()
+        sc.runJob(rdd, _drained)  # fork every worker and cache the input
+        out["rows_per_task"] = EARLY_STOP_ROWS
+        out["early_stop"] = _measure(sc, rdd, _first, args.repeats, "early")
+        out["drained"] = _measure(sc, rdd, _drained, args.repeats, "drained")
+    else:
+        rdd = sc.parallelize(range(args.tasks), args.tasks)
+        sc.runJob(rdd, _drained)  # fork every worker first
+        out.update(_measure(sc, rdd, _drained, args.repeats, "empty"))
+    print(json.dumps(out))
     spark.stop()
 
 

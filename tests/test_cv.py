@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from modlyn_spark.oracle.pandas_oracle import oracle_logreg
+from modlyn_spark.scoring import blocks as blocks_mod
 from modlyn_spark.scoring.cv import CVLogReg, assign_folds, assign_folds_pandas
 from modlyn_spark.scoring.logreg import (
     DistributedLogReg,
@@ -181,6 +182,28 @@ def test_fold_id_out_of_range_raises(spark, cv_data):
         )
         with pytest.raises(ValueError, match="fold_id"):
             cv.oof_predict(one)
+
+
+def test_fold_id_out_of_range_inside_a_group_raises_on_the_driver(
+    spark, cv_data, monkeypatch
+):
+    """With the 4 batches in one step group, a bad fold id in batch 1 stops
+    the group's task before that update: the driver keeps the first step
+    and raises the ValueError itself, not a failed Python task."""
+    monkeypatch.setattr(blocks_mod, "_group_size", lambda n, p: n)
+    _, _, _, classes, enc = cv_data
+    rigged = enc.withColumn(
+        "fold_id",
+        F.when((F.col("batch_id") == 1) & (F.col("row_id") % 5 == 0), F.lit(NF))
+        .otherwise(F.col("fold_id")),
+    )
+    cv = CVLogReg(D, classes, NF)
+    with pytest.raises(ValueError, match="batch 1 holds 'fold_id'") as err:
+        cv.fit(rigged, max_steps=4, max_epochs=1, n_batches=4)
+    assert type(err.value) is ValueError
+    one = CVLogReg(D, classes, NF).fit(enc, max_steps=1, max_epochs=1, n_batches=4)
+    assert [len(x) for x in cv.losses] == [1] * NF
+    assert np.array_equal(cv.W, one.W)
 
 
 def test_n_folds_guard():

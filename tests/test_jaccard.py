@@ -38,6 +38,35 @@ def test_compare_scores_matches_reference_semantics():
     assert set(res.columns) >= {"n_top", "method_pair", "jaccard"}
 
 
+def test_compare_scores_matches_oracle_on_ties_and_nan():
+    """The numpy top-N picks the sets pandas nlargest(keep="first") does:
+    ties at the cut keep the earlier feature, NaN scores fill a set in
+    position order when too few are finite, n_top >= G takes every
+    feature; classes and features are aligned on the common, sorted ones."""
+    feats = [f"g{j}" for j in range(7)]
+    s1 = pd.DataFrame(
+        [
+            [1, -3, np.nan, 3, 2, -2, np.nan],  # nlargest(6): g1 g3 g4 g5 g0 g2
+            [0.5, 0.5, -0.5, 0.5, 1, 0.5, -1],  # a 4-way tie at the cut of 3
+            [np.nan] * 7,
+        ],
+        index=["b", "a", "c"],
+        columns=feats,
+    )
+    s2 = pd.DataFrame(
+        [[2, 2, -2, 0, 0, 1, 1], [1, 0, 0, 0, 0, 0, 1], [0, 0, 0, 0, 0, 0, 0]],
+        index=["a", "b", "c"],
+        columns=feats,
+    )[feats[::-1]]
+    s3 = s1.fillna(0.25).assign(extra=9.0)
+    s3.loc["d"] = 0.0
+    for df, name in [(s1, "m1"), (s2, "m2"), (s3, "m3")]:
+        df.attrs["method_name"] = name
+    n_top = [1, 2, 3, 5, 6, 7, 9]
+    got = CompareScores([s1, s2, s3], n_top_values=n_top).compute_jaccard_comparison()
+    pd.testing.assert_frame_equal(got, oracle_jaccard([s1, s2, s3], n_top))
+
+
 def test_distributed_topn_jaccard_matches_pandas(spark):
     df1, df2 = _score_frames()
     long_rows = []

@@ -118,8 +118,9 @@ def test_label_alignment_on_subset_frames(spark, adata_like):
 
 
 def test_constructor_is_one_aggregate(spark, adata_like):
-    """The constructor reads width, classes and null labels in ONE aggregate
-    (at most 3 Spark jobs, adaptive execution included)."""
+    """The constructor reads width, classes, null labels and the row count
+    in ONE aggregate (at most 3 Spark jobs, adaptive execution included),
+    which a fit on the same frame does not repeat."""
     sc = spark.sparkContext
     group = "simple-logreg-init"
     sc.setJobGroup(group, group)
@@ -132,6 +133,19 @@ def test_constructor_is_one_aggregate(spark, adata_like):
     assert 1 <= len(jobs) <= 3, jobs
     assert model.classes == ["alpha", "beta", "gamma"]
     assert len(model.feature_names) == 8
+    # fit on the constructor's frame reuses its row count and checks no
+    # labels: the layout's shuffle map stage, then one step-group job (8
+    # batches in 4 partitions: the 2 steps read partition 0 only)
+    group = "simple-logreg-fit"
+    sc.setJobGroup(group, group)
+    try:
+        model.fit(adata_like, n_batches=8, max_steps=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 1 <= len(jobs) <= 2, jobs
+    assert len(model.losses) == 2
 
 
 def test_null_label_raises_at_construction(spark, adata_like):
