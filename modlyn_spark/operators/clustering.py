@@ -10,7 +10,8 @@ physical pattern as the other sufficient-statistics scans:
   engine's one reducer) sums the per-cluster (count, vector sum,
   inertia) with a single (batch x dim) @ (dim x k) GEMM per Arrow batch
   — rows never shuffle, only k x (dim + 2) numbers per task come back,
-  tree-combined executor-side in ascending-pid order, so results are
+  folded in ascending-pid order (executor-side tree levels above 64
+  partitions), so results are
   deterministic at ANY parallelism — the same N-vs-4N invariant the
   logreg trainer guarantees;
 - iteration stops when assignments imply unchanged centroids (movement

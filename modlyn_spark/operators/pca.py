@@ -10,11 +10,11 @@ Physical shape:
 - ``feature_moments`` sums per-batch (n, col-sum, X^T X) — one
   (batch x d)^T @ (batch x d) GEMM per Arrow batch — through
   ``operators/combine.sum_partials``, the engine's one reducer: rows
-  NEVER shuffle, d*(d+1) doubles per task come back and tree-combine
-  executor-side in ascending-pid order, so the fitted basis is
-  deterministic at ANY parallelism and the driver collects a bounded
-  number of partials, never one per partition (at d=1024 a partial is
-  ~8 MB);
+  NEVER shuffle, d*(d+1) doubles per task come back and fold in
+  ascending-pid order (through executor-side tree levels only when the
+  scan has more than 64 partitions), so the fitted basis is
+  deterministic at ANY parallelism and the driver collects at most 64
+  partials, never one per partition (at d=1024 a partial is ~8 MB);
 - eigendecomposition of the (d x d) covariance runs on the driver
   (np.linalg.eigh — symmetric, stable), eigenvectors sign-fixed so each
   component's largest-|loading| entry is positive (basis is unique, not

@@ -10,7 +10,8 @@ F-statistic scoring (and optionally the logreg scoring loop downstream).
 The plan shape at scale: the state-side features cost ONE shuffle on
 image_id (all windows share the same partitioning and collapse into one
 exchange+sort); the as-of join is the second and final shuffle; scoring
-moves only moment vectors. No binary payloads cross any shuffle — pixels
+sums per-class moment partials in one reducer scan, with no shuffle, and
+computes F on the driver. No binary payloads cross any shuffle — pixels
 are reduced to statistics before the join (SURVEY.md §7 hard-part 4).
 
 ``events_feature_pipeline`` is the same dataflow over the driver's

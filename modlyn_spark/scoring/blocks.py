@@ -121,6 +121,17 @@ def _null_as_nan(col):
     return type(col).from_arrays(col.offsets, values)
 
 
+def _binary_rdd(df: DataFrame) -> RDD:
+    """The single binary column of ``df`` as a JVM RDD of byte arrays,
+    handed to Python workers as raw bytes (a DataFrame's ``.rdd`` would
+    re-encode every value through the JVM's pickler, measured at
+    ~25 MB/s). Taking the RDD plans the query, which runs the map stage of
+    any exchange in it at once."""
+    sc = df.sparkSession.sparkContext
+    binary = sc._jvm.org.apache.spark.sql.Encoders.BINARY()
+    return RDD(getattr(df._jdf, "as")(binary).rdd().toJavaRDD(), sc, NoOpSerializer())
+
+
 def _block(bid: int, y: np.ndarray, fold, X: np.ndarray) -> bytes:
     """One block's buffer: int64 row count n, int64 batch id, y, [fold],
     X (n, d)."""
@@ -212,20 +223,6 @@ def _sum_blocks(fn: Callable, blocks: Iterator):
     return total
 
 
-def _batch_fn(d: int, has_fold: bool, fn: Callable, bid: int):
-    """runJob body: ``fn`` summed over batch ``bid``'s blocks; nothing if
-    the batch has no rows. The rest of the partition is read and dropped
-    (a Python task that leaves input unread loses its worker)."""
-
-    def run(bufs: Iterator) -> Iterator:
-        blocks = (_unblock(buf, d, has_fold) for buf in bufs)
-        total = _sum_blocks(fn, (blk for b, blk in blocks if b == bid))
-        if total is not None:
-            yield total
-
-    return run
-
-
 def _group_fn(d: int, has_fold: bool, grad_fn, update_fn, state, n_steps: int):
     """runJob body of one step group: one step per non-empty batch of the
     partition, in batch order, at most ``n_steps``. Yields ``(state,
@@ -310,27 +307,10 @@ class BatchBlocks:
                 _pack_fn(self.d, self.has_fold, block_rows, self.K), "block binary"
             )
         )
-        # the blocks as a JVM RDD of byte arrays, handed to Python workers
-        # as raw bytes (a DataFrame's .rdd would re-encode every block
-        # through the JVM's pickler, measured at ~25 MB/s). Taking the RDD
-        # plans the query, which runs the shuffle's
-        # map stage now. The RDD is cached, not the frame (adaptive
-        # execution would materialize a cached frame in full).
-        binary = self.sc._jvm.org.apache.spark.sql.Encoders.BINARY()
-        jrdd = getattr(packed._jdf, "as")(binary).rdd().toJavaRDD()
-        self._rdd = RDD(jrdd, self.sc, NoOpSerializer()).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-
-    def run(self, bid: int, fn: Callable):
-        """``fn(X, y, fold)`` over batch ``bid``'s blocks, summed in block
-        order, as one Spark job of one task; ``None`` if the batch has no
-        rows. ``fn`` returns a tuple of addable partials and is shipped to
-        the executor, so it should close over O(model) state only."""
-        out = self.sc.runJob(
-            self._rdd, _batch_fn(self.d, self.has_fold, fn, bid), [bid // self.K]
-        )
-        return out[0] if out else None
+        # taking the RDD runs the shuffle's map stage now. The RDD is
+        # cached, not the frame (adaptive execution would materialize a
+        # cached frame in full)
+        self._rdd = _binary_rdd(packed).persist(StorageLevel.MEMORY_AND_DISK)
 
     def train(
         self,

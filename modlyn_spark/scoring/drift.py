@@ -105,7 +105,7 @@ def embedding_drift(
     Physical plan: ONE moments pass per side through
     ``operators/pca.feature_moments`` (per-Arrow-batch GEMM partials
     summed by ``operators/combine.sum_partials`` — rows never shuffle,
-    the driver sees <= 64 combined partials per side, and each side's
+    the driver folds <= 64 partials per side, and each side's
     scan gets the group filter pushed down); the d-row report assembles
     driver-side. At 100 TB this is two filtered scans and nothing
     else."""

@@ -9,8 +9,8 @@ pass of sufficient statistics — no iterative training at all:
 - ``operators/combine.sum_partials`` (the engine's one reducer) sums the
   Gram block A'A (m x m, A = features with an optional intercept
   column), the moment vector A'y, y'y and n, one GEMM per Arrow batch,
-  tree-combined executor-side (the driver sees a bounded number of
-  partials at any partition count);
+  folded in pid order (the driver sees at most 64 partials at any
+  partition count; executor-side tree levels fold the rest);
 - the driver solves the m x m system (G + alpha*D) beta = c, D =
   identity with a zero at the intercept (the standard unpenalized
   intercept), and reads coefficient covariance off the closed form

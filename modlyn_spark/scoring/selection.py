@@ -18,8 +18,8 @@ over the same ``array``-typed feature column:
 Scale design: everything derives from ONE distributed pass — the
 ``(n, Σx, XᵀX)`` sufficient statistics of ``operators.pca.feature_moments``
 (per-Arrow-batch GEMM partials summed by ``operators.combine.sum_partials``,
-the engine's one reducer; rows never shuffle, the driver sees ≤64
-combined partials). The mutual-information, PSI and mRMR count tensors
+the engine's one reducer; rows never shuffle, the driver folds ≤64
+partials). The mutual-information, PSI and mRMR count tensors
 are sums over the same reducer. The d×d solve itself is
 driver-side numpy: feature selection operates on d ≲ a few thousand
 features, so the matrix is ≤ tens of MB while the row count is unbounded.
@@ -157,10 +157,9 @@ def mutual_information(
 
     1. per-position min/max as 2d JVM aggregate expressions (pure codegen,
        no explode shuffle — positions stay inside the array);
-    2. one ``sum_partials`` pass summing the (labels × d × bins)
-       joint-count tensor of each Arrow batch (labels are encoded to int
-       codes in the JVM), tree-combined executor-side; the driver gets
-       ≤64 tensors and closes the plogp sum in numpy.
+    2. one ``sum_partials`` pass summing each Arrow batch's
+       ``{label: d × bins counts}`` partials by label; the driver stacks
+       them in sorted label order and closes the plogp sum in numpy.
 
     Constant features (or single-label inputs) score 0. Rows with NULL
     vector or label are excluded. Bin edges are plain double arithmetic
@@ -179,29 +178,20 @@ def mutual_information(
         F.col(vec_col).isNotNull() & F.col(label_col).isNotNull()
     ).select(F.col(vec_col).alias("__v"), F.col(label_col).alias("__l"))
     d = _vec_dim(base, "__v")
-    labels = sorted(
-        r[0] for r in base.select("__l").distinct().collect()
-    )
-    nl = len(labels)
-    code = F.create_map(
-        *[x for i, v in enumerate(labels) for x in (F.lit(v), F.lit(i))]
-    )
-
     mn, mx = _minmax(base, d)
     w = np.where(mx > mn, (mx - mn) / float(bins), 1.0)
     offs = np.arange(d, dtype=np.int64) * bins
 
-    def counts(X, li):
+    def counts(X, labels):
         B = np.clip(np.floor((X - mn) / w).astype(np.int64), 0, bins - 1)
-        t = np.zeros((nl, d * bins), dtype=np.int64)
-        for i in range(nl):
-            sel = B[li == i]
-            if len(sel):
-                t[i] = np.bincount((sel + offs).ravel(), minlength=d * bins)
-        return (t,)
+        keys, li = np.unique(labels, return_inverse=True)
+        return {
+            key: (np.bincount((B[li == i] + offs).ravel(), minlength=d * bins),)
+            for i, key in enumerate(keys.tolist())
+        }
 
-    (t,) = sum_partials(base.select("__v", code[F.col("__l")].alias("__c")), counts)
-    t = t.reshape(nl, d, bins)
+    got = sum_partials(base, counts)
+    t = np.stack([got[key][0] for key in sorted(got)]).reshape(len(got), d, bins)
     n = int(t.sum(axis=(0, 2))[0]) if d else 0
     if n < 1:
         raise ValueError("no rows with non-null vector and label")
@@ -264,7 +254,7 @@ def psi_scores(
     — both rules reproduced verbatim in the SQL oracle.
 
     Two JVM min/max expressions + one Arrow histogram-tensor pass per
-    side, tree-combined: nothing row-shaped ever shuffles.
+    side through the one reducer: nothing row-shaped ever shuffles.
     """
     from modlyn_spark.operators.similarity import _vec_dim
 

@@ -5,21 +5,22 @@ reference quickstart compares against (SURVEY.md N2; reference:
 docs/quickstart.ipynb cells 1335d6d3 / 8c058e6c), and the building block
 for the count-matrix statistics the north_rule mandates.
 
-Both scans read the (label, features) rows the same way: one ``mapInArrow``
-pass decodes each Arrow batch with ``_RowDecoder`` into per-task class
-codes and a dense float64 matrix. A null label is a class of its own, and a
-row whose feature array is null is skipped. A task holds one Arrow batch
-plus its partials, never its whole partition.
+A null label is a class of its own, a row whose feature array is null is
+skipped, and a null value inside an array reads as NaN.
 
 ``class_feature_stats``
-    Each task emits per-class moment partials (n, sum[d], sumsq[d]): n_tasks
-    x n_classes tiny rows. One exchange on ``label`` and an Arrow combine
-    turn them into long form; a NaN moment stays NaN. The wide shuffle
-    moves only moment vectors, never rows.
+    One ``combine.sum_partials`` pass: each Arrow batch gives its
+    ``{label: (n, sum[d], sumsq[d])}`` partials, summed by label in the
+    engine's one reducer (rows never shuffle), and the long-form frame is
+    built in Arrow on the driver, so a NaN moment stays NaN.
+    ``f_statistic`` collects that tiny frame and computes F in numpy.
 
 ``wilcoxon_scores``
-    Each task emits its value histogram: for each (feature, class) the
-    distinct values and their counts, one row per (feature, class). Count
+    One ``mapInArrow`` pass decodes each Arrow batch with ``_RowDecoder``
+    into class codes and a dense float64 matrix (a task holds one Arrow
+    batch plus its histogram, never its whole partition). Each task emits
+    its value histogram: for each (feature, class) the distinct values and
+    their counts, one row per (feature, class). Count
     matrices have few distinct values per feature, so this is orders of
     magnitude fewer bins than cells; all-distinct continuous features
     degrade to one bin per cell, still smaller than a row per cell. One
@@ -124,6 +125,20 @@ def _lists(values: np.ndarray, offsets: np.ndarray):
     return pa.ListArray.from_arrays(pa.array(offsets.astype(np.int32)), pa.array(values))
 
 
+def _class_moments(labels: np.ndarray, X: np.ndarray) -> dict:
+    """One batch's ``{label: (n, sum[d], sumsq[d])}``; a null label is a
+    key of its own."""
+    import pandas as pd
+
+    codes, names = pd.factorize(labels)  # a null label gets code -1
+    out = {}
+    for c in np.unique(codes):
+        sub = X[codes == c]
+        key = names[c] if c >= 0 else None
+        out[key] = (len(sub), sub.sum(axis=0), (sub * sub).sum(axis=0))
+    return out
+
+
 def class_feature_stats(
     df: DataFrame,
     label_col: str,
@@ -136,72 +151,35 @@ def class_feature_stats(
     (matches numpy's default ddof=0, which the oracle and scanpy-style
     scoring use). A NaN value (also a null value inside an array) makes its
     class's ``mean`` and ``var_pop`` NaN, never null.
+
+    The scan runs when this is called: one ``sum_partials`` pass of
+    per-batch ``{label: moments}`` partials, then a local frame built in
+    Arrow from the summed moments.
     """
-
-    def partials(batches: Iterator) -> Iterator:
-        import pyarrow as pa
-
-        decode = _RowDecoder()
-        acc: dict[int, list] = {}
-        for rb in batches:
-            rows = decode(rb)
-            if rows is None:
-                continue
-            y, X = rows
-            for c in np.unique(y):
-                sub = X[y == c]
-                a = acc.setdefault(int(c), [0, 0.0, 0.0])
-                a[0] += len(sub)
-                a[1] = a[1] + sub.sum(axis=0)
-                a[2] = a[2] + (sub * sub).sum(axis=0)
-        if acc:
-            names, codes = decode.names, list(acc)
-            offsets = np.arange(len(codes) + 1) * decode.d
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([names[c] for c in codes], pa.string()),
-                    pa.array([acc[c][0] for c in codes], pa.int64()),
-                    _lists(np.concatenate([acc[c][1] for c in codes]), offsets),
-                    _lists(np.concatenate([acc[c][2] for c in codes]), offsets),
-                ],
-                names=["label", "n", "s", "ss"],
-            )
-
-    p = df.select(F.col(label_col).cast("string"), features_col).mapInArrow(
-        partials, "label string, n long, s array<double>, ss array<double>"
-    )
-    return p.repartition("label").mapInArrow(
-        _combine_moments, "label string, pos long, n long, mean double, var_pop double"
-    )
-
-
-def _combine_moments(batches: Iterator) -> Iterator:
-    """mapInArrow body over one exchange partition of moment partials: sum
-    each label's (n, s, ss) and emit its long-form (label, pos, n, mean,
-    var_pop) rows. Built in Arrow from numpy, a NaN moment stays NaN (a
-    pandas round trip would turn it into null)."""
     import pyarrow as pa
 
-    parts: dict = {}  # label -> its partials, one (n, s, ss) per task
-    for rb in batches:
-        cols = [rb.column(i).to_numpy(zero_copy_only=False) for i in (1, 2, 3)]
-        for label, *moments in zip(rb.column(0).to_pylist(), *cols):
-            parts.setdefault(label, []).append(moments)
-    for label, rows in parts.items():
-        n, s, ss = (np.sum(np.stack(x), axis=0) for x in zip(*rows))
-        mean = s / n
-        var = np.maximum(ss / n - mean * mean, 0.0)
-        d = len(mean)
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array([label] * d, pa.string()),
-                pa.array(np.arange(d, dtype=np.int64)),
-                pa.array(np.full(d, n, dtype=np.int64)),
-                pa.array(mean),
-                pa.array(var),
-            ],
-            names=["label", "pos", "n", "mean", "var_pop"],
+    from modlyn_spark.operators.combine import sum_partials
+
+    rows = df.where(F.col(features_col).isNotNull()).select(
+        F.col(label_col).cast("string"), features_col
+    )
+    parts = sum_partials(rows, _class_moments) or {}
+    labels = sorted(parts, key=lambda k: (k is None, k or ""))
+    n, s, ss = (np.array([parts[k][i] for k in labels]) for i in range(3))
+    L, d = s.shape if labels else (0, 0)
+    mean = s / n[:, None]
+    var = np.maximum(ss / n[:, None] - mean * mean, 0.0)
+    return df.sparkSession.createDataFrame(
+        pa.table(
+            {
+                "label": pa.array(np.repeat(np.array(labels, dtype=object), d), pa.string()),
+                "pos": pa.array(np.tile(np.arange(d, dtype=np.int64), L)),
+                "n": pa.array(np.repeat(n, d).astype(np.int64)),
+                "mean": pa.array(mean.ravel(), pa.float64()),
+                "var_pop": pa.array(var.ravel(), pa.float64()),
+            }
         )
+    )
 
 
 def _bits(x: np.ndarray) -> np.ndarray:
@@ -432,48 +410,35 @@ def f_statistic(stats: DataFrame) -> DataFrame:
     """One-way ANOVA F per feature from long-form class stats.
 
     Input: the (label, pos, n, mean, var_pop) frame from
-    ``class_feature_stats``. Output: DataFrame(pos, f_stat). Pure SQL
-    aggregation — the input is already tiny (n_classes x d rows).
+    ``class_feature_stats``, one row per (class, feature). Output:
+    DataFrame(pos, f_stat). The input is tiny (n_classes x d rows), so it
+    is collected and F is computed in numpy; every row of a feature is one
+    class, the null label's included.
 
     F = [sum_c n_c (m_c - m)^2 / (k-1)] / [sum_c n_c var_c / (N-k)].
     ``sum_c n_c var_c`` equals the within-class sum of squares because
-    var_pop is the population variance.
-
-    Grand totals come from a window over the same ``pos`` partitioning the
-    final groupBy uses, so Catalyst plans ONE exchange for the whole
-    statistic (an aggregate+join formulation would add a second shuffle and
-    a join stage for the same tiny frame).
+    var_pop is the population variance. F is NaN where a class's mean or
+    variance is NaN, else inf where the within-class mean square is not
+    > 0. Fewer than two classes raise ``ValueError``.
     """
-    from pyspark.sql import Window
+    import pyarrow as pa
 
-    w = Window.partitionBy("pos")
-    j = (
-        stats.withColumn("n_total", F.sum("n").over(w))
-        .withColumn("k_classes", F.count("label").over(w))
-        .withColumn("grand", F.sum(F.col("n") * F.col("mean")).over(w) / F.col("n_total"))
-    )
-    return (
-        j.groupBy("pos")
-        .agg(
-            (
-                F.sum(
-                    F.col("n")
-                    * (F.col("mean") - F.col("grand"))
-                    * (F.col("mean") - F.col("grand"))
-                )
-                / (F.first("k_classes") - F.lit(1))
-            ).alias("ms_between"),
-            (
-                F.sum(F.col("n") * F.col("var_pop"))
-                / (F.first("n_total") - F.first("k_classes"))
-            ).alias("ms_within"),
+    pdf = stats.select("pos", "n", "mean", "var_pop").toPandas()
+    pos, p = np.unique(pdf["pos"].to_numpy(np.int64), return_inverse=True)
+    k = np.bincount(p)
+    if len(pos) and k.min() < 2:
+        raise ValueError(
+            f"the F-statistic needs at least two classes; feature "
+            f"{pos[np.argmin(k)]} has {k.min()}"
         )
-        .select(
-            "pos",
-            F.when(
-                F.col("ms_within") > 0, F.col("ms_between") / F.col("ms_within")
-            )
-            .otherwise(F.lit(float("inf")))
-            .alias("f_stat"),
-        )
+    n, mean, var = (pdf[c].to_numpy(np.float64) for c in ("n", "mean", "var_pop"))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        n_total = np.bincount(p, n)
+        grand = np.bincount(p, n * mean) / n_total
+        ms_between = np.bincount(p, n * (mean - grand[p]) ** 2) / (k - 1)
+        ms_within = np.bincount(p, n * var) / (n_total - k)
+        f = np.where(ms_within > 0, ms_between / ms_within, np.inf)
+    f[np.bincount(p, np.isnan(mean) | np.isnan(var)) > 0] = np.nan
+    return stats.sparkSession.createDataFrame(
+        pa.table({"pos": pa.array(pos), "f_stat": pa.array(f, pa.float64())})
     )

@@ -74,3 +74,34 @@ def partitioned_df(spark):
         return spark.createDataFrame(rdd.flatMap(lambda c: c), schema)
 
     return make
+
+
+@pytest.fixture(scope="session")
+def in_job_group(spark):
+    """``run(name, fn)``: ``(fn(), jobs, shuffle_bytes)``, the number of
+    Spark jobs ``fn`` ran and the shuffle bytes their stages wrote."""
+    sc = spark.sparkContext
+
+    def run(name, fn):
+        sc.setJobGroup(name, name)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jsc = sc._jsc.sc()
+        jsc.listenerBus().waitUntilEmpty()
+        tracker = sc.statusTracker()
+        jobs = tracker.getJobIdsForGroup(name)
+        stage_ids = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+        stages = jsc.statusStore().stageList(
+            sc._jvm.java.util.ArrayList(), False, False,
+            sc._gateway.new_array(sc._jvm.double, 0), sc._jvm.java.util.ArrayList(),
+        )
+        written = sum(
+            stages.apply(i).shuffleWriteBytes()
+            for i in range(stages.size())
+            if stages.apply(i).stageId() in stage_ids
+        )
+        return out, len(jobs), written
+
+    return run

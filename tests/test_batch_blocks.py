@@ -157,10 +157,24 @@ def test_epoch_callback_sees_updated_weights(spark):
     assert np.array_equal(seen[1][1], model.W)
 
 
+def _block_sizes(spark, blocks, g: int) -> list[tuple[int, int]]:
+    """(batch id, rows) of every block of partition ``g``, in order."""
+    d, has_fold = blocks.d, blocks.has_fold
+
+    def sizes(bufs):
+        yield [
+            (bid, len(y))
+            for bid, (_, y, _) in (blocks_mod._unblock(buf, d, has_fold) for buf in bufs)
+        ]
+
+    return spark.sparkContext.runJob(blocks._rdd, sizes, [g])[0]
+
+
 def test_blocks_smaller_than_a_batch(spark, monkeypatch):
     """A batch larger than the block cap spans several blocks; a step sums
-    their partials and still matches the oracle, and ``run(b)`` reads only
-    batch b's blocks of its partition."""
+    their partials and still matches the oracle, and batch b's blocks lie
+    together, in partition b // K, cut at the cap from the batch's first
+    row."""
     monkeypatch.setattr(blocks_mod, "BLOCK_BYTES", 8 * (D + 2) * 4)  # 4 rows
     _assert_oracle(_fit(spark, 40, 5), 40)
     pdf, _, _ = _data()
@@ -169,9 +183,14 @@ def test_blocks_smaller_than_a_batch(spark, monkeypatch):
     try:
         assert blocks.K == 8
         sizes = np.bincount(assign_batches_pandas(pdf, ["row_id"], NB), minlength=NB)
-        for b in range(NB):  # (blocks, rows) of batch b
-            got = blocks.run(b, lambda X, y, f: (1, len(y)))
-            assert got == (-(-sizes[b] // 4), sizes[b]), b
+        for g in range(blocks.n_groups):
+            got = _block_sizes(spark, blocks, g)
+            want = [
+                (b, min(4, int(sizes[b]) - s))
+                for b in range(g * 8, g * 8 + 8)
+                for s in range(0, int(sizes[b]), 4)
+            ]
+            assert got == want, g
     finally:
         blocks.unpersist()
 
@@ -228,14 +247,8 @@ def test_batch_lands_in_partition_of_its_group(spark, btype):
         K = blocks.K
         assert (K, blocks.n_groups) == (8, 4)
 
-        def bids(bufs):
-            yield [blocks_mod._unblock(buf, 1, False)[0] for buf in bufs]
-
         for g in range(blocks.n_groups):
-            got = spark.sparkContext.runJob(blocks._rdd, bids, [g])
-            assert got == [list(range(g * K, g * K + K))], g
-        assert [blocks.run(b, lambda X, y, f: (len(y),)) for b in range(n)] == [
-            (1,)
-        ] * n
+            got = _block_sizes(spark, blocks, g)
+            assert got == [(b, 1) for b in range(g * K, g * K + K)], g
     finally:
         blocks.unpersist()

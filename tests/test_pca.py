@@ -41,7 +41,8 @@ def test_sum_partials_reducer_contract(spark, monkeypatch):
     """The one reducer (operators/combine.py): bit-identical to a numpy
     fold of the per-task partials in pid order at small P, int64 partials
     stay int64, exact sums when the tree levels actually combine (forced
-    with tiny fanouts over 37 partitions), and None on an empty frame."""
+    with a fanout of 4 over 37 partitions: 37 -> 10 -> 3 partials), and
+    None on an empty frame."""
     from modlyn_spark.operators import combine
     from modlyn_spark.operators.combine import sum_partials
 
@@ -68,7 +69,7 @@ def test_sum_partials_reducer_contract(spark, monkeypatch):
         assert g.shape == w.shape and np.array_equal(g, w)
     assert got[2].dtype == np.int64 and got[2].sum() == 90
 
-    monkeypatch.setattr(combine, "_LEVELS", (8, 4))
+    monkeypatch.setattr(combine, "_FANOUT", 4)
     wide = spark.range(0, 370, 1, 37).select(
         F.array(F.col("id").cast("double"), F.lit(1.0)).alias("v"), "id"
     )
@@ -88,6 +89,55 @@ def test_sum_partials_reducer_contract(spark, monkeypatch):
     )
     with pytest.raises(Exception, match="partials differ in shape"):
         sum_partials(ragged, lambda X: (X.sum(axis=0),))
+
+
+def test_sum_partials_keyed(spark, monkeypatch):
+    """Dict partials add by key: a None key is a key like any other, tasks
+    may hold different key sets (also across tree levels), and a ragged
+    shape within one key still raises."""
+    from modlyn_spark.operators import combine
+    from modlyn_spark.operators.combine import sum_partials
+
+    def by_key(X, key):
+        return {k: (len(X[key == k]), X[key == k].sum(axis=0)) for k in set(key.tolist())}
+
+    # ids 0-9 in task 0 (keys None, "a"), 10-19 in task 1 ("b"), 20-29 in
+    # task 2 ("a", "b"): each task holds another key set
+    df = spark.range(0, 30, 1, 3).select(
+        F.array(F.col("id").cast("double")).alias("v"),
+        F.when(F.col("id") < 5, F.lit(None))
+        .when((F.col("id") < 10) | (F.col("id") >= 25), F.lit("a"))
+        .otherwise(F.lit("b"))
+        .alias("k"),
+    )
+    want = {None: (5, [10.0]), "a": (10, [35.0 + 135.0]), "b": (15, [145.0 + 110.0])}
+    for fanout in (64, 2):
+        monkeypatch.setattr(combine, "_FANOUT", fanout)
+        got = sum_partials(df, by_key)
+        assert {k: (n, s.tolist()) for k, (n, s) in got.items()} == want
+
+    ragged = spark.range(0, 4, 1, 2).select(
+        F.when(F.col("id") < 2, F.array(F.lit(1.0)))
+        .otherwise(F.array(F.lit(1.0), F.lit(2.0)))
+        .alias("v"),
+        F.when(F.col("id") % 2 == 0, "x").otherwise("y").alias("k"),
+    )
+    with pytest.raises(Exception, match="partials differ in shape"):
+        sum_partials(ragged, by_key)
+
+
+def test_sum_partials_is_one_job_without_shuffle(spark, in_job_group):
+    """At most _FANOUT partitions: one job, and nothing is shuffled."""
+    from modlyn_spark.operators.combine import sum_partials
+
+    df = spark.range(0, 4000, 1, 8).select(
+        F.array(F.col("id").cast("double"), F.lit(1.0)).alias("v")
+    )
+    (s,), jobs, shuffled = in_job_group(
+        "sum_partials_one_job", lambda: sum_partials(df, lambda X: (X.sum(axis=0),))
+    )
+    assert s.tolist() == [sum(range(4000)), 4000.0]
+    assert (jobs, shuffled) == (1, 0)
 
 
 def test_pca_and_kmeans_tree_combined_at_many_partitions(spark, emb):

@@ -134,6 +134,54 @@ def test_class_feature_stats_keeps_nan(spark):
     assert f[1] == pytest.approx(28 / 11, rel=1e-12)
 
 
+def test_f_statistic_counts_the_null_label_class(spark):
+    """The null label is one of the k classes: a one-way ANOVA over the
+    three classes a, b and null gives F = 21.5 (leaving null out of k
+    while its rows stay in N and the sums gave 57.33)."""
+    rows = [("a", [1.0]), ("a", [2.0]), ("b", [5.0]), ("b", [7.0]),
+            (None, [10.0]), (None, [13.0])]
+    df = spark.createDataFrame(rows, _LABELLED)
+    got = f_statistic(class_feature_stats(df, "label", "features")).collect()
+    assert [r["pos"] for r in got] == [0]
+    assert got[0]["f_stat"] == pytest.approx(21.5, rel=1e-12)
+
+
+def test_f_statistic_needs_two_classes(spark):
+    df = spark.createDataFrame([("a", [1.0]), ("a", [2.0])], _LABELLED)
+    with pytest.raises(ValueError, match="at least two classes"):
+        f_statistic(class_feature_stats(df, "label", "features"))
+
+
+def test_f_statistic_is_inf_without_within_class_spread(spark):
+    """Constant classes with distinct means: the within-class mean square
+    is 0, so F is inf, as in the oracle; a feature constant overall too
+    (0 / 0) is inf as well."""
+    rows = [("a", [1.0, 3.0]), ("a", [1.0, 3.0]), ("b", [2.0, 3.0]), ("b", [2.0, 3.0])]
+    df = spark.createDataFrame(rows, _LABELLED)
+    f = {r["pos"]: r["f_stat"] for r in f_statistic(class_feature_stats(df, "label")).collect()}
+    assert f == {0: float("inf"), 1: float("inf")}
+    exp = oracle_f_statistic(np.array([r[1] for r in rows]), pd.Series([r[0] for r in rows]))
+    assert exp["f_stat"].tolist() == [float("inf")] * 2
+
+
+def test_f_statistic_shuffles_nothing(spark, matrix_pdf, in_job_group):
+    """The F path is one reducer scan plus two reads of local frames: no
+    stage writes shuffle bytes."""
+    pdf, X, labels = matrix_pdf
+    df = _spark_df(spark, pdf).repartition(3).cache()
+    df.count()
+    try:
+        got, _, shuffled = in_job_group(
+            "f_statistic_shuffles_nothing",
+            lambda: f_statistic(class_feature_stats(df, "label", "features")).toPandas(),
+        )
+    finally:
+        df.unpersist()
+    assert shuffled == 0
+    got = got.sort_values("pos")["f_stat"].to_numpy()
+    assert np.allclose(got, oracle_f_statistic(X, labels)["f_stat"], rtol=1e-12)
+
+
 def test_label_encode_sklearn_parity(spark, matrix_pdf):
     pdf, _, labels = matrix_pdf
     df = _spark_df(spark, pdf)
